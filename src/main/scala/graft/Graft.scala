@@ -73,7 +73,7 @@ object Graft {
   /** Read one of the driver-generated testdata tables (TESTDATA.md). */
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     // Runtime-settable so it also covers sessions we did not build (Verify,
-    // Bench, tests): parquet TIMESTAMP(NANOS) → LongType nanos instead of
+    // tests): parquet TIMESTAMP(NANOS) → LongType nanos instead of
     // an ILLEGAL_PARQUET_TYPE error.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val path = s"$sfDir/$name.parquet"

@@ -200,8 +200,8 @@ object Dedup {
     * caller drops the DataFrame, and its scheduler-owned task-metrics
     * accumulators are weakly registered — a GC in that window produces the
     * benign-but-noisy `attempted to access non-existent accumulator`
-    * DAGScheduler error (deterministically reproduced by Bench's
-    * gc-per-query estimator; see Bench.quiesce). Signatures are always
+    * DAGScheduler error (reproduced deterministically by forcing a GC
+    * after every query). Signatures are always
     * consumed here, so the eager checkpoint does the same work inside the
     * main action and leaves no orphaned job. For explicit lifecycle
     * control use [[lshNearDupPairsScoped]] / [[lshNearDupPairsWithRelease]].

@@ -23,7 +23,7 @@ import org.apache.spark.sql.functions._
   * Scale shape at 100 TB: the edge relation (with its static per-src degree)
   * is materialized ONCE when K > 1 (eager localCheckpoint — always consumed,
   * and lazy checkpoints re-run their backfill job per consuming action, see
-  * Bench.quiesce); superstep 1 is join-free (r₀ is constant, so the
+  * Dedup.lshNearDupPairs); superstep 1 is join-free (r₀ is constant, so the
   * contribution is InitRank div deg computed straight off the edge pass),
   * and each of the remaining K−1 iterations shuffles the rank table
   * (O(nodes), much smaller than edges) into the join and the contribution

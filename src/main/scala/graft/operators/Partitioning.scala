@@ -233,8 +233,8 @@ object Partitioning {
     * count. 64 KB (compressed parquet text) per task is the measured
     * amortization point on the bench corpus: at sf0.1 it yields ~9
     * partitions, which times within noise of the empirical optimum
-    * (8-way: 1.16 s vs 32-way: 1.38 s vs none: 1.46 s, TimeQuery
-    * medians), and any corpus big enough to saturate the budget×cores
+    * (8-way: 1.16 s vs 32-way: 1.38 s vs none: 1.46 s, medians of
+    * single-query runs), and any corpus big enough to saturate the budget×cores
     * product fans out exactly as before.
     *
     * Input-plan guard (r19 verdict task 7): the partition-count probe
@@ -267,7 +267,7 @@ object Partitioning {
     def walk(p: LogicalPlan): Unit = p match {
       case _: LeafNode => ()
       // Union is narrow too (it concatenates partitions, no exchange) —
-      // the ScaleProbe's factor×-replicated corpus is a Union of
+      // ScaleProbeSpec's factor×-replicated corpus is a Union of
       // per-replica projections and flows through the dedup call site
       case n @ (_: Project | _: Filter | _: Generate | _: SubqueryAlias | _: Union) =>
         n.children.foreach(walk)

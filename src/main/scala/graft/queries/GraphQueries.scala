@@ -87,7 +87,7 @@ object GraphQueries extends Catalog {
              |ORDER BY pr DESC NULLS FIRST, node NULLS FIRST
              |LIMIT 100""".stripMargin)),
 
-    // Single-superstep pagerank: the BENCH anchor for the Pregel join+agg
+    // Single-superstep pagerank: the headline anchor for the Pregel join+agg
     // shape (r9 verdict task 4). The 3-superstep q_graph_pagerank stays the
     // oracle-depth anchor, but at bench scale its ~12 small stages per run
     // made it the noisiest headline entry (runs spanned 2.5-5.4s on
@@ -305,7 +305,8 @@ object GraphQueries extends Catalog {
     // join + ONE min-aggregate (the Pregel shape, like [[PageRank]]).
     // Unreached nodes simply never appear — no sentinel distances. The
     // edge list is materialized once (eager localCheckpoint: consumed by
-    // every superstep; lazy double-executes the backfill — Bench.quiesce).
+    // every superstep; lazy double-executes the backfill — see
+    // Dedup.lshNearDupPairs).
     // At 100 TB the per-round state is O(reached nodes), the joins hash
     // on node id, and rounds are log-bounded by the target radius — the
     // same sublinear-iteration contract the CC probe measures. Distances

@@ -37,8 +37,8 @@ object Joins extends Catalog {
       // the orders(+customer) side as build. Unhinted, the optimizer
       // broadcast the 150k-row joined orders side at bench scale (it
       // squeaks under the 10 MB estimate) — a serial driver-side collect
-      // + HashedRelation build measured at ~0.5 s/run (PhaseProbe, exec
-      // 1.4 s → 0.9 s with the broadcast suppressed) — while at 100 TB
+      // + HashedRelation build measured at ~0.5 s/run (exec 1.4 s →
+      // 0.9 s with the broadcast suppressed) — while at 100 TB
       // that side never fits a broadcast and the plan degrades to the
       // shuffle anyway. The hint makes bench plan == scale plan: both
       // sides exchange on the orderkey, the smaller joined-orders side
@@ -421,8 +421,8 @@ object Joins extends Catalog {
       t => {
         // o_orderdate / l_shipdate are parquet timestamp[ms] WITHOUT a
         // timezone, which Spark 4 reads as TIMESTAMP_NTZ — a type
-        // unix_micros rejects. The session is pinned to UTC (Graft/Bench/
-        // Verify all set spark.sql.session.timeZone=UTC), so the NTZ→LTZ
+        // unix_micros rejects. The session is pinned to UTC (Graft and
+        // Verify both set spark.sql.session.timeZone=UTC), so the NTZ→LTZ
         // cast is the identity on the underlying instant and unix_micros
         // then matches DuckDB's epoch_us(o_orderdate) exactly.
         val dayUs = 86400000000L
@@ -662,8 +662,8 @@ object Joins extends Catalog {
     // saltedJoin's small-right replication contract); saltedJoin spreads
     // key 0 across 16 (key, salt) reducers; and salting must not change the
     // RESULT — the oracle replays the same join unsalted in plain SQL.
-    // ScaleProbe ships the salted-vs-unsalted timing pair on this key shape
-    // (r8 verdict task 6).
+    // ScaleProbeSpec pins the busiest reducer's salted-vs-unsalted row
+    // counts on this key shape.
     "q_join_salted_skew" -> Q(
       t => {
         val left = t.lineitem.select(

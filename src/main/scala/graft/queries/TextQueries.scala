@@ -1042,7 +1042,7 @@ object TextQueries extends Catalog {
       // q_dedup_simhash_bands — where the kernel feeds a banded self-join
       // that amortizes the fan-out — this query is signature + sort only,
       // and the fan-out's full-text shuffle LOST to the single-task kernel
-      // (TimeQuery 0.377 → 0.638 s at sf0.1). Same verdict as the layout
+      // (0.377 → 0.638 s at sf0.1). Same verdict as the layout
       // curves: fan out only in front of kernels with heavy consumers.
       t => t.documents
         .select(col("doc_id"), Dedup.simhash(col("text")).as("simhash"))
@@ -1122,7 +1122,7 @@ object TextQueries extends Catalog {
         // defaultParallelism target drove the driver-measured regression
         // (1.36→1.63 s, 8 cores beating 32 by 2×) — the helper's r19
         // byte budget caps the fan-out at ~9 partitions for this corpus
-        // (TimeQuery: 8-way 1.16 s vs 32-way 1.38 s vs none 1.46 s).
+        // (8-way 1.16 s vs 32-way 1.38 s vs none 1.46 s).
         val sims = graft.operators.Partitioning.fanOutNarrowScan(
             t.documents.select(col("doc_id"), col("text")))
           .select(col("doc_id"), Dedup.simhash(col("text")).as("sim"))

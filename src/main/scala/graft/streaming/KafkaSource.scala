@@ -47,28 +47,6 @@ object KafkaSource {
       framed.select(col("value")), "value",
       malformed.orElse(Some(ProtobufWire.malformedCounter(spark))))
   }
-
-  /** Spark-native Kafka sink plan for key+value+headers (everything except
-    * the record timestamp, which needs the foreachBatch path in
-    * [[KafkaSink]] — SURVEY.md §7.4 hard-part 1).
-    */
-  def writeAlerts(
-      alerts: DataFrame,
-      bootstrapServers: String,
-      topic: String,
-      checkpointDir: String): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    alerts
-      .select(
-        col("kafka_key").cast("binary").as("key"),
-        to_json(struct(alerts.columns.filterNot(
-          Set("kafka_key", "event_time", "headers")).map(col): _*)).cast("binary").as("value"),
-        expr("transform(map_entries(headers), e -> struct(e.key as key, cast(e.value as binary) as value))")
-          .as("headers"))
-      .writeStream
-      .format("kafka")
-      .option("kafka.bootstrap.servers", bootstrapServers)
-      .option("topic", topic)
-      .option("checkpointLocation", checkpointDir)
 }
 
 /** Interval throughput/latency stats (reference A12: PrintStats ticker,

@@ -759,7 +759,7 @@ object StatefulOps {
     *     is due yet, which is a full-buffer pass per trigger for every
     *     key with a long-horizon backlog.
     *
-    * AbBench measures both regimes end-to-end:
+    * AbBench measured both regimes end-to-end:
     * `cep-buffered-exact-600k` (~1.5-trigger horizon, buffers ~11
     * events) and `cep-buffered-longhorizon-600k` (8-trigger backlog,
     * buffers growing to 300 events before anything settles).

@@ -4,8 +4,11 @@ import org.apache.spark.sql.functions._
 
 /** The scale probe's replication must preserve the workload SHAPE: factor×
   * rows, factor× join fan-out, factor× LSH pairs. If replicas collided on
-  * keys (join) or shingles (LSH), the probe would measure a quadratic
-  * workload and its "ratio" would be meaningless.
+  * keys (join) or shingles (LSH), a probe at factor× would measure a
+  * quadratic workload. On top of that replication, the exchange probe's
+  * record counts (deterministic at any scale factor, unlike wall clock)
+  * pin the exchange-volume claims: bloom prefilter, partition-preserving
+  * checkpoints, partial-agg combine, salting and LSH banding.
   */
 class ScaleProbeSpec extends SparkSpec {
   import spark.implicits._
@@ -111,6 +114,21 @@ class ScaleProbeSpec extends SparkSpec {
     assert(v.prMaxInDegN == 2 * v.prMaxInDeg1,
       s"expected exactly 2x hub in-degree at factor 2 (shared partkeys), " +
         s"got ${v.prMaxInDeg1} -> ${v.prMaxInDegN}")
+    // salting leg: the 50%-hot key must land on fewer rows of the busiest
+    // reducer salted than unsalted (measured 7449 vs 4189 rows, 1.78x, at
+    // 4 shuffle partitions) — the record-exact basis of the README's
+    // salted-join claim
+    assert(v.skewMaxSalted > 0 && v.skewBalance > 1.0,
+      s"salting did not relieve the hot reducer: unsalted=${v.skewMaxUnsalted} " +
+        s"salted=${v.skewMaxSalted}")
+    // LSH banding leg: the band join must generate a tiny fraction of all
+    // n(n-1)/2 pairs (measured 743 of 499500, a 672x cut); the floor sits
+    // well below that so only a real loss of blocking (e.g. a band key
+    // that stopped discriminating) trips it
+    assert(v.lshBandedPairs > 0, "band join generated no candidates — probe is broken")
+    assert(v.lshCut > 300.0,
+      s"expected >300x Σ|bucket|² cut over all pairs, got ${v.lshCut} " +
+        s"(banded=${v.lshBandedPairs}, all=${v.lshAllPairs})")
     // result parity at the same factor, same confs as the probe
     val fact = ScaleProbe.replicate(spark, dir, "lineitem", 2)
     val dim = Graft.table(spark, dir, "supplier")
@@ -124,16 +142,13 @@ class ScaleProbeSpec extends SparkSpec {
   }
 
   test("forced-spill interval leg: spillSize is nonzero, bit-stable, and the join is exact") {
-    // r13 verdict task 5: the probe leg's spillSize must be a pure
-    // function of the data (drift across identical runs = a real change
-    // in the spill store's I/O pattern) and forcing the spill regime must
-    // not change a single output row
-    val confs = Map(
-      graft.plans.IntervalJoinExec.InMemoryRowsKey -> "16",
-      graft.plans.IntervalJoinExec.CompactMinBytesKey -> "4096")
-    val saved = confs.keys.map(k => k -> spark.conf.getOption(k)).toMap
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
+    // the sawtooth leg's spillSize must be a pure function of the data
+    // (drift across identical runs = a real change in the spill store's
+    // I/O pattern) and forcing the spill regime must not change a single
+    // output row
+    withConf(
+        graft.plans.IntervalJoinExec.InMemoryRowsKey -> "16",
+        graft.plans.IntervalJoinExec.CompactMinBytesKey -> "4096") {
       val (l, r) = ScaleProbe.sawtoothIntervals(spark, keys = 2, perKey = 200)
       def native = graft.plans.NativeIntervalJoin
         .overlap(l, r, "k", "lo", "hi", "k2", "lo2", "hi2")
@@ -144,8 +159,6 @@ class ScaleProbeSpec extends SparkSpec {
       val composed = l.join(r,
         l("k") === r("k2") && l("lo") <= r("hi2") && r("lo2") <= l("hi"))
       assert(native.count() == composed.count() && composed.count() > 0)
-    } finally saved.foreach { case (k, v) =>
-      v.fold(spark.conf.unset(k))(spark.conf.set(k, _))
     }
   }
 

@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared test base: one session per suite, UTC, small shuffle width. */
@@ -19,36 +21,49 @@ trait SparkSpec extends AnyFunSuite {
   def sf(dir: String = "sf0.001"): String = s"/root/testdata/$dir"
 
   /** Run `body` with the RocksDB state-store provider, restoring the
-    * previous provider conf afterwards. Hoisted here from nine per-suite
-    * copies (r15 review): a provider-key or restore-semantics change now
-    * has exactly one home.
+    * previous provider conf afterwards.
     */
-  protected def withRocksDBProvider[T](body: => T): T = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try body
-    finally prev match {
-      case Some(p) => spark.conf.set(key, p)
-      case None    => spark.conf.unset(key)
-    }
-  }
+  protected def withRocksDBProvider[T](body: => T): T =
+    withConf("spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")(body)
 
-  /** Run `body` with one session conf set, restoring the previous value
-    * afterwards (the generic form of [[withRocksDBProvider]]).
+  /** Run `body` with session confs set, restoring each previous value
+    * afterwards.
     */
-  protected def withConf[T](key: String, value: String)(body: => T): T = {
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, value)
-    try body
-    finally prev match {
-      case Some(p) => spark.conf.set(key, p)
-      case None    => spark.conf.unset(key)
-    }
-  }
+  protected def withConf[T](kvs: (String, String)*)(body: => T): T =
+    SparkSpec.withConf(spark, kvs: _*)(body)
 
   /** A fresh temp directory (checkpoint/source/sink scaffolding). */
   protected def newDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
+}
+
+object SparkSpec {
+
+  /** Run `body` with session confs set on `spark`, restoring each previous
+    * value (or unsetting a key that had none) afterwards.
+    */
+  def withConf[T](spark: SparkSession, kvs: (String, String)*)(body: => T): T = {
+    val saved = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally saved.reverse.foreach { case (k, v) =>
+      v.fold(spark.conf.unset(k))(spark.conf.set(k, _))
+    }
+  }
+
+  /** Every node of an executed plan, descending through AQE wrappers and
+    * materialized query stages (whose subtrees hang off `plan`, not
+    * `children`). Run the action on the DataFrame's own QueryExecution
+    * first: AQE finalizes stages only at runtime, and a fresh plan's exec
+    * nodes own fresh, zero metrics.
+    */
+  def planNodes(p: SparkPlan): Seq[SparkPlan] = {
+    val below = p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case q: QueryStageExec => Seq(q.plan)
+      case other => other.children
+    }
+    p +: below.flatMap(planNodes)
+  }
 }

@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
   * matching build-side partition — no user rewrite. This spec is the fence
   * proving our default session shape (AQE on, skew-join on) actually fires
   * the rule on a representative hot key (one key ≈ 50% of rows, the same
-  * shape as the bench's salted-vs-unsalted probe): a conf regression or a
+  * shape as ScaleProbeSpec's salted-vs-unsalted counter): a conf regression or a
   * plan shape that defeats the optimization (e.g. an extra exchange
   * between scan and join) would silently reintroduce the straggler task
   * this rule exists to kill. Thresholds are lowered to make the 60k-row

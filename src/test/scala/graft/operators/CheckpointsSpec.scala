@@ -1,9 +1,8 @@
 package graft.operators
 
 import graft.SparkSpec
+import graft.SparkSpec.planNodes
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.functions._
 
@@ -21,25 +20,8 @@ class CheckpointsSpec extends SparkSpec {
 
   private def shuffleCount(df: DataFrame): Int = {
     df.collect()
-    def flatten(p: SparkPlan): Seq[SparkPlan] = {
-      val below = p match {
-        case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
-        case q: QueryStageExec => Seq(q.plan)
-        case other => other.children
-      }
-      p +: below.flatMap(flatten)
-    }
-    flatten(df.queryExecution.executedPlan)
+    planNodes(df.queryExecution.executedPlan)
       .count { case _: ShuffleExchangeLike => true; case _ => false }
-  }
-
-  private def withConf(kvs: (String, String)*)(body: => Unit): Unit = {
-    val saved = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally saved.foreach { case (k, v) =>
-      v.fold(spark.conf.unset(k))(spark.conf.set(k, _))
-    }
   }
 
   private val forcedSmj = Seq(

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{SparkSpec, Tables}
+import graft.SparkSpec.planNodes
 import graft.queries.AllQueries
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.{RDDScanExec, SparkPlan}
@@ -28,19 +29,6 @@ import org.apache.spark.sql.functions._
   */
 class GraphPlanFenceSpec extends SparkSpec {
 
-  /** All nodes of the executed tree, descending through AQE wrappers and
-    * materialized query stages (whose subtrees hang off `plan`, not
-    * `children`).
-    */
-  private def flatten(p: SparkPlan): Seq[SparkPlan] = {
-    val below = p match {
-      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
-      case q: QueryStageExec => Seq(q.plan)
-      case other => other.children
-    }
-    p +: below.flatMap(flatten)
-  }
-
   /** The unary chain from a join input downward: wrappers (sort, codegen,
     * AQE reads, exchanges, stage boundaries) until the first leaf or
     * multi-child node. A side whose chain terminates at the checkpoint's
@@ -60,7 +48,7 @@ class GraphPlanFenceSpec extends SparkSpec {
 
   private def assertEdgeSidesUnshuffled(df: DataFrame, expectedJoins: Int): Unit = {
     df.collect() // AQE finalizes stages only at runtime
-    val smjs = flatten(df.queryExecution.executedPlan)
+    val smjs = planNodes(df.queryExecution.executedPlan)
       .collect { case j: SortMergeJoinExec => j }
     // >= not ==: the bfs/sssp unrolled rounds reference the prior frontier
     // twice (union + join), so the physical tree instantiates some round
@@ -87,16 +75,6 @@ class GraphPlanFenceSpec extends SparkSpec {
         s"checkpointed edge side re-shuffles before the superstep join " +
           s"(the repartition-before-checkpoint contract is broken):\n" +
           c.map(_.nodeName).mkString(" <- "))
-    }
-  }
-
-  /** Session confs forced for the duration of `body`, then restored. */
-  private def withConf(kvs: (String, String)*)(body: => Unit): Unit = {
-    val saved = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally saved.foreach { case (k, old) =>
-      old.fold(spark.conf.unset(k))(spark.conf.set(k, _))
     }
   }
 
@@ -145,7 +123,7 @@ class GraphPlanFenceSpec extends SparkSpec {
 
   private def countExchanges(df: DataFrame): Int = {
     df.collect()
-    flatten(df.queryExecution.executedPlan)
+    planNodes(df.queryExecution.executedPlan)
       .count(_.isInstanceOf[ShuffleExchangeLike])
   }
 

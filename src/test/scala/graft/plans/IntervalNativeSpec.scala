@@ -1,6 +1,7 @@
 package graft.plans
 
 import graft.SparkSpec
+import graft.SparkSpec.planNodes
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -16,6 +17,14 @@ class IntervalNativeSpec extends SparkSpec {
   private def composed(l: DataFrame, r: DataFrame): DataFrame =
     l.join(r, col("k") === col("k2") &&
       col("lo") <= col("hi2") && col("lo2") <= col("hi"))
+
+  /** The IntervalJoinExec in `df`'s own executed plan (run the action on
+    * that QueryExecution first, or its metrics read zero).
+    */
+  private def intervalExec(df: DataFrame): IntervalJoinExec =
+    planNodes(df.queryExecution.executedPlan)
+      .collectFirst { case e: IntervalJoinExec => e }
+      .getOrElse(fail(s"no IntervalJoinExec in\n${df.queryExecution.executedPlan}"))
 
   private def assertSame(native: DataFrame, expected: DataFrame): Unit = {
     val n = native.selectExpr(expected.columns: _*)
@@ -167,20 +176,7 @@ class IntervalNativeSpec extends SparkSpec {
     // drive THIS queryExecution (count() would plan and execute its own
     // copy of the exec, leaving these metric instances untouched)
     assert(df.collect().length === 7)
-    val finalPlan = df.queryExecution.executedPlan match {
-      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-        a.executedPlan
-      case p => p
-    }
-    // query stages are leaf nodes to collect(); descend through their plans
-    def find(p: org.apache.spark.sql.execution.SparkPlan): Option[IntervalJoinExec] =
-      p match {
-        case e: IntervalJoinExec => Some(e)
-        case q: org.apache.spark.sql.execution.adaptive.QueryStageExec => find(q.plan)
-        case other => other.children.view.flatMap(find(_)).headOption
-      }
-    val exec = find(finalPlan)
-      .getOrElse(fail(s"no IntervalJoinExec in\n$finalPlan"))
+    val exec = intervalExec(df)
     assert(exec.metrics.contains("maxDepth"), "metric not declared on the exec")
     assert(exec.metrics("maxDepth").value === 7L,
       s"expected depth 7, got ${exec.metrics("maxDepth").value}")
@@ -234,19 +230,7 @@ class IntervalNativeSpec extends SparkSpec {
       // drive df's OWN QueryExecution — assertSame/exceptAll plan fresh
       // copies whose exec instances own fresh metrics, leaving these zero
       df.queryExecution.toRdd.count()
-      val finalPlan = df.queryExecution.executedPlan match {
-        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-          a.executedPlan
-        case p => p
-      }
-      def find(p: org.apache.spark.sql.execution.SparkPlan): Option[IntervalJoinExec] =
-        p match {
-          case e: IntervalJoinExec => Some(e)
-          case q: org.apache.spark.sql.execution.adaptive.QueryStageExec => find(q.plan)
-          case other => other.children.view.flatMap(find(_)).headOption
-        }
-      val exec = find(finalPlan)
-        .getOrElse(fail(s"no IntervalJoinExec in\n$finalPlan"))
+      val exec = intervalExec(df)
       assert(exec.metrics.contains("spillSize"), "spillSize metric not declared")
       assert(exec.metrics("spillSize").value > 0L,
         s"active set never spilled (spillSize=${exec.metrics("spillSize").value}) " +

@@ -1,8 +1,7 @@
 package graft.queries
 
 import graft.{SparkSpec, Tables}
-import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import graft.SparkSpec.planNodes
 import org.apache.spark.sql.execution.window.WindowGroupLimitExec
 
 /** Plan fence for the rank-filter → window-group-limit pushdown that the
@@ -26,15 +25,6 @@ import org.apache.spark.sql.execution.window.WindowGroupLimitExec
   */
 class WindowGroupLimitFenceSpec extends SparkSpec {
 
-  private def flatten(p: SparkPlan): Seq[SparkPlan] = {
-    val below = p match {
-      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
-      case q: QueryStageExec => Seq(q.plan)
-      case other => other.children
-    }
-    p +: below.flatMap(flatten)
-  }
-
   /** name -> minimum WindowGroupLimitExec count (2 per limited window:
     * Partial map-side + Final post-shuffle; recall_audit ranks twice).
     */
@@ -57,7 +47,7 @@ class WindowGroupLimitFenceSpec extends SparkSpec {
     test(s"$name keeps the window-group-limit pushdown (>= $minCount nodes)") {
       val df = AllQueries.all(name).run(Tables(spark, sf()))
       df.collect() // AQE finalizes stages only at runtime
-      val got = flatten(df.queryExecution.executedPlan)
+      val got = planNodes(df.queryExecution.executedPlan)
         .count(_.isInstanceOf[WindowGroupLimitExec])
       assert(got >= minCount,
         s"$name lost the rank-filter pushdown: expected >= $minCount " +

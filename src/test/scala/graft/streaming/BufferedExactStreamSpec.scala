@@ -583,7 +583,7 @@ class BufferedExactStreamSpec extends SparkSpec {
     // changelog-only deltas (the fold + late buffer writes), and the dump
     // must read the post-replay state exactly.
     val ckpt = newDir("graft-bxcl-ckpt")
-    withConf("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
+    withConf("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" ->
       "true") {
       withRocksDBProvider {
         val in = MemoryStream[TimedUserEvent](spark)

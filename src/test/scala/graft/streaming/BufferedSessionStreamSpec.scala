@@ -160,7 +160,7 @@ class BufferedSessionStreamSpec extends SparkSpec {
     // fragments, buffer, and timers the full-snapshot path does. Same
     // scenario as the WAL-recovery test above, changelog mode on for both
     // the original run and the restart.
-    withConf(ChangelogKey, "true") {
+    withConf(ChangelogKey -> "true") {
       restartScenario("graft-bscl")
     }
   }
@@ -219,19 +219,15 @@ class BufferedSessionStreamSpec extends SparkSpec {
       .json(in)
       .selectExpr("timestamp_millis(tsMs) as ts", "userId", "eventId", "cents")
       .as[TimedEvent]
-    // per-phase conf: set before the phase's query starts, restored after
-    // it stops (a streaming query reads these at start)
-    def withPhaseConfs[T](confs: Map[String, String])(body: => T): T =
-      confs.foldLeft(() => body) { case (inner, (k, v)) =>
-        () => withConf(k, v)(inner())
-      }()
     def startQuery() = withRocksDBProvider {
       StatefulOps.timedSessionsExact(src, gapMs = 5000L, watermark = "10 seconds")
         .writeStream.outputMode(OutputMode.Append).format("parquet")
         .option("path", out).option("checkpointLocation", ckpt)
         .start()
     }
-    withPhaseConfs(confRun1) {
+    // per-phase conf: set before the phase's query starts, restored after
+    // it stops (a streaming query reads these at start)
+    withConf(confRun1.toSeq: _*) {
       val q1 = startQuery()
       put(js(1L, 10000, 0), js(1L, 12000, 1), js(2L, 24000, 10), js(9L, 24000, 90))
       q1.processAllAvailable()
@@ -239,7 +235,7 @@ class BufferedSessionStreamSpec extends SparkSpec {
       q1.processAllAvailable()
       q1.stop()
     }
-    withPhaseConfs(confRun2) {
+    withConf(confRun2.toSeq: _*) {
       val q2 = startQuery()
       put(js(1L, 16500, 2), js(2L, 25000, 11), js(9L, 40000, 92))
       q2.processAllAvailable()

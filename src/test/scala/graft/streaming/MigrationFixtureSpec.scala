@@ -39,7 +39,7 @@ class MigrationFixtureSpec extends SparkSpec {
     * the fresh-session condition).
     */
   private def offline[T](body: => T): T =
-    withConf("spark.sql.streaming.stateStore.coordinatorReportSnapshotUploadLag",
+    withConf("spark.sql.streaming.stateStore.coordinatorReportSnapshotUploadLag" ->
       "false")(withRocksDBProvider(body))
 
   /** The fixture is read from a COPY so a reader bug that writes into the

@@ -4,8 +4,8 @@ import graft.SparkSpec
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.OutputMode
 
-/** Streaming at-scale evidence (r7 verdict task 9): the batch side has the
-  * ScaleProbe pinning growth curves; this is the streaming analogue. A
+/** Streaming at-scale evidence (r7 verdict task 9): the batch side has
+  * ScaleProbeSpec pinning growth shapes; this is the streaming analogue. A
   * session-window aggregation over an UNBOUNDED key space only survives
   * 100 TB/day if watermark eviction keeps the state store at
   * O(live sessions), not O(all keys ever seen). The spec drives ten

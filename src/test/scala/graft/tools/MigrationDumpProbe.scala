@@ -11,8 +11,8 @@ import graft.streaming.{OldBufferLayoutProcessor, StateMigration, StatefulOps}
   * "a per-key shuffle of O(buffered events), same scan shape as the rest
   * of the dump" — was stated, not measured. This measures it: dump wall
   * plus the dump plan's own exchange volume (records and bytes written,
-  * read off the plan's `ShuffleExchangeLike` metrics — the
-  * [[graft.ExchangeProbe]] pattern) over checkpoints at a base
+  * read off the plan's `ShuffleExchangeLike` metrics, as
+  * `ExchangeProbe.shuffleRecords` does) over checkpoints at a base
   * regime and at 10× keys / 10×(keys×events-per-key), for BOTH buffer
   * layouts.
   *
@@ -20,7 +20,7 @@ import graft.streaming.{OldBufferLayoutProcessor, StateMigration, StatefulOps}
   * sbt "Test/runMain graft.tools.MigrationDumpProbe"
   * }}}
   *
-  * Lives in TEST sources, not AbBench, because the old-layout checkpoint
+  * Lives in test sources because the old-layout checkpoint
   * writer ([[OldBufferLayoutProcessor]]) is deliberately test-only
   * scaffolding — shipping a pre-r14 layout WRITER in the library would
   * reintroduce the layout the migration exists to escape. RocksDB
@@ -105,7 +105,7 @@ object MigrationDumpProbe {
         case _ => StateMigration.readCurrentBufferedExact[(Long, Long, Long)](spark, ckpt)
       }).toDF()
       df.queryExecution.toRdd.count()
-      val nodes = graft.ExchangeProbe.flattenPlan(df.queryExecution.executedPlan)
+      val nodes = graft.SparkSpec.planNodes(df.queryExecution.executedPlan)
       val recs = nodes.map {
         case s: org.apache.spark.sql.execution.exchange.ShuffleExchangeLike =>
           s.metrics.get("shuffleRecordsWritten").map(_.value).getOrElse(0L)
