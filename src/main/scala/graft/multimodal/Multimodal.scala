@@ -319,7 +319,7 @@ object Multimodal {
     *
     * Implemented with Dataset.mapPartitions + Encoders.row (NOT `.rdd`,
     * which forces batch execution — illegal on streaming plans — and
-    * severs Catalyst lineage), mirroring ProtobufWire.decodeWith: the same
+    * severs Catalyst lineage): the same
     * operator serves parquet batch frames and `readStream` pipelines
     * (MultimodalStreamingSpec runs it over a MemoryStream).
     */

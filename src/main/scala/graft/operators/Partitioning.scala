@@ -164,11 +164,17 @@ object Partitioning {
     * constant, never data-sized) get their exclusive prefix sum via a
     * single-partition window and broadcast back; the global rank is
     * prefix + local row number.
+    *
+    * Both passes read `__pid` from ONE eager local checkpoint: computed in
+    * two independent subtrees, the pid assignment would agree only while
+    * exchange reuse (or identical range-bound sampling) made both
+    * executions place every row alike.
     */
   def globalRowNumber(df: DataFrame, orderCols: Seq[Column],
       rankCol: String = "i", numPartitions: Int = 32): DataFrame = {
     val withPid = df.repartitionByRange(numPartitions, orderCols: _*)
       .withColumn("__pid", spark_partition_id())
+      .localCheckpoint(true)
     val wLocal = Window.partitionBy(col("__pid")).orderBy(orderCols: _*)
     val local = withPid.withColumn("__lrn", row_number().over(wLocal))
     val wParts = Window.orderBy(col("__pid"))

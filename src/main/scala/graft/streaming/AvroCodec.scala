@@ -1,22 +1,21 @@
 package graft.streaming
 
-import org.apache.avro.{Schema, SchemaBuilder}
-import org.apache.avro.generic.{GenericData, GenericDatumWriter, GenericRecord}
-import org.apache.avro.io.EncoderFactory
-import org.apache.spark.sql.Row
+import org.apache.avro.Schema
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.Platform
 
-import java.io.ByteArrayOutputStream
-
-/** Row ⇄ Avro binary for the sink path. The image ships Avro core but not
-  * the spark-avro bridge module, so the engine derives the Avro schema from
+/** Avro for the sink path. The image ships Avro core but not the
+  * spark-avro bridge module, so the engine derives the Avro schema from
   * the Spark StructType directly — the same "schema follows the struct"
   * contract as the reference's generic Avro serializer
-  * (internal/schema/schema.go:36-43).
-  *
-  * Executor-side: `encodeAll` runs inside mapPartitions, building the writer
-  * once per partition from the schema's JSON form (Schema itself is not
-  * serialization-friendly across closures).
+  * (internal/schema/schema.go:36-43) — and writes the Avro binary form of
+  * that schema natively from the InternalRow ([[AvroWire]],
+  * [[ConfluentAvroValue]]).
   */
 object AvroCodec {
 
@@ -46,43 +45,159 @@ object AvroCodec {
     Schema.createRecord(name, null, namespace, false, fields)
   }
 
-  def toRecord(row: Row, st: StructType, schema: Schema): GenericRecord = {
-    val rec = new GenericData.Record(schema)
-    st.fields.zipWithIndex.foreach { case (f, i) =>
-      val v =
-        if (row.isNullAt(i)) null
-        else f.dataType match {
-          case nested: StructType =>
-            val fieldSchema = schema.getField(f.name).schema()
-            val recSchema =
-              if (fieldSchema.getType == Schema.Type.UNION)
-                fieldSchema.getTypes.get(1)
-              else fieldSchema
-            toRecord(row.getStruct(i), nested, recSchema)
-          case BinaryType => java.nio.ByteBuffer.wrap(row.getAs[Array[Byte]](i))
-          case _ => row.get(i)
-        }
-      rec.put(f.name, v)
-    }
-    rec
-  }
-
-  def encode(record: GenericRecord, schema: Schema): Array[Byte] = {
-    val out = new ByteArrayOutputStream()
-    val encoder = EncoderFactory.get().binaryEncoder(out, null)
-    new GenericDatumWriter[GenericRecord](schema).write(record, encoder)
-    encoder.flush()
-    out.toByteArray
-  }
-
-  /** Serializable Row → Avro bytes closure: ships the schema as JSON and
-    * re-parses it lazily once per executor (Schema is not Serializable).
+  /** The Confluent-framed Avro value of a struct column under
+    * [[avroSchema]] of its type: magic byte, 4-byte big-endian schema id,
+    * then the Avro binary body.
     */
-  def rowEncoder(st: StructType, name: String): Row => Array[Byte] = {
-    val schemaJson = avroSchema(st, name).toString
-    new (Row => Array[Byte]) with Serializable {
-      @transient private lazy val schema = new Schema.Parser().parse(schemaJson)
-      def apply(row: Row): Array[Byte] = encode(toRecord(row, st, schema), schema)
-    }
+  def confluentValue(struct: Column, schemaId: Int): Column = {
+    import org.apache.spark.sql.graftbridge.ColumnBridge
+    ColumnBridge.column(ConfluentAvroValue(ColumnBridge.expression(struct), schemaId))
   }
+}
+
+/** Static kernel: Avro binary encoding (public Avro spec) of an InternalRow
+  * under `AvroCodec.avroSchema` of its StructType — union branch index
+  * 0 (null) / 1 (value) for nullable fields, zigzag varint int/long,
+  * little-endian IEEE double, one-byte boolean, length-prefixed bytes and
+  * UTF-8 copied straight out of the UTF8String, nested records inline.
+  * Sized first, so each value is written once into an exact-size array.
+  */
+object AvroWire {
+  private[streaming] final val Utf8 = 0
+  private[streaming] final val I64 = 1
+  private[streaming] final val I32 = 2
+  private[streaming] final val F64 = 3
+  private[streaming] final val Bool = 4
+  private[streaming] final val Bytes = 5
+  private[streaming] final val Rec = 6
+
+  /** 5-byte Confluent header for `schemaId`, then the Avro body of `row`. */
+  def framed(row: InternalRow, layout: AvroLayout, schemaId: Int): Array[Byte] = {
+    val out = new Array[Byte](5 + size(row, layout))
+    out(1) = (schemaId >>> 24).toByte; out(2) = (schemaId >>> 16).toByte
+    out(3) = (schemaId >>> 8).toByte; out(4) = schemaId.toByte
+    write(row, layout, out, 5)
+    out
+  }
+
+  private def zigzag(v: Long): Long = (v << 1) ^ (v >> 63)
+
+  private def varintSize(v: Long): Int = {
+    var n = 1
+    var u = v
+    while ((u & ~0x7fL) != 0) { n += 1; u >>>= 7 }
+    n
+  }
+
+  private def size(row: InternalRow, l: AvroLayout): Int = {
+    var n = 0
+    var i = 0
+    while (i < l.kind.length) {
+      if (l.nullable(i)) n += 1
+      if (!l.nullable(i) || !row.isNullAt(i)) n += valueSize(row, l, i)
+      i += 1
+    }
+    n
+  }
+
+  private def valueSize(row: InternalRow, l: AvroLayout, i: Int): Int =
+    (l.kind(i): @annotation.switch) match {
+      case Utf8 => val b = row.getUTF8String(i).numBytes; varintSize(zigzag(b)) + b
+      case I64 => varintSize(zigzag(row.getLong(i)))
+      case I32 => varintSize(zigzag(row.getInt(i)))
+      case F64 => 8
+      case Bool => 1
+      case Bytes => val b = row.getBinary(i).length; varintSize(zigzag(b)) + b
+      case Rec => size(row.getStruct(i, l.nested(i).kind.length), l.nested(i))
+    }
+
+  private def writeVarint(out: Array[Byte], pos0: Int, v0: Long): Int = {
+    var pos = pos0
+    var v = v0
+    while ((v & ~0x7fL) != 0) { out(pos) = ((v & 0x7f) | 0x80).toByte; pos += 1; v >>>= 7 }
+    out(pos) = v.toByte
+    pos + 1
+  }
+
+  private def write(row: InternalRow, l: AvroLayout, out: Array[Byte], pos0: Int): Int = {
+    var pos = pos0
+    var i = 0
+    while (i < l.kind.length) {
+      val present = !l.nullable(i) || !row.isNullAt(i)
+      if (l.nullable(i)) { out(pos) = (if (present) 2 else 0).toByte; pos += 1 }
+      if (present) pos = (l.kind(i): @annotation.switch) match {
+        case Utf8 =>
+          val s = row.getUTF8String(i)
+          val p = writeVarint(out, pos, zigzag(s.numBytes))
+          s.writeToMemory(out, Platform.BYTE_ARRAY_OFFSET + p)
+          p + s.numBytes
+        case I64 => writeVarint(out, pos, zigzag(row.getLong(i)))
+        case I32 => writeVarint(out, pos, zigzag(row.getInt(i)))
+        case F64 =>
+          val bits = java.lang.Double.doubleToRawLongBits(row.getDouble(i))
+          var k = 0
+          while (k < 8) { out(pos + k) = (bits >>> (8 * k)).toByte; k += 1 }
+          pos + 8
+        case Bool => out(pos) = (if (row.getBoolean(i)) 1 else 0).toByte; pos + 1
+        case Bytes =>
+          val b = row.getBinary(i)
+          val p = writeVarint(out, pos, zigzag(b.length))
+          System.arraycopy(b, 0, out, p, b.length)
+          p + b.length
+        case Rec => write(row.getStruct(i, l.nested(i).kind.length), l.nested(i), out, pos)
+      }
+      i += 1
+    }
+    pos
+  }
+}
+
+/** Per-field kind, nullability and nested layout of a struct type, as the
+  * [[AvroWire]] kernel walks it.
+  */
+final class AvroLayout(st: StructType) extends Serializable {
+  import AvroWire._
+  val kind: Array[Int] = st.fields.map(_.dataType match {
+    case StringType => Utf8
+    case LongType => I64
+    case IntegerType => I32
+    case DoubleType => F64
+    case BooleanType => Bool
+    case BinaryType => Bytes
+    case _: StructType => Rec
+    case other => throw new IllegalArgumentException(s"unsupported Avro type $other")
+  })
+  val nullable: Array[Boolean] = st.fields.map(_.nullable)
+  val nested: Array[AvroLayout] = st.fields.map(_.dataType match {
+    case s: StructType => new AvroLayout(s)
+    case _ => null
+  })
+}
+
+/** Native codegen form of the sink's value encoding: the Confluent-framed
+  * Avro bytes of a struct, written by the [[AvroWire]] kernel straight from
+  * the struct's InternalRow (no Row, GenericRecord or per-record writer).
+  */
+case class ConfluentAvroValue(child: Expression, schemaId: Int) extends UnaryExpression {
+  @transient private lazy val layout = new AvroLayout(child.dataType.asInstanceOf[StructType])
+
+  override def dataType: DataType = BinaryType
+
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case _: StructType =>
+      try { layout; TypeCheckResult.TypeCheckSuccess }
+      catch { case e: IllegalArgumentException => TypeCheckResult.TypeCheckFailure(e.getMessage) }
+    case other => TypeCheckResult.TypeCheckFailure(s"Avro value requires a STRUCT, got ${other.sql}")
+  }
+
+  override protected def nullSafeEval(v: Any): Any =
+    AvroWire.framed(v.asInstanceOf[InternalRow], layout, schemaId)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val l = ctx.addReferenceObj("avroLayout", layout, classOf[AvroLayout].getName)
+    defineCodeGen(ctx, ev, c => s"graft.streaming.AvroWire.framed($c, $l, $schemaId)")
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): ConfluentAvroValue =
+    copy(child = newChild)
 }

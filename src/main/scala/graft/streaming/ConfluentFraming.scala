@@ -12,14 +12,14 @@ import org.apache.spark.sql.functions._
   * message, indexes = [0]) is encoded as the single byte 0x00.
   *
   * Spark's codec functions don't speak this framing, so the engine
-  * implements it directly (SURVEY.md §7.4 hard-part 3). Byte-level parsing
-  * happens JVM-side ([[stripBytes]], used inside the decode mapPartitions
-  * kernel) because the header length is dynamic; the [[strip]] Column
-  * wrapper exists for plan-level use on non-hot paths.
+  * implements it directly (SURVEY.md §7.4 hard-part 3). The header length
+  * is dynamic, so the decode kernel reads it in place with
+  * [[payloadOffset]] rather than through a static `substring`.
   */
 object ConfluentFraming {
 
-  final class BadFrame(msg: String) extends RuntimeException(msg)
+  /** Stackless: the decode kernel throws one per poison record. */
+  final class BadFrame(msg: String) extends RuntimeException(msg, null, false, false)
 
   private def zigzagEncode(n: Long): Long = (n << 1) ^ (n >> 63)
 
@@ -29,19 +29,44 @@ object ConfluentFraming {
     out.write(v.toInt)
   }
 
-  /** Reads a zigzag varint from `buf` at `pos`; returns (value, newPos). */
-  private def readZigzag(buf: Array[Byte], pos0: Int): (Long, Int) = {
-    var pos = pos0
-    var shift = 0
-    var raw = 0L
-    while (shift <= 63) {
-      if (pos >= buf.length) throw new BadFrame("truncated varint in message indexes")
-      val b = buf(pos); pos += 1
-      raw |= (b & 0x7fL) << shift
-      if ((b & 0x80) == 0) return (((raw >>> 1) ^ -(raw & 1)), pos)
-      shift += 7
+  /** Zigzag-varint cursor over the message-indexes block. */
+  private final class Cursor(buf: Array[Byte], var pos: Int) {
+    def zigzag(): Long = {
+      var shift = 0
+      var raw = 0L
+      while (shift <= 63) {
+        if (pos >= buf.length) throw new BadFrame("truncated varint in message indexes")
+        val b = buf(pos); pos += 1
+        raw |= (b & 0x7fL) << shift
+        if ((b & 0x80) == 0) return (raw >>> 1) ^ -(raw & 1)
+        shift += 7
+      }
+      throw new BadFrame("varint exceeds 64 bits in message indexes")
     }
-    throw new BadFrame("varint exceeds 64 bits in message indexes")
+  }
+
+  /** Validates the header and returns the payload offset; collects the
+    * explicit message indexes into `indexes` when it is not null (none are
+    * collected for the single-0x00 shorthand).
+    */
+  private def scan(framed: Array[Byte], indexes: collection.mutable.Growable[Int]): Int = {
+    if (framed.length < 6) throw new BadFrame(s"frame too short: ${framed.length} bytes")
+    if (framed(0) != 0) throw new BadFrame(f"bad magic byte 0x${framed(0)}%02x")
+    val c = new Cursor(framed, 5)
+    val n = c.zigzag()
+    if (n < 0 || n > 128) throw new BadFrame(s"implausible message-index count $n")
+    var i = 0
+    while (i < n) {
+      val v = c.zigzag()
+      // A message index is a non-negative position in the .proto's nested
+      // message tree — negative or >Int.MaxValue values are a corrupt
+      // frame, not data (truncating with toInt would silently alias them).
+      if (v < 0 || v > Int.MaxValue)
+        throw new BadFrame(s"message index out of range: $v")
+      if (indexes != null) indexes += v.toInt
+      i += 1
+    }
+    c.pos
   }
 
   /** Parses the full frame header; returns (schemaId, messageIndexes,
@@ -50,53 +75,19 @@ object ConfluentFraming {
     * killing the task.
     */
   def parseHeader(framed: Array[Byte]): (Int, Seq[Int], Int) = {
-    if (framed.length < 6) throw new BadFrame(s"frame too short: ${framed.length} bytes")
-    if (framed(0) != 0) throw new BadFrame(f"bad magic byte 0x${framed(0)}%02x")
+    val idx = collection.mutable.ArrayBuffer.empty[Int]
+    val off = scan(framed, idx)
     val schemaId = ((framed(1) & 0xff) << 24) | ((framed(2) & 0xff) << 16) |
       ((framed(3) & 0xff) << 8) | (framed(4) & 0xff)
-    val (n, pos1) = readZigzag(framed, 5)
-    if (n == 0) (schemaId, Seq(0), pos1) // single-0x00 shorthand for [0]
-    else if (n < 0 || n > 128) throw new BadFrame(s"implausible message-index count $n")
-    else {
-      var pos = pos1
-      val idx = Array.ofDim[Int](n.toInt)
-      var i = 0
-      while (i < n) {
-        val (v, p) = readZigzag(framed, pos)
-        // A message index is a non-negative position in the .proto's nested
-        // message tree — negative or >Int.MaxValue values are a corrupt
-        // frame, not data (truncating with toInt would silently alias them).
-        if (v < 0 || v > Int.MaxValue)
-          throw new BadFrame(s"message index out of range: $v")
-        idx(i) = v.toInt; pos = p; i += 1
-      }
-      (schemaId, idx.toIndexedSeq, pos)
-    }
+    // an empty block is the single-0x00 shorthand for [0]
+    (schemaId, if (idx.isEmpty) Seq(0) else idx.toIndexedSeq, off)
   }
 
-  /** Payload bytes after magic + schema id + message-indexes block. */
-  def stripBytes(framed: Array[Byte]): Array[Byte] = {
-    val (_, _, off) = parseHeader(framed)
-    java.util.Arrays.copyOfRange(framed, off, framed.length)
-  }
-
-  /** Message-indexes block of a framed value (e.g. [0] for the first
-    * top-level message in the registered .proto).
+  /** Offset of the payload after magic + schema id + message-indexes
+    * block, checked exactly as [[parseHeader]] checks it, without
+    * allocating the indexes. Throws [[BadFrame]].
     */
-  def messageIndexes(framed: Array[Byte]): Seq[Int] = parseHeader(framed)._2
-
-  /** Column form of [[stripBytes]] (UDF — fine off the hot path; the
-    * streaming decode path parses the header inside its own
-    * mapPartitions kernel instead, see [[ProtobufWire.decodeFramed]]).
-    * TOTAL over dirty input: null or unframeable bytes yield SQL NULL
-    * (filterable/countable at plan level) instead of failing the whole
-    * query — a Column op has no access to the malformed counter, so NULL
-    * is its count-and-continue equivalent.
-    */
-  def strip(value: Column): Column =
-    udf((b: Array[Byte]) =>
-      if (b == null) null
-      else try stripBytes(b) catch { case _: BadFrame => null }).apply(value)
+  def payloadOffset(framed: Array[Byte]): Int = scan(framed, null)
 
   /** Frame a payload for a fixed schema id + message indexes (static per
     * target topic/message type; [0] — the wire shorthand 0x00 — by default).

@@ -3,7 +3,7 @@ package graft.streaming
 import graft.pipeline.SnortPipeline
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.BinaryType
 
 /** Kafka producer-side preparation (SURVEY.md A9 + §7.4 hard-part 1).
   *
@@ -42,25 +42,13 @@ object KafkaSink {
     * time millis, headers = the four routing headers (app.go:182-188).
     */
   def prepareRecords(envelope: DataFrame, topic: String, schemaId: Int): Dataset[PreparedRecord] = {
-    val alertCols = envelope.columns.filterNot(Set("kafka_key", "event_time", "headers"))
-    val packed = envelope.select(
-      col("kafka_key"),
-      unix_millis(col("event_time")).as("ts_ms"),
-      col("headers"),
-      struct(alertCols.map(col): _*).as("alert"))
-    val alertType = packed.schema("alert").dataType.asInstanceOf[StructType]
-    val encodeAvro = AvroCodec.rowEncoder(alertType, "SnortAlert")
-    val header = Array[Byte](0,
-      ((schemaId >> 24) & 0xff).toByte, ((schemaId >> 16) & 0xff).toByte,
-      ((schemaId >> 8) & 0xff).toByte, (schemaId & 0xff).toByte)
-    packed.map { row =>
-      PreparedRecord(
-        topic = topic,
-        key = row.getAs[String]("kafka_key").getBytes("UTF-8"),
-        value = header ++ encodeAvro(row.getStruct(row.fieldIndex("alert"))),
-        timestampMs = row.getAs[Long]("ts_ms"),
-        headers = row.getAs[Map[String, String]]("headers"))
-    }
+    val alertCols = envelope.columns.toSeq.filterNot(Set("kafka_key", "event_time", "headers"))
+    envelope.select(
+      lit(topic).as("topic"),
+      col("kafka_key").cast(BinaryType).as("key"),
+      AvroCodec.confluentValue(struct(alertCols.map(col): _*), schemaId).as("value"),
+      unix_millis(col("event_time")).as("timestampMs"),
+      col("headers")).as[PreparedRecord]
   }
 
   /** Batch/stream-agnostic emit: per partition, one writer, drain, close —

@@ -14,8 +14,7 @@ import org.apache.spark.sql.functions._
   */
 object KafkaSource {
 
-  /** readStream plan: topic → framed bytes → stripped payload → decoded
-    * SensorEvent columns. Offsets/consumer-group semantics: checkpointing
+  /** readStream plan: topic → framed bytes → decoded SensorEvent columns. Offsets/consumer-group semantics: checkpointing
     * supplies the reference's manual-commit at-least-once contract
     * (SURVEY.md A10) — `startingOffsets=earliest` mirrors
     * `auto.offset.reset=earliest`.

@@ -1,8 +1,17 @@
 package graft.streaming
 
 import graft.pipeline.SensorSchemas
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.expressions.{Expression, Generator, GenericInternalRow, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.LongAccumulator
 
 import java.io.ByteArrayOutputStream
 import java.nio.charset.StandardCharsets
@@ -11,18 +20,20 @@ import java.nio.charset.StandardCharsets
   * (public protobuf encoding spec; message shape from
   * protos/sensor_event.proto:8-73). The image ships no spark-protobuf
   * module, so registry-framed protobuf ingest (reference
-  * internal/schema/schema.go:23-34) needs its own decoder: strip the
-  * Confluent header ([[ConfluentFraming]]), then parse the wire format.
+  * internal/schema/schema.go:23-34) needs its own decoder: read the
+  * Confluent header in place ([[ConfluentFraming.payloadOffset]]), then
+  * parse the wire format straight into Catalyst rows.
   *
   * proto3 rules honored: varint int64, length-delimited strings/messages,
-  * unknown fields skipped, missing scalar = default (0 / ""), `optional`
-  * fields null when absent. Field numbers are mapped to schema NAMES, so
-  * schema column order is irrelevant.
+  * unknown fields skipped, a known field with the wrong wire type skipped
+  * as unknown, last value wins for a repeated scalar, missing scalar =
+  * default (0 / ""), `optional` fields null when absent. Field numbers are
+  * mapped to schema ordinals by NAME, so schema column order is irrelevant.
   */
 object ProtobufWire {
 
-  // field number → (column name, is string) tables from the proto
-  private val metricFields: Map[Int, String] = Map(
+  // field number → column name tables from the proto
+  private[streaming] val metricFields: Map[Int, String] = Map(
     1 -> "snort_timestamp", 2 -> "snort_base64_data", 3 -> "snort_client_bytes",
     4 -> "snort_client_pkts", 5 -> "snort_dst_address", 6 -> "snort_dst_port",
     7 -> "snort_dst_ap", 8 -> "snort_eth_dst", 9 -> "snort_eth_len",
@@ -37,7 +48,7 @@ object ProtobufWire {
     34 -> "snort_tcp_seq", 35 -> "snort_tcp_win", 36 -> "snort_time_to_live",
     37 -> "snort_udp_length", 38 -> "snort_vlan")
 
-  private val eventFields: Map[Int, String] = Map(
+  private[streaming] val eventFields: Map[Int, String] = Map(
     1 -> "metrics", 2 -> "event_hash_sha256", 3 -> "event_metrics_count",
     4 -> "event_seconds", 5 -> "sensor_id", 6 -> "sensor_version",
     7 -> "event_read_at", 8 -> "event_sent_at", 9 -> "event_received_at",
@@ -47,23 +58,59 @@ object ProtobufWire {
     19 -> "snort_rule_sid", 20 -> "snort_rule", 21 -> "snort_seconds",
     22 -> "snort_service", 23 -> "snort_type_of_service")
 
-  // ---- wire primitives ----------------------------------------------------
-
-  /** Thrown for truncated/corrupt payloads — callers route the record to
-    * the malformed path instead of failing the task (a poison Kafka message
-    * must not kill the stream; the reference counts failed events,
-    * internal/app/app.go:85-97).
+  /** Thrown for truncated/corrupt payloads — the decode kernel routes the
+    * record to the malformed path instead of failing the task (a poison
+    * Kafka message must not kill the stream; the reference counts failed
+    * events, internal/app/app.go:85-97). Stackless: one is thrown per
+    * poison record.
     */
-  final class MalformedRecord(msg: String) extends RuntimeException(msg)
+  final class MalformedRecord(msg: String) extends RuntimeException(msg, null, false, false)
 
-  private final class Reader(buf: Array[Byte]) {
-    var pos = 0
-    def hasMore: Boolean = pos < buf.length
+  // ---- decode -------------------------------------------------------------
+
+  private final val Unknown = 0
+  private final val Str = 1
+  private final val Lng = 2
+  private final val Msg = 3
+
+  /** Field-number-indexed decode table of one message type: for each field
+    * number, what it holds and its schema ordinal; per ordinal, the proto3
+    * default ("" / 0 for plain scalars, null for `optional` ones).
+    */
+  private final class Layout(schema: StructType, fields: Map[Int, String], val nested: Layout) {
+    val kind = new Array[Int](fields.keys.max + 1)
+    val ordinal = new Array[Int](fields.keys.max + 1)
+    var messageOrdinal = -1
+    fields.foreach { case (num, name) =>
+      ordinal(num) = schema.fieldIndex(name)
+      kind(num) = schema(name).dataType match {
+        case StringType => Str
+        case LongType => Lng
+        case ArrayType(_: StructType, _) => messageOrdinal = ordinal(num); Msg
+        case other => throw new IllegalArgumentException(s"unsupported $other")
+      }
+    }
+    val defaults: Array[Any] = schema.fields.map { f =>
+      if (f.nullable) null
+      else if (f.dataType == StringType) UTF8String.EMPTY_UTF8
+      else 0L
+    }
+  }
+
+  private val metricLayout = new Layout(SensorSchemas.metricSchema, metricFields, null)
+  private val eventLayout = new Layout(SensorSchemas.sensorEventSchema, eventFields, metricLayout)
+  private val noMetrics = new GenericArrayData(Array.empty[Any])
+
+  /** Cursor over `buf[pos, limit)`: a nested message is a sub-range of the
+    * same buffer, never a copy.
+    */
+  private final class Reader(buf: Array[Byte], var pos: Int, limit: Int) {
+    def hasMore: Boolean = pos < limit
     def readVarint(): Long = {
       var shift = 0
       var result = 0L
       while (shift <= 63) {
-        if (pos >= buf.length) throw new MalformedRecord("truncated varint")
+        if (pos >= limit) throw new MalformedRecord("truncated varint")
         val b = buf(pos); pos += 1
         result |= (b & 0x7fL) << shift
         if ((b & 0x80) == 0) return result
@@ -73,26 +120,129 @@ object ProtobufWire {
     }
     def readLen(): Int = {
       val n = readVarint()
-      if (n < 0 || pos + n > buf.length) throw new MalformedRecord(s"bad length $n")
+      // `limit - pos`, not `pos + n`: a length near Long.MaxValue would
+      // overflow the sum past the check and come back negative as an Int.
+      if (n < 0 || n > limit - pos) throw new MalformedRecord(s"bad length $n")
       n.toInt
     }
-    def readBytes(n: Int): Array[Byte] = {
-      if (n < 0 || pos + n > buf.length) throw new MalformedRecord(s"truncated bytes $n")
-      val out = java.util.Arrays.copyOfRange(buf, pos, pos + n)
+    def readString(): UTF8String = {
+      val n = readLen()
+      val s = utf8(buf, pos, n)
       pos += n
-      out
+      s
+    }
+    def readMessage(): Reader = {
+      val n = readLen()
+      val sub = new Reader(buf, pos, pos + n)
+      pos += n
+      sub
     }
     def skip(wireType: Int): Unit = wireType match {
       case 0 => readVarint()
-      case 1 => pos += 8; if (pos > buf.length) throw new MalformedRecord("truncated fixed64")
+      case 1 => if (limit - pos < 8) throw new MalformedRecord("truncated fixed64"); pos += 8
       case 2 =>
         // NOT `pos += readLen()`: that reads the old pos before readLen()
         // advances past the length varint, silently rewinding the cursor.
         val n = readLen(); pos += n
-      case 5 => pos += 4; if (pos > buf.length) throw new MalformedRecord("truncated fixed32")
+      case 5 => if (limit - pos < 4) throw new MalformedRecord("truncated fixed32"); pos += 4
       case other => throw new MalformedRecord(s"unsupported wire type $other")
     }
   }
+
+  /** A string slice without copying when it is ASCII (always valid UTF-8);
+    * otherwise the replacement-character decoding `new String(_, UTF_8)`
+    * gives, so malformed UTF-8 reads as U+FFFD.
+    */
+  private def utf8(buf: Array[Byte], from: Int, len: Int): UTF8String = {
+    var i = from
+    while (i < from + len && buf(i) >= 0) i += 1
+    if (i == from + len) UTF8String.fromBytes(buf, from, len)
+    else UTF8String.fromString(new String(buf, from, len, StandardCharsets.UTF_8))
+  }
+
+  private def decodeMessage(r: Reader, layout: Layout): InternalRow = {
+    val values = layout.defaults.clone()
+    var messages: collection.mutable.ArrayBuffer[Any] = null
+    while (r.hasMore) {
+      val tag = r.readVarint()
+      val num = (tag >>> 3).toInt
+      val wireType = (tag & 7).toInt
+      val kind = if (num >= 0 && num < layout.kind.length) layout.kind(num) else Unknown
+      // Known fields are read ONLY when the record's wire type matches the
+      // expected one (2 for strings/messages, 0 for varint longs); a
+      // mismatch is treated as an unknown field and skipped — proto3
+      // conformance semantics, and it prevents a drifted producer schema
+      // from silently misreading a varint as a length.
+      if (kind == Str && wireType == 2) values(layout.ordinal(num)) = r.readString()
+      else if (kind == Lng && wireType == 0) values(layout.ordinal(num)) = r.readVarint()
+      else if (kind == Msg && wireType == 2) {
+        if (messages == null) messages = collection.mutable.ArrayBuffer.empty[Any]
+        messages += decodeMessage(r.readMessage(), layout.nested)
+      } else r.skip(wireType)
+    }
+    if (layout.messageOrdinal >= 0)
+      values(layout.messageOrdinal) =
+        if (messages == null) noMetrics else new GenericArrayData(messages.toArray)
+    new GenericInternalRow(values)
+  }
+
+  /** The decode kernel: one Kafka value → 0 or 1 SensorEvent rows. A null
+    * value (a Kafka tombstone, the compacted-topic delete marker), a bad
+    * Confluent frame or bad protobuf is counted once on `malformed` (when
+    * not null) and yields no row.
+    */
+  def decodeRows(value: Array[Byte], framed: Boolean, malformed: LongAccumulator): Iterator[InternalRow] =
+    try {
+      if (value == null) throw new MalformedRecord("tombstone")
+      val from = if (framed) ConfluentFraming.payloadOffset(value) else 0
+      Iterator.single(decodeMessage(new Reader(value, from, value.length), eventLayout))
+    } catch {
+      case _: MalformedRecord | _: ConfluentFraming.BadFrame =>
+        if (malformed != null) malformed.add(1L)
+        Iterator.empty
+    }
+
+  /** Named failed-event counter, visible in the Spark UI / status API —
+    * the engine's form of the reference's count-and-continue failed-event
+    * accounting (app.go:85-97). Create once per pipeline and pass to
+    * [[decode]]/[[decodeFramed]].
+    */
+  def malformedCounter(spark: org.apache.spark.sql.SparkSession): LongAccumulator =
+    spark.sparkContext.longAccumulator("graft.protobuf.malformed_records")
+
+  /** DataFrame op: binary `valueCol` (an unframed protobuf payload) → full
+    * SensorEvent rows, through the [[SensorEventDecoder]] generator, so the
+    * same operator serves batch frames and `readStream` pipelines.
+    * Malformed records are counted on `malformed` (when given) and dropped,
+    * mirroring the reference's count-and-continue handling of failed
+    * events (app.go:85-97) — poison Kafka messages must not kill the
+    * stream, but their rate must stay observable.
+    */
+  def decode(
+      df: DataFrame,
+      valueCol: String,
+      malformed: Option[LongAccumulator] = None): DataFrame =
+    decodeWith(df, valueCol, framed = false, malformed)
+
+  /** Like [[decode]] but takes the raw Confluent-framed Kafka value and
+    * parses magic + schema id + message-indexes inside the same kernel
+    * (the indexes block is variable-length, so framing cannot be a static
+    * `substring`). Bad frames count as malformed too.
+    */
+  def decodeFramed(
+      df: DataFrame,
+      valueCol: String,
+      malformed: Option[LongAccumulator] = None): DataFrame =
+    decodeWith(df, valueCol, framed = true, malformed)
+
+  private def decodeWith(df: DataFrame, valueCol: String, framed: Boolean,
+      malformed: Option[LongAccumulator]): DataFrame = {
+    import org.apache.spark.sql.graftbridge.ColumnBridge
+    df.select(ColumnBridge.column(SensorEventDecoder(
+      ColumnBridge.expression(df.col(valueCol)), framed, malformed.orNull)))
+  }
+
+  // ---- encode (tests + sink symmetry) ------------------------------------
 
   private def writeVarint(out: ByteArrayOutputStream, v0: Long): Unit = {
     var v = v0
@@ -110,124 +260,6 @@ object ProtobufWire {
     val bytes = s.getBytes(StandardCharsets.UTF_8)
     writeTag(out, field, 2); writeVarint(out, bytes.length); out.write(bytes, 0, bytes.length)
   }
-
-  // ---- decode -------------------------------------------------------------
-
-  private def decodeMessage(
-      bytes: Array[Byte],
-      schema: StructType,
-      fields: Map[Int, String],
-      metricsCollector: Option[collection.mutable.ArrayBuffer[Row]]): Row = {
-    val values = collection.mutable.Map[String, Any]()
-    val r = new Reader(bytes)
-    while (r.hasMore) {
-      val tag = r.readVarint()
-      val fieldNum = (tag >>> 3).toInt
-      val wireType = (tag & 7).toInt
-      // Known fields are read ONLY when the record's wire type matches the
-      // expected one (2 for strings/messages, 0 for varint longs); a
-      // mismatch is treated as an unknown field and skipped — proto3
-      // conformance semantics, and it prevents a drifted producer schema
-      // from silently misreading a varint as a length (yielding wrong
-      // column values instead of a skip).
-      fields.get(fieldNum) match {
-        case Some("metrics") if wireType == 2 =>
-          metricsCollector.get += decodeMetric(r.readBytes(r.readLen()))
-        case Some(name) if name != "metrics" =>
-          schema(name).dataType match {
-            case StringType if wireType == 2 =>
-              values(name) = new String(r.readBytes(r.readLen()), StandardCharsets.UTF_8)
-            case LongType if wireType == 0 =>
-              values(name) = r.readVarint()
-            case StringType | LongType => r.skip(wireType) // wrong wire type → unknown
-            case other => throw new IllegalArgumentException(s"unsupported $other")
-          }
-        case _ => r.skip(wireType)
-      }
-    }
-    Row.fromSeq(schema.fields.map { f =>
-      values.get(f.name).getOrElse {
-        f.name match {
-          case "metrics" => metricsCollector.get.toSeq
-          // proto3 presence: plain scalars default, `optional` ones null
-          case _ if !f.nullable && f.dataType == StringType => ""
-          case _ if !f.nullable && f.dataType == LongType   => 0L
-          case _ => null
-        }
-      }
-    }.toIndexedSeq)
-  }
-
-  def decodeMetric(bytes: Array[Byte]): Row =
-    decodeMessage(bytes, SensorSchemas.metricSchema, metricFields, None)
-
-  def decodeSensorEvent(bytes: Array[Byte]): Row =
-    decodeMessage(bytes, SensorSchemas.sensorEventSchema, eventFields,
-      Some(collection.mutable.ArrayBuffer.empty[Row]))
-
-  /** Named failed-event counter, visible in the Spark UI / status API —
-    * the engine's form of the reference's count-and-continue failed-event
-    * accounting (app.go:85-97). Create once per pipeline and pass to
-    * [[decode]]/[[decodeFramed]].
-    */
-  def malformedCounter(spark: org.apache.spark.sql.SparkSession): org.apache.spark.util.LongAccumulator =
-    spark.sparkContext.longAccumulator("graft.protobuf.malformed_records")
-
-  /** DataFrame op: binary `valueCol` (already Confluent-stripped) →
-    * full SensorEvent rows. Implemented with Dataset.mapPartitions (NOT
-    * .rdd, which forces batch execution and is illegal on streaming plans),
-    * so the same operator serves batch frames and `readStream` pipelines.
-    * Malformed records are counted on `malformed` (when given) and dropped,
-    * mirroring the reference's count-and-continue handling of failed
-    * events (app.go:85-97) — poison Kafka messages must not kill the
-    * stream, but their rate must stay observable.
-    */
-  def decode(
-      df: DataFrame,
-      valueCol: String,
-      malformed: Option[org.apache.spark.util.LongAccumulator] = None): DataFrame =
-    decodeWith(df, valueCol, malformed)(identity)
-
-  /** Like [[decode]] but takes the raw Confluent-framed Kafka value and
-    * parses magic + schema id + message-indexes inside the same kernel
-    * (the indexes block is variable-length, so framing cannot be a static
-    * `substring`). Bad frames count as malformed too.
-    */
-  def decodeFramed(
-      df: DataFrame,
-      valueCol: String,
-      malformed: Option[org.apache.spark.util.LongAccumulator] = None): DataFrame =
-    decodeWith(df, valueCol, malformed)(ConfluentFraming.stripBytes)
-
-  private def decodeWith(
-      df: DataFrame,
-      valueCol: String,
-      malformed: Option[org.apache.spark.util.LongAccumulator])(
-      unframe: Array[Byte] => Array[Byte]): DataFrame = {
-    val idx = df.schema.fieldIndex(valueCol)
-    implicit val enc: org.apache.spark.sql.Encoder[Row] =
-      org.apache.spark.sql.Encoders.row(SensorSchemas.sensorEventSchema)
-    df.mapPartitions { it =>
-      it.flatMap { r =>
-        // Null value = Kafka tombstone (compacted-topic delete marker):
-        // count-and-drop like any other undecodable record — one tombstone
-        // must not kill the stream (poison-message contract, app.go:85-97).
-        val bytes = r.getAs[Array[Byte]](idx)
-        if (bytes == null) {
-          malformed.foreach(_.add(1L))
-          None
-        } else
-          try Some(decodeSensorEvent(unframe(bytes)))
-          catch {
-            case _: MalformedRecord | _: ConfluentFraming.BadFrame =>
-              malformed.foreach(_.add(1L))
-              None
-          }
-      }
-    }
-  }
-
-  // ---- encode (tests + sink symmetry) ------------------------------------
 
   private def encodeMessage(row: Row, schema: StructType, fields: Map[Int, String]): Array[Byte] = {
     val out = new ByteArrayOutputStream()
@@ -253,4 +285,42 @@ object ProtobufWire {
 
   def encodeSensorEvent(row: Row): Array[Byte] =
     encodeMessage(row, SensorSchemas.sensorEventSchema, eventFields)
+}
+
+/** 0-or-1-row generator over a binary Kafka value: the SensorEvent decode
+  * kernel ([[ProtobufWire.decodeRows]]) as a Catalyst `Generator`, so the
+  * decoded columns feed the rest of the plan as InternalRows inside the
+  * same whole-stage-codegen span. `framed` reads a Confluent header first;
+  * `malformed` (may be null) counts the dropped records.
+  */
+case class SensorEventDecoder(child: Expression, framed: Boolean, malformed: LongAccumulator)
+    extends UnaryExpression with Generator {
+
+  override def elementSchema: StructType = SensorSchemas.sensorEventSchema
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(
+      s"SensorEvent decode requires BINARY input, got ${child.dataType.sql}")
+
+  override def eval(input: InternalRow): IterableOnce[InternalRow] =
+    ProtobufWire.decodeRows(child.eval(input).asInstanceOf[Array[Byte]], framed, malformed)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val in = child.genCode(ctx)
+    val counter =
+      if (malformed == null) "null"
+      else ctx.addReferenceObj("malformed", malformed, classOf[LongAccumulator].getName)
+    ev.copy(code = code"""
+      |${in.code}
+      |scala.collection.Iterator<InternalRow> ${ev.value} =
+      |  graft.streaming.ProtobufWire.decodeRows(${in.isNull} ? null : ${in.value}, $framed, $counter);
+      |""".stripMargin, isNull = FalseLiteral)
+  }
+
+  // the counter's running value is not part of the plan's identity
+  override protected def stringArgs: Iterator[Any] = Iterator(child, framed)
+
+  override protected def withNewChildInternal(newChild: Expression): SensorEventDecoder =
+    copy(child = newChild)
 }

@@ -105,20 +105,14 @@ object StreamDemo {
       KafkaSink.prepareRecords(envelope, "alerts-out", schemaId = 3),
       () => new StdoutWriter)
 
-    // 3. full ingest chain: registry-framed protobuf → strip → wire decode →
-    //    explode/project → sink (the reference's A1→A9 path end-to-end)
+    // 3. full ingest chain: registry-framed protobuf → wire decode (header
+    //    read in place) → explode/project → sink (the reference's A1→A9
+    //    path end-to-end)
     val framed = events.collect().map { row =>
-      val body = graft.streaming.ProtobufWire.encodeSensorEvent(row)
-      Array[Byte](0, 0, 0, 0, 42) ++ body
+      graft.streaming.ConfluentFraming.header(42) ++
+        graft.streaming.ProtobufWire.encodeSensorEvent(row)
     }
-    val framedDf = spark.createDataFrame(
-      java.util.Arrays.asList(framed.map(b => org.apache.spark.sql.Row(b)): _*),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("value",
-          org.apache.spark.sql.types.BinaryType))))
-    val decoded = graft.streaming.ProtobufWire.decode(
-      framedDf.select(graft.streaming.ConfluentFraming.strip(col("value")).as("payload")),
-      "payload")
+    val decoded = graft.streaming.ProtobufWire.decodeFramed(framed.toSeq.toDF("value"), "value")
     val envelope2 = graft.pipeline.SnortPipeline.withEnvelope(
       graft.pipeline.SnortPipeline.alerts(decoded))
     println("[protobuf-ingest] decoded events → prepared records:")

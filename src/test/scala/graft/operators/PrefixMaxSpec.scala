@@ -68,6 +68,25 @@ class PrefixMaxSpec extends SparkSpec {
       s"the data-sized rank pass must partition by __pid:\n$plan")
   }
 
+  test("globalRowNumber ranks exactly 1..n in order with exchange reuse off") {
+    // Rows reach the range exchange from upstream partitions picked at random
+    // on every execution, so two executions sample different range bounds
+    // and place boundary rows in different partitions: the local row numbers
+    // and the per-partition counts agree only when both passes read ONE
+    // materialized pid assignment.
+    val scatter = udf(() => scala.util.Random.nextInt(6)).asNondeterministic()
+    val rows = (1 to 2000).map { k => (k.toLong, ((k * 104729L) % 997).toLong) }
+    val df = rows.toDF("k", "v").withColumn("r", scatter())
+      .repartition(6, col("r")).drop("r")
+    val got = withConf("spark.sql.exchange.reuse" -> "false") {
+      Partitioning.globalRowNumber(df, Seq(col("v"), col("k")), "i", numPartitions = 9)
+        .select(col("v"), col("k"), col("i")).as[(Long, Long, Long)].collect()
+    }
+    assert(got.sortBy(_._3).map(_._3).toSeq == (1L to rows.size.toLong))
+    assert(got.sortBy(_._3).map(r => (r._1, r._2)).toSeq ==
+      rows.map(r => (r._2, r._1)).sorted)
+  }
+
   test("ntileFromRank reproduces SQL ntile semantics at every remainder shape") {
     // n < buckets, n == buckets, even split, every remainder class, and a
     // large size — the formula must match Spark's own ntile exactly

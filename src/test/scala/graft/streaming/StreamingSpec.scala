@@ -101,16 +101,16 @@ class StreamingSpec extends SparkSpec {
     assert(got == Map("10.0.0.1" -> Some("internal"), "1.2.3.4" -> None))
   }
 
-  test("Confluent framing: strip/add/schemaId roundtrip") {
+  test("Confluent framing: add/schemaId/payloadOffset roundtrip") {
     val payload = "hello".getBytes("UTF-8")
     val df = Seq(Tuple1(payload)).toDF("payload")
       .withColumn("framed", ConfluentFraming.add($"payload", 42))
-      .withColumn("stripped", ConfluentFraming.strip($"framed"))
       .withColumn("sid", ConfluentFraming.schemaId($"framed"))
-    val row = df.select($"framed", $"stripped", $"sid").head()
+    val row = df.select($"framed", $"sid").head()
+    val framed = row.getAs[Array[Byte]]("framed")
     // 6-byte header: magic + schema id + the 0x00 message-indexes shorthand
-    assert(row.getAs[Array[Byte]]("framed").length == payload.length + 6)
-    assert(row.getAs[Array[Byte]]("stripped").toSeq == payload.toSeq)
+    assert(framed.length == payload.length + 6)
+    assert(framed.drop(ConfluentFraming.payloadOffset(framed)).toSeq == payload.toSeq)
     assert(row.getAs[Int]("sid") == 42)
   }
 
@@ -128,6 +128,7 @@ class StreamingSpec extends SparkSpec {
     val recs = KafkaSink.prepareRecords(envelope, "alerts", schemaId = 7).collect()
     assert(recs.length == 1)
     val r = recs.head
+    assert(r.topic == "alerts")
     assert(new String(r.key, "UTF-8") == "hash-1")
     assert(r.headers("classification") == "") // null-safe where reference panics
     assert(r.headers("priorityStr") == "Medium")
@@ -145,6 +146,86 @@ class StreamingSpec extends SparkSpec {
     assert(rec.get("priority_str").toString == "Medium")
     assert(rec.get("class") == null)
     assert(rec.get("vlan") == null)
+  }
+
+  /** Each row's native value equals the 5-byte header followed by the
+    * GenericDatumWriter oracle's bytes, and reads back through
+    * GenericDatumReader — with and without whole-stage codegen.
+    */
+  private def assertAvroMatchesOracle(df: org.apache.spark.sql.DataFrame, schemaId: Int): Int = {
+    val st = df.schema
+    val schema = AvroCodec.avroSchema(st, "R")
+    val header = Array[Byte](0, 0, 0, 0, schemaId.toByte)
+    val alert = struct(df.columns.toSeq.map(col): _*)
+    val packed = df.select(alert.as("s"), AvroCodec.confluentValue(alert, schemaId).as("v"))
+    for (codegen <- Seq("true", "false")) withConf("spark.sql.codegen.wholeStage" -> codegen,
+        "spark.sql.codegen.factoryMode" -> (if (codegen == "true") "FALLBACK" else "NO_CODEGEN")) {
+      packed.collect().foreach { row =>
+        val want = RowAvroOracle.encode(RowAvroOracle.toRecord(row.getStruct(0), st, schema), schema)
+        val got = row.getAs[Array[Byte]](1)
+        assert(got.toSeq == (header ++ want).toSeq, s"codegen=$codegen row=${row.getStruct(0)}")
+        val back = new GenericDatumReader[GenericRecord](schema)
+          .read(null, DecoderFactory.get().binaryDecoder(got.drop(5), null))
+        assert(RowAvroOracle.encode(back, schema).toSeq == want.toSeq)
+      }
+    }
+    packed.count().toInt
+  }
+
+  test("native Avro value is byte-identical to the GenericDatumWriter oracle") {
+    val rnd = new scala.util.Random(11L)
+    val texts = Seq("", "a", "über", "日本語のアラート", "emoji 😀", "x" * 200)
+    def text(): String = texts(rnd.nextInt(texts.size))
+    def opt[T](v: => T): Any = if (rnd.nextInt(3) == 0) null else v
+    def long(): Long = Seq(0L, -1L, 63L, 64L, -65L, Long.MaxValue, Long.MinValue,
+      rnd.nextLong())(rnd.nextInt(8))
+    // SnortAlert rows through the real envelope: null and present union
+    // branches, the nested metadata record, empty and non-ASCII strings
+    val metricTypes = SensorSchemas.metricSchema.fields.map(_.dataType)
+    val events = spark.createDataFrame((0 until 60).map { i =>
+      val metrics = Seq.fill(1 + rnd.nextInt(3))(Row.fromSeq(text() +: metricTypes.tail.map {
+        case org.apache.spark.sql.types.StringType => opt(text())
+        case _ => opt(long())
+      }.toIndexedSeq))
+      Row(metrics, s"h-$i-${text()}", long(), long(), text(), text(), rnd.nextInt(1 << 30).toLong,
+        rnd.nextInt(1 << 30).toLong, rnd.nextInt(1 << 30).toLong, opt(text()), opt(text()),
+        opt(text()), text(), text(), rnd.nextInt(5).toLong, text(), long(), long(), long(),
+        text(), rnd.nextInt(1 << 30).toLong, opt(text()), opt(long()))
+    }.asJava, SensorSchemas.sensorEventSchema)
+    val envelope = graft.pipeline.SnortPipeline.withEnvelope(
+      graft.pipeline.SnortPipeline.alerts(events))
+    val alerts = envelope.drop("kafka_key", "event_time", "headers")
+    assert(assertAvroMatchesOracle(alerts, 9) > 60)
+    // prepareRecords writes exactly those values
+    val want = alerts.select(AvroCodec.confluentValue(struct(alerts.columns.toSeq.map(col): _*), 9))
+      .as[Array[Byte]].collect().map(_.toSeq).sortBy(_.mkString(",")).toSeq
+    val got = KafkaSink.prepareRecords(envelope, "t", 9).collect()
+      .map(_.value.toSeq).sortBy(_.mkString(",")).toSeq
+    assert(got == want)
+    // every other type the schema derivation maps, nullable and not
+    import org.apache.spark.sql.types._
+    val st = StructType(Seq(
+      StructField("i", IntegerType, nullable = false), StructField("oi", IntegerType),
+      StructField("d", DoubleType, nullable = false), StructField("od", DoubleType),
+      StructField("b", BooleanType, nullable = false), StructField("ob", BooleanType),
+      StructField("bin", BinaryType, nullable = false), StructField("obin", BinaryType),
+      StructField("rec", StructType(Seq(StructField("s", StringType),
+        StructField("l", LongType, nullable = false))))))
+    val rows = (0 until 40).map { _ =>
+      def int(): Int = Seq(0, -1, 63, -64, Int.MaxValue, Int.MinValue, rnd.nextInt())(rnd.nextInt(7))
+      def dbl(): Double = Seq(0.0, -0.0, 1.5, Double.NaN, Double.NegativeInfinity,
+        Double.MinPositiveValue, rnd.nextDouble())(rnd.nextInt(7))
+      def bin(): Array[Byte] = Array.fill(rnd.nextInt(4) * 50)(rnd.nextInt(256).toByte)
+      Row(int(), opt(int()), dbl(), opt(dbl()), rnd.nextBoolean(), opt(rnd.nextBoolean()),
+        bin(), opt(bin()), opt(Row(opt(text()), long())))
+    }
+    assertAvroMatchesOracle(spark.createDataFrame(rows.asJava, st), 200)
+    // a type the schema derivation does not map, even nested, fails analysis
+    val nestedArray = Seq((1L, Seq(1L))).toDF("l", "xs")
+      .select(struct($"l", struct($"xs").as("n")).as("s"))
+    val err = intercept[org.apache.spark.sql.AnalysisException](
+      nestedArray.select(AvroCodec.confluentValue($"s", 1)))
+    assert(err.getMessage.contains("unsupported Avro type"), err.getMessage)
   }
 
   test("stream-stream join: matches within lag, drops outside, outer-pads after watermark") {
