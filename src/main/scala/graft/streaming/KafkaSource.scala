@@ -51,26 +51,53 @@ object KafkaSource {
 /** Interval throughput/latency stats (reference A12: PrintStats ticker,
   * internal/app/app.go:75-123) — expressed as a StreamingQueryListener over
   * QueryProgressEvent, which already carries rows/sec and batch duration;
-  * no user-space accumulation needed.
+  * no user-space accumulation needed. Each batch with input prints one
+  * line that also splits the trigger into its phases and the checkpoint
+  * cost: the offset-log write (`walCommit`), planning, `addBatch`, the
+  * commit-log write (`commitOffsets`) and the state stores' commit time
+  * summed over the stateful operators.
   */
 class StatsListener(keepLast: Int = 1024)
     extends org.apache.spark.sql.streaming.StreamingQueryListener {
   import org.apache.spark.sql.streaming.StreamingQueryListener._
+  import StatsListener.BatchStats
 
-  /** Bounded ring of recent (rows, rows/s, batchMs) — the reference keeps
-    * only interval counters, so an unbounded buffer would be a driver-heap
-    * leak on week-long streams.
+  /** Bounded ring of recent batches — the reference keeps only interval
+    * counters, so an unbounded buffer would be a driver-heap leak on
+    * week-long streams.
     */
-  val progress = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Double, Long)]()
+  val progress = new java.util.concurrent.ConcurrentLinkedQueue[BatchStats]()
 
   override def onQueryStarted(event: QueryStartedEvent): Unit = ()
   override def onQueryTerminated(event: QueryTerminatedEvent): Unit = ()
   override def onQueryProgress(event: QueryProgressEvent): Unit = {
-    val p = event.progress
-    progress.add((p.numInputRows, p.inputRowsPerSecond, p.batchDuration))
+    val s = BatchStats(event.progress)
+    progress.add(s)
     while (progress.size > keepLast) progress.poll()
-    if (p.numInputRows > 0)
-      println(f"[stats] batch=${p.batchId} rows=${p.numInputRows} " +
-        f"rows/s=${p.inputRowsPerSecond}%.1f batchMs=${p.batchDuration}")
+    if (s.rows > 0) println(s.line)
+  }
+}
+
+object StatsListener {
+
+  /** One batch's throughput and phase durations (ms); a phase the batch
+    * did not run reads 0.
+    */
+  final case class BatchStats(batchId: Long, rows: Long, rowsPerSecond: Double, batchMs: Long,
+      walCommitMs: Long, planningMs: Long, addBatchMs: Long, commitOffsetsMs: Long,
+      stateCommitMs: Long) {
+    def line: String =
+      f"[stats] batch=$batchId rows=$rows rows/s=$rowsPerSecond%.1f batchMs=$batchMs " +
+        s"walCommitMs=$walCommitMs planningMs=$planningMs addBatchMs=$addBatchMs " +
+        s"commitOffsetsMs=$commitOffsetsMs stateCommitMs=$stateCommitMs"
+  }
+
+  object BatchStats {
+    def apply(p: org.apache.spark.sql.streaming.StreamingQueryProgress): BatchStats = {
+      def phase(name: String): Long = p.durationMs.getOrDefault(name, 0L)
+      BatchStats(p.batchId, p.numInputRows, p.inputRowsPerSecond, p.batchDuration,
+        phase("walCommit"), phase("queryPlanning"), phase("addBatch"), phase("commitOffsets"),
+        p.stateOperators.map(_.commitTimeMs).sum)
+    }
   }
 }

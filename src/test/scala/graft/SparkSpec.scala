@@ -5,7 +5,9 @@ import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared test base: one session per suite, UTC, small shuffle width. */
+/** Shared test base: one session per suite, UTC, small shuffle width, and
+  * the product's checkpoint file manager.
+  */
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSession
     .builder()
@@ -16,6 +18,7 @@ trait SparkSpec extends AnyFunSuite {
     .config("spark.sql.warehouse.dir",
       s"${System.getProperty("java.io.tmpdir")}/graft-test-warehouse")
     .config("spark.ui.enabled", "false")
+    .config(Map(Graft.checkpointFileManager))
     .getOrCreate()
 
   def sf(dir: String = "sf0.001"): String = s"/root/testdata/$dir"

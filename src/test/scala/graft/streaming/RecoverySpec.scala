@@ -5,6 +5,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 
 /** Delivery-contract coverage (SURVEY.md A10/A12): checkpointed restart
   * without reprocessing, complete output mode, listener-based interval
@@ -56,16 +57,29 @@ class RecoverySpec extends SparkSpec {
     spark.streams.addListener(listener)
     try {
       val in = MemoryStream[Long](spark)
-      val q = in.toDF().writeStream.format("memory").queryName("stats_out").start()
+      val q = in.toDF().groupBy($"value" % 10).count()
+        .writeStream.outputMode(OutputMode.Update).format("memory").queryName("stats_out")
+        .option("checkpointLocation", Files.createTempDirectory("graft-stats-ckpt").toString)
+        .start()
       in.addData(1L to 100L: _*)
       q.processAllAvailable()
       q.stop()
       // listener delivery is async; wait briefly for the progress events
       val deadline = System.currentTimeMillis() + 10000
-      while (listener.progress.isEmpty && System.currentTimeMillis() < deadline)
+      def batches = listener.progress.asScala.toSeq
+      while (!batches.exists(_.rows > 0) && System.currentTimeMillis() < deadline)
         Thread.sleep(100)
-      val rows = listener.progress.toArray.map(_.asInstanceOf[(Long, Double, Long)])
-      assert(rows.map(_._1).sum >= 100L)
+      assert(batches.map(_.rows).sum >= 100L)
+      val b = batches.find(_.rows > 0).get
+      // a batch with data runs every phase: the offset log, planning, the
+      // sink, the commit log, and a state commit of the aggregate's store;
+      // the phases lie inside the trigger (+1 for millisecond rounding)
+      assert(b.addBatchMs > 0L, b)
+      assert(Seq(b.walCommitMs, b.planningMs, b.commitOffsetsMs, b.stateCommitMs).forall(_ >= 0L), b)
+      assert(b.walCommitMs + b.planningMs + b.addBatchMs + b.commitOffsetsMs <= b.batchMs + 1, b)
+      assert(b.line.split(" ").map(_.takeWhile(_ != '=')).toSeq ==
+        Seq("[stats]", "batch", "rows", "rows/s", "batchMs", "walCommitMs", "planningMs",
+          "addBatchMs", "commitOffsetsMs", "stateCommitMs"), b.line)
     } finally spark.streams.removeListener(listener)
   }
 
