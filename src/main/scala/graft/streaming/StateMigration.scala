@@ -18,7 +18,7 @@ import org.apache.spark.sql.functions._
   * // 1. dump the old checkpoint offline (no streaming restart needed)
   * val snap = StateMigration.readOldBufferedExact[(Long, Long, Long)](spark, oldCkpt)
   * // 2. bootstrap a FRESH checkpoint through the *From entry point
-  * StatefulOps.patternMatchCountsExactFrom(source, snap, watermark)
+  * StatefulOps.patternMatchCountsExactFrom(source.withWatermark("ts", delay), snap)
   *   .writeStream.option("checkpointLocation", newCkpt)...
   * // 3. resume the source from the old checkpoint's committed offsets
   * }}}

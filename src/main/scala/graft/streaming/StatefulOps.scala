@@ -1,13 +1,14 @@
 package graft.streaming
 
 import graft.operators.KmvSketch
-import org.apache.spark.sql.{Dataset, Encoders}
+import org.apache.spark.sql.{Dataset, Encoder, Encoders, Row}
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.streaming.{
   MapState, OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
 
 /** Arbitrary-state streaming on Spark 4's `transformWithState` — the
-  * successor API to `mapGroupsWithState` (which the engine already covers
-  * in [[StreamOps]] for the reference's per-sensor summary path, SURVEY.md
+  * successor API to `mapGroupsWithState` (which the engine still uses in
+  * [[StreamOps]] for the CDC snapshot and last-touch attribution, SURVEY.md
   * §2C streaming row). What the new API adds, and what this operator
   * exercises deliberately:
   *
@@ -245,15 +246,15 @@ object StatefulOps {
     }
   }
 
-  /** Timer-closed sessionization over a watermarked event stream; at most
-    * `maxFragments` open fragments per user (see [[SessionProcessor]]).
+  /** Timer-closed sessionization over a watermarked event stream (the
+    * caller declares `withWatermark("ts", delay)`); at most `maxFragments`
+    * open fragments per user (see [[SessionProcessor]]).
     */
   def timedSessions(events: Dataset[TimedEvent], gapMs: Long,
-      watermark: String = "10 seconds",
       maxFragments: Int = 8): Dataset[SessionSummary] = {
     import events.sparkSession.implicits._
+    StreamOps.requireWatermark(events, "ts", "timedSessions")
     events
-      .withWatermark("ts", watermark)
       .groupByKey(_.userId)
       .transformWithState(new SessionProcessor(gapMs, maxFragments),
         TimeMode.EventTime(), OutputMode.Append())
@@ -518,59 +519,25 @@ object StatefulOps {
         TimeMode.None(), OutputMode.Update())
   }
 
-  /** A stamped observation for the replay-proof CMS composition: the
-    * event id is the idempotency token, the event time bounds how long
-    * the dedup operator must remember it.
+  /** A stamped observation for the replay-proof CMS composition. The
+    * event id is the idempotency token and the event time bounds how long
+    * the dedup must remember it: the caller declares
+    * `withWatermark("ts", delay)`, drops redeliveries with
+    * `dropDuplicatesWithinWatermark("key", "eventId")`, and maps the
+    * survivors to [[HashedValue]] for [[cmsFrequency]], whose counters
+    * are not idempotent (CmsStreamSpec pins both forms).
+    *
+    * Token contract: `eventId` need only be unique PER KEY among live
+    * events inside the watermark horizon, because the dedup key is the
+    * (key, eventId) pair; a key reusing an id for two different live
+    * events loses the second. Cost: the dedup holds one state row per
+    * event id inside the horizon, O(events in the delay window) where the
+    * CMS fold alone is O(keys); a replay later than the horizon counts
+    * again, so choose the delay to cover the source's redelivery window
+    * (e.g. the Kafka transaction timeout).
     */
   final case class StampedValue(
     ts: java.sql.Timestamp, eventId: Long, key: String, h: Long)
-
-  /** The shipped answer to the CMS at-least-once caveat (r11 verdict
-    * task 5): [[cmsFrequency]]'s counters are not idempotent — a replayed
-    * trigger double-counts (CmsStreamSpec pins it) — so this composition
-    * puts Spark's own `dropDuplicatesWithinWatermark` on the
-    * (key, event id) PAIR upstream of the fold. A redelivered event is
-    * dropped by the dedup state before it can touch a counter, making the
-    * composed pipeline's sketch bytes invariant under trigger replay (the
-    * spec's replayed batch leaves totalCount unchanged — the exact
-    * scenario the plain operator's caveat warns about).
-    *
-    * Idempotency-token contract (r12 ADVICE): `eventId` need only be
-    * unique PER KEY, not globally — sources that stamp per-partition or
-    * per-entity sequence numbers (the common Kafka layout) are safe,
-    * because the dedup key is the (key, eventId) pair. Two LIVE events on
-    * different keys sharing a sequence number both count; a redelivery is
-    * only absorbed when it repeats both fields, which is what redelivery
-    * means. What the contract still requires: one key must not reuse an
-    * id for two DIFFERENT live events inside the watermark horizon — that
-    * collision is indistinguishable from a redelivery and the second
-    * event is dropped (counts drift down, the exact inversion this
-    * operator exists to prevent — so use a real per-key sequence, not a
-    * timestamp truncation).
-    *
-    * Cost model, stated next to the guarantee: the dedup operator holds
-    * one state row PER EVENT ID inside the watermark horizon — O(events
-    * in the delay window), where the CMS fold alone is O(keys). That is
-    * the honest price of exactly-once-effect over an at-least-once
-    * source, and it is bounded by the watermark (ids older than the
-    * horizon are evicted; a replay arriving later than the horizon is
-    * indistinguishable from a new event — the standard
-    * dropDuplicatesWithinWatermark contract, so choose the delay to
-    * cover the source's redelivery window, e.g. the Kafka transaction
-    * timeout). Use the plain [[cmsFrequency]] when upstream is already
-    * exactly-once or upward drift is acceptable; use this when it isn't.
-    */
-  def cmsFrequencyDeduped(values: Dataset[StampedValue],
-      watermarkDelay: String = "10 seconds",
-      eps: Double = 0.001, confidence: Double = 0.99, seed: Int = 42,
-      ttl: TTLConfig = TTLConfig.NONE): Dataset[CmsSketchRow] = {
-    import values.sparkSession.implicits._
-    val deduped = values
-      .withWatermark("ts", watermarkDelay)
-      .dropDuplicatesWithinWatermark("key", "eventId")
-      .map(v => HashedValue(v.key, v.h))
-    cmsFrequency(deduped, eps, confidence, seed, ttl)
-  }
 
   /** A raw observation on the quantile stream (values, not hashes — rank
     * queries need the actual magnitudes).
@@ -679,8 +646,11 @@ object StatefulOps {
   // dropped by the operator's own late-record filter (the standard
   // event-time contract; choose the delay to cover the source's disorder
   // window). Replay behavior is unchanged from the underlying folds: a
-  // redelivered event inside the horizon re-enters the buffer — compose
-  // with dropDuplicatesWithinWatermark upstream exactly as row 16 does.
+  // redelivered event inside the horizon re-enters the buffer, so a
+  // replay-proof pipeline puts `dropDuplicatesWithinWatermark("userId",
+  // "eventId")` between the caller's `withWatermark("ts", delay)` and the
+  // operator, exactly as row 16 does for the CMS; the dedup state is
+  // O(events in horizon), the same class the buffer already pays.
   // =====================================================================
 
   /** Session conf capping buffered events per key in the buffered-exact
@@ -1045,11 +1015,10 @@ object StatefulOps {
     * per timer pass that folded something). See the section scaladoc for
     * the guarantee/state trade vs [[patternMatchCounts]].
     */
-  def patternMatchCountsExact(events: Dataset[TimedUserEvent],
-      watermark: String = "10 seconds"): Dataset[PatternCount] = {
+  def patternMatchCountsExact(events: Dataset[TimedUserEvent]): Dataset[PatternCount] = {
     import events.sparkSession.implicits._
+    StreamOps.requireWatermark(events, "ts", "patternMatchCountsExact")
     events
-      .withWatermark("ts", watermark)
       .groupByKey(_.userId)
       .transformWithState(new BufferedPatternProcessor(bufferedCap(events.sparkSession)),
         TimeMode.EventTime(), OutputMode.Update())
@@ -1057,10 +1026,10 @@ object StatefulOps {
 
   /** Buffered-exact CUSUM monitor (Update mode). */
   def cusumMonitorExact(events: Dataset[TimedUserEvent], target: Long,
-      threshold: Long, watermark: String = "10 seconds"): Dataset[CusumState] = {
+      threshold: Long): Dataset[CusumState] = {
     import events.sparkSession.implicits._
+    StreamOps.requireWatermark(events, "ts", "cusumMonitorExact")
     events
-      .withWatermark("ts", watermark)
       .groupByKey(_.userId)
       .transformWithState(new BufferedCusumProcessor(target, threshold,
           bufferedCap(events.sparkSession)),
@@ -1070,11 +1039,10 @@ object StatefulOps {
   /** Buffered-exact last-touch attribution (Append mode: each purchase
     * emits exactly once, when the watermark settles it).
     */
-  def lastTouchAttributionExact(events: Dataset[TimedUserEvent],
-      watermark: String = "10 seconds"): Dataset[AttributedPurchaseTs] = {
+  def lastTouchAttributionExact(events: Dataset[TimedUserEvent]): Dataset[AttributedPurchaseTs] = {
     import events.sparkSession.implicits._
+    StreamOps.requireWatermark(events, "ts", "lastTouchAttributionExact")
     events
-      .withWatermark("ts", watermark)
       .groupByKey(_.userId)
       .transformWithState(new BufferedAttributionProcessor(bufferedCap(events.sparkSession)),
         TimeMode.EventTime(), OutputMode.Append())
@@ -1128,121 +1096,27 @@ object StatefulOps {
     }
   }
 
+  /** Re-shape timed-session events onto the buffered skeleton's event
+    * surface. A projection, not a typed `map`: the map would re-serialize
+    * the rows and drop the caller's watermark from `ts`.
+    */
+  private def asUserEvents(events: Dataset[TimedEvent]): Dataset[TimedUserEvent] = {
+    import events.sparkSession.implicits._
+    events.toDF().withColumn("eventType", lit("session")).as[TimedUserEvent]
+  }
+
   /** Buffered-exact sessionization (Append mode: each session emits
     * exactly once, final, when the watermark passes its close). See
     * [[BufferedSessionProcessor]] for the guarantee/state trade vs
     * [[timedSessions]].
     */
-  def timedSessionsExact(events: Dataset[TimedEvent], gapMs: Long,
-      watermark: String = "10 seconds"): Dataset[SessionSummary] = {
+  def timedSessionsExact(events: Dataset[TimedEvent], gapMs: Long): Dataset[SessionSummary] = {
     import events.sparkSession.implicits._
-    events
-      // re-shape onto the buffered skeleton's event surface BEFORE the
-      // watermark so the event-time column survives (a typed map after
-      // withWatermark re-serializes and drops the watermark tag)
-      .map(e => TimedUserEvent(e.ts, e.userId, e.eventId, "session", e.cents))
-      .withWatermark("ts", watermark)
+    StreamOps.requireWatermark(events, "ts", "timedSessionsExact")
+    asUserEvents(events)
       .groupByKey(_.userId)
       .transformWithState(new BufferedSessionProcessor(gapMs,
           bufferedCap(events.sparkSession)),
-        TimeMode.EventTime(), OutputMode.Append())
-  }
-
-  /** Replay-proof buffered-exact sessionization — rows 19–22's replay
-    * caveat ("a redelivered event re-enters the buffer and double-counts;
-    * dedup upstream") shipped as a composition instead of advice, exactly
-    * as [[cmsFrequencyDeduped]] does for the CMS (PARITY row 16):
-    * `dropDuplicatesWithinWatermark` on the (userId, eventId) PAIR runs
-    * upstream of the buffer, so an at-least-once redelivery inside the
-    * watermark horizon is dropped before it can touch a fragment. The
-    * idempotency-token contract and cost model are row 16's verbatim —
-    * eventId unique per key among LIVE events in the horizon, dedup state
-    * O(events in horizon) (the same horizon the buffer already pays, so
-    * the composition roughly doubles rather than changes the state
-    * class). The recipe transfers unchanged to the trio: their inputs
-    * carry the same (userId, eventId, ts) surface.
-    */
-  def timedSessionsExactDeduped(events: Dataset[TimedEvent], gapMs: Long,
-      watermark: String = "10 seconds"): Dataset[SessionSummary] = {
-    import events.sparkSession.implicits._
-    events
-      // ONE watermark feeds both stateful operators (re-stamping after the
-      // dedup trips Spark's redefining-watermark guard), so the re-shape
-      // happens first; dropDuplicatesWithinWatermark on a typed Dataset is
-      // type-preserving, so the processor wires on directly
-      .map(e => TimedUserEvent(e.ts, e.userId, e.eventId, "session", e.cents))
-      .withWatermark("ts", watermark)
-      .dropDuplicatesWithinWatermark("userId", "eventId")
-      .groupByKey(_.userId)
-      .transformWithState(new BufferedSessionProcessor(gapMs,
-          bufferedCap(events.sparkSession)),
-        TimeMode.EventTime(), OutputMode.Append())
-  }
-
-  // ===== replay-proof compositions for the buffered-exact trio =========
-  //
-  // PARITY rows 19-21 carried the same replay caveat row 22 did ("a
-  // redelivered event re-enters the buffer and folds again; dedup
-  // upstream") with the fix left as advice. These three ship it — the
-  // [[timedSessionsExactDeduped]] recipe verbatim, which is itself row
-  // 16's [[cmsFrequencyDeduped]] recipe: ONE watermark stamped up front
-  // feeds both stateful operators, and `dropDuplicatesWithinWatermark` on
-  // the (userId, eventId) PAIR drops an at-least-once redelivery inside
-  // the watermark horizon before it can reach the buffer. The
-  // idempotency-token contract and cost model are row 16's: eventId
-  // unique per key among LIVE events in the horizon, dedup state
-  // O(events in horizon) — the same horizon class the buffer already
-  // pays, so each composition roughly doubles rather than changes the
-  // state bound. The trio's inputs already carry the skeleton's
-  // TimedUserEvent surface, so unlike row 22 no pre-watermark re-shape is
-  // needed.
-  //
-  // Migration note (caveat CLOSED in r18): dropDuplicatesWithinWatermark
-  // has no initial-state hook, so THESE compositions restarted via the
-  // plain `*From` path would begin with an empty dedup table. The
-  // `*ExactDedupedFrom` entry points at the end of this file close that
-  // with a seedable transformWithState dedup ([[SeededDedupProcessor]])
-  // whose absorption table re-arms from the same migration dump —
-  // SeededDedupStreamSpec pins a migrated composition absorbing a
-  // verbatim pre-migration redelivery, with the plain form's re-fold
-  // re-pinned alongside. Within-version restarts of the forms BELOW are
-  // unaffected either way (the dedup operator's state lives in the same
-  // checkpoint and recovers with everything else — spec-pinned).
-
-  /** Replay-proof [[patternMatchCountsExact]] (PARITY row 19). */
-  def patternMatchCountsExactDeduped(events: Dataset[TimedUserEvent],
-      watermark: String = "10 seconds"): Dataset[PatternCount] = {
-    import events.sparkSession.implicits._
-    events
-      .withWatermark("ts", watermark)
-      .dropDuplicatesWithinWatermark("userId", "eventId")
-      .groupByKey(_.userId)
-      .transformWithState(new BufferedPatternProcessor(bufferedCap(events.sparkSession)),
-        TimeMode.EventTime(), OutputMode.Update())
-  }
-
-  /** Replay-proof [[cusumMonitorExact]] (PARITY row 20). */
-  def cusumMonitorExactDeduped(events: Dataset[TimedUserEvent], target: Long,
-      threshold: Long, watermark: String = "10 seconds"): Dataset[CusumState] = {
-    import events.sparkSession.implicits._
-    events
-      .withWatermark("ts", watermark)
-      .dropDuplicatesWithinWatermark("userId", "eventId")
-      .groupByKey(_.userId)
-      .transformWithState(new BufferedCusumProcessor(target, threshold,
-          bufferedCap(events.sparkSession)),
-        TimeMode.EventTime(), OutputMode.Update())
-  }
-
-  /** Replay-proof [[lastTouchAttributionExact]] (PARITY row 21). */
-  def lastTouchAttributionExactDeduped(events: Dataset[TimedUserEvent],
-      watermark: String = "10 seconds"): Dataset[AttributedPurchaseTs] = {
-    import events.sparkSession.implicits._
-    events
-      .withWatermark("ts", watermark)
-      .dropDuplicatesWithinWatermark("userId", "eventId")
-      .groupByKey(_.userId)
-      .transformWithState(new BufferedAttributionProcessor(bufferedCap(events.sparkSession)),
         TimeMode.EventTime(), OutputMode.Append())
   }
 
@@ -1272,15 +1146,16 @@ object StatefulOps {
   // invariant is against the new query's own monotone watermark) — but a
   // bit-exact handover additionally requires the resumed source not to
   // replay pre-offset rows (step 3), exactly as within-version restarts
-  // require.
+  // require. A replay-proof migrated pipeline feeds the `*From` entry
+  // point through [[seededDedup]], which re-arms the dedup absorption
+  // table from the same dump.
 
   /** [[patternMatchCountsExact]] bootstrapped from dumped state. */
   def patternMatchCountsExactFrom(events: Dataset[TimedUserEvent],
-      initial: Dataset[BufferedSnapshot[(Long, Long, Long)]],
-      watermark: String = "10 seconds"): Dataset[PatternCount] = {
+      initial: Dataset[BufferedSnapshot[(Long, Long, Long)]]): Dataset[PatternCount] = {
     import events.sparkSession.implicits._
+    StreamOps.requireWatermark(events, "ts", "patternMatchCountsExactFrom")
     events
-      .withWatermark("ts", watermark)
       .groupByKey(_.userId)
       .transformWithState(new BufferedPatternProcessor(bufferedCap(events.sparkSession)),
         TimeMode.EventTime(), OutputMode.Update(), initial.groupByKey(_.userId))
@@ -1288,11 +1163,10 @@ object StatefulOps {
 
   /** [[cusumMonitorExact]] bootstrapped from dumped state. */
   def cusumMonitorExactFrom(events: Dataset[TimedUserEvent], target: Long,
-      threshold: Long, initial: Dataset[BufferedSnapshot[(Long, Long, Long)]],
-      watermark: String = "10 seconds"): Dataset[CusumState] = {
+      threshold: Long, initial: Dataset[BufferedSnapshot[(Long, Long, Long)]]): Dataset[CusumState] = {
     import events.sparkSession.implicits._
+    StreamOps.requireWatermark(events, "ts", "cusumMonitorExactFrom")
     events
-      .withWatermark("ts", watermark)
       .groupByKey(_.userId)
       .transformWithState(new BufferedCusumProcessor(target, threshold,
           bufferedCap(events.sparkSession)),
@@ -1301,11 +1175,10 @@ object StatefulOps {
 
   /** [[lastTouchAttributionExact]] bootstrapped from dumped state. */
   def lastTouchAttributionExactFrom(events: Dataset[TimedUserEvent],
-      initial: Dataset[BufferedSnapshot[(Long, Long, String)]],
-      watermark: String = "10 seconds"): Dataset[AttributedPurchaseTs] = {
+      initial: Dataset[BufferedSnapshot[(Long, Long, String)]]): Dataset[AttributedPurchaseTs] = {
     import events.sparkSession.implicits._
+    StreamOps.requireWatermark(events, "ts", "lastTouchAttributionExactFrom")
     events
-      .withWatermark("ts", watermark)
       .groupByKey(_.userId)
       .transformWithState(new BufferedAttributionProcessor(bufferedCap(events.sparkSession)),
         TimeMode.EventTime(), OutputMode.Append(), initial.groupByKey(_.userId))
@@ -1323,31 +1196,26 @@ object StatefulOps {
     * session round-trip spec.
     */
   def timedSessionsExactFrom(events: Dataset[TimedEvent], gapMs: Long,
-      initial: Dataset[BufferedSnapshot[Seq[(Long, Long, Long, Long)]]],
-      watermark: String = "10 seconds"): Dataset[SessionSummary] = {
+      initial: Dataset[BufferedSnapshot[Seq[(Long, Long, Long, Long)]]]): Dataset[SessionSummary] = {
     import events.sparkSession.implicits._
-    events
-      // same pre-watermark re-shape as timedSessionsExact (the event-time
-      // column must survive onto the buffered skeleton's surface)
-      .map(e => TimedUserEvent(e.ts, e.userId, e.eventId, "session", e.cents))
-      .withWatermark("ts", watermark)
+    StreamOps.requireWatermark(events, "ts", "timedSessionsExactFrom")
+    asUserEvents(events)
       .groupByKey(_.userId)
       .transformWithState(new BufferedSessionProcessor(gapMs,
           bufferedCap(events.sparkSession)),
         TimeMode.EventTime(), OutputMode.Append(), initial.groupByKey(_.userId))
   }
 
-  // ===== migration × dedup: seedable dedup + *ExactDedupedFrom (r18) ===
+  // ===== migration × dedup: the seedable dedup stage (r18) =============
   //
-  // The section above (rows 19-22's compositions) stated one residual
-  // caveat: `dropDuplicatesWithinWatermark` has no initial-state hook, so
-  // a composition restarted VIA MIGRATION began with an empty dedup table
-  // and a redelivery of a pre-migration buffered event inside the first
-  // watermark horizon would fold again. These entry points close that
-  // caveat with code: the dedup stage is a transformWithState processor
-  // — which HAS an initial-state hook — keyed on the (userId, eventId)
-  // idempotency pair, seeded from the SAME migration dump the buffered
-  // operator bootstraps from. The dump's buffered events are exactly the
+  // `dropDuplicatesWithinWatermark` has no initial-state hook, so a
+  // replay-proof pipeline restarted VIA MIGRATION would begin with an
+  // empty dedup table, and a redelivery of a pre-migration buffered event
+  // inside the first watermark horizon would fold again. [[seededDedup]]
+  // closes that with a transformWithState dedup stage — which HAS an
+  // initial-state hook — keyed on the (userId, eventId) idempotency pair
+  // and seeded from the SAME migration dump the buffered operator
+  // bootstraps from. The dump's buffered events are exactly the
   // in-horizon set (everything settled has ts <= the old watermark and
   // everything later is still in the buffer), so seeding one dedup token
   // per buffered event re-arms precisely the absorption the old
@@ -1384,25 +1252,26 @@ object StatefulOps {
   /** The seedable transformWithState twin of
     * `dropDuplicatesWithinWatermark("userId", "eventId")` — same
     * idempotency-token contract (eventId unique per key among LIVE events
-    * in the horizon, see [[cmsFrequencyDeduped]]), same state class (one
-    * row per (userId, eventId) inside the watermark horizon), same
-    * eviction (a token clears when the watermark passes its event's ts by
-    * the full delay — Spark's own `getDelayMs` on the same interval
-    * string the watermark was declared with, so token lifetime ==
-    * dropDuplicatesWithinWatermark's "kept for at least the delay"
-    * contract). What it adds: `handleInitialState` — a migration dump can
-    * re-arm the absorption table, which the built-in operator cannot.
+    * in the horizon, see [[StampedValue]]), same state class (one row per
+    * (userId, eventId) inside the watermark horizon), same eviction (a
+    * token clears when the watermark passes its event's ts by the full
+    * delay, so token lifetime == dropDuplicatesWithinWatermark's "kept
+    * for at least the delay" contract). What it adds:
+    * `handleInitialState` — a migration dump can re-arm the absorption
+    * table, which the built-in operator cannot.
     *
     * Keyed on the PAIR so the initial state lands exactly one call per
     * token; the first live occurrence passes through (first-wins, like
     * the built-in), every later one inside the horizon drops. A
     * redelivery arriving AFTER the horizon is dropped by the downstream
     * buffered operator's own late filter (its ts is <= the watermark by
-    * then), so absorption holds across the full timeline.
+    * then), so absorption holds across the full timeline. Rows pass
+    * through untyped, so one stage serves both event surfaces
+    * ([[TimedUserEvent]] and [[TimedEvent]]).
     */
   final class SeededDedupProcessor(horizonMs: Long)
       extends org.apache.spark.sql.streaming.StatefulProcessorWithInitialState[
-        (Long, Long), TimedUserEvent, TimedUserEvent, DedupSeed] {
+        (Long, Long), Row, Row, DedupSeed] {
     @transient private var seen: ValueState[Long] = _
 
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
@@ -1411,13 +1280,14 @@ object StatefulOps {
 
     override def handleInputRows(
         key: (Long, Long),
-        rows: Iterator[TimedUserEvent],
-        timerValues: TimerValues): Iterator[TimedUserEvent] = {
+        rows: Iterator[Row],
+        timerValues: TimerValues): Iterator[Row] = {
       if (seen.exists() || rows.isEmpty) Iterator.empty
       else {
         val first = rows.next() // first-wins; the rest of the batch drops
-        seen.update(first.ts.getTime)
-        getHandle.registerTimer(first.ts.getTime + horizonMs)
+        val tsMs = first.getAs[java.sql.Timestamp]("ts").getTime
+        seen.update(tsMs)
+        getHandle.registerTimer(tsMs + horizonMs)
         Iterator.single(first)
       }
     }
@@ -1425,8 +1295,7 @@ object StatefulOps {
     override def handleExpiredTimer(
         key: (Long, Long),
         timerValues: TimerValues,
-        expiredTimerInfo: org.apache.spark.sql.streaming.ExpiredTimerInfo)
-        : Iterator[TimedUserEvent] = {
+        expiredTimerInfo: org.apache.spark.sql.streaming.ExpiredTimerInfo): Iterator[Row] = {
       seen.clear() // past the horizon the late filter takes over
       Iterator.empty
     }
@@ -1454,86 +1323,22 @@ object StatefulOps {
     snap.flatMap(s => s.buffer.map(e => DedupSeed(s.userId, e._2, e._1)))
   }
 
-  /** The watermark delay in ms, by Spark's own interval arithmetic — the
-    * dedup token lifetime must equal the declared watermark horizon.
+  /** The migrated replay-proof dedup stage: drop redeliveries on the
+    * (userId, eventId) pair of a watermarked event stream, with the
+    * absorption table seeded from the migration dump `initial` — feed the
+    * result to the matching `*ExactFrom` with the same dump. The token
+    * horizon is the watermark delay the caller declared on `ts`, so no
+    * delay argument is needed; survivors keep their type and re-declare
+    * `ts` as the event-time column for the downstream operator.
     */
-  private def delayMs(watermark: String): Long = {
-    import org.apache.spark.unsafe.types.UTF8String
-    org.apache.spark.sql.catalyst.plans.logical.EventTimeWatermark.getDelayMs(
-      org.apache.spark.sql.catalyst.util.IntervalUtils.stringToInterval(
-        UTF8String.fromString(watermark)))
-  }
-
-  /** The shared wiring of the four `*ExactDedupedFrom` entry points:
-    * watermark → seeded dedup (pair-keyed, event-time re-declared) →
-    * per-user grouping, ready for the buffered processor + its own
-    * initial state.
-    */
-  private def dedupedFromStream[S](events: Dataset[TimedUserEvent],
-      initial: Dataset[BufferedSnapshot[S]], watermark: String)
-      : org.apache.spark.sql.KeyValueGroupedDataset[Long, TimedUserEvent] = {
+  def seededDedup[T, S](events: Dataset[T], initial: Dataset[BufferedSnapshot[S]]): Dataset[T] = {
     import events.sparkSession.implicits._
-    events
-      .withWatermark("ts", watermark)
-      .groupByKey(e => (e.userId, e.eventId))
-      .transformWithState(new SeededDedupProcessor(delayMs(watermark)),
-        "ts", OutputMode.Append(),
+    val horizonMs = StreamOps.requireWatermark(events, "ts", "seededDedup")
+    implicit val rows: Encoder[Row] = Encoders.row(events.schema)
+    events.toDF()
+      .groupByKey(r => (r.getAs[Long]("userId"), r.getAs[Long]("eventId")))
+      .transformWithState(new SeededDedupProcessor(horizonMs), "ts", OutputMode.Append(),
         dedupSeeds(initial).groupByKey(s => (s.userId, s.eventId)))
-      .groupByKey(_.userId)
-  }
-
-  /** [[patternMatchCountsExactDeduped]] bootstrapped from dumped state —
-    * buffer, fold state, timers AND the dedup absorption table (PARITY
-    * row 19's migration note).
-    */
-  def patternMatchCountsExactDedupedFrom(events: Dataset[TimedUserEvent],
-      initial: Dataset[BufferedSnapshot[(Long, Long, Long)]],
-      watermark: String = "10 seconds"): Dataset[PatternCount] = {
-    import events.sparkSession.implicits._
-    dedupedFromStream(events, initial, watermark)
-      .transformWithState(new BufferedPatternProcessor(bufferedCap(events.sparkSession)),
-        TimeMode.EventTime(), OutputMode.Update(), initial.groupByKey(_.userId))
-  }
-
-  /** [[cusumMonitorExactDeduped]] bootstrapped from dumped state (PARITY
-    * row 20's migration note).
-    */
-  def cusumMonitorExactDedupedFrom(events: Dataset[TimedUserEvent],
-      target: Long, threshold: Long,
-      initial: Dataset[BufferedSnapshot[(Long, Long, Long)]],
-      watermark: String = "10 seconds"): Dataset[CusumState] = {
-    import events.sparkSession.implicits._
-    dedupedFromStream(events, initial, watermark)
-      .transformWithState(new BufferedCusumProcessor(target, threshold,
-          bufferedCap(events.sparkSession)),
-        TimeMode.EventTime(), OutputMode.Update(), initial.groupByKey(_.userId))
-  }
-
-  /** [[lastTouchAttributionExactDeduped]] bootstrapped from dumped state
-    * (PARITY row 21's migration note).
-    */
-  def lastTouchAttributionExactDedupedFrom(events: Dataset[TimedUserEvent],
-      initial: Dataset[BufferedSnapshot[(Long, Long, String)]],
-      watermark: String = "10 seconds"): Dataset[AttributedPurchaseTs] = {
-    import events.sparkSession.implicits._
-    dedupedFromStream(events, initial, watermark)
-      .transformWithState(new BufferedAttributionProcessor(bufferedCap(events.sparkSession)),
-        TimeMode.EventTime(), OutputMode.Append(), initial.groupByKey(_.userId))
-  }
-
-  /** [[timedSessionsExactDeduped]] bootstrapped from dumped state (PARITY
-    * row 22's migration note). Same pre-watermark re-shape as
-    * [[timedSessionsExactFrom]].
-    */
-  def timedSessionsExactDedupedFrom(events: Dataset[TimedEvent], gapMs: Long,
-      initial: Dataset[BufferedSnapshot[Seq[(Long, Long, Long, Long)]]],
-      watermark: String = "10 seconds"): Dataset[SessionSummary] = {
-    import events.sparkSession.implicits._
-    val shaped =
-      events.map(e => TimedUserEvent(e.ts, e.userId, e.eventId, "session", e.cents))
-    dedupedFromStream(shaped, initial, watermark)
-      .transformWithState(new BufferedSessionProcessor(gapMs,
-          bufferedCap(events.sparkSession)),
-        TimeMode.EventTime(), OutputMode.Append(), initial.groupByKey(_.userId))
+      .as[T](events.encoder)
   }
 }

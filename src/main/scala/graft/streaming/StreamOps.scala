@@ -1,38 +1,47 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.catalyst.plans.logical.EventTimeWatermark
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Structured-Streaming operator surface (SURVEY.md §2C streaming row):
-  * watermarked tumbling/sliding/session windows, streaming dedup, stateful
-  * per-key aggregation (the reference's latent AlertSummary,
-  * protos/sensor_event.proto:75-77 + B1 time bucketing), and stream-static
-  * enrichment (B3 ip-lookup shape: dedup the key set, broadcast-join back).
+  * watermarked tumbling and session windows, streaming dedup, keyed state
+  * accumulators, stream-stream joins and stream-static enrichment (B3
+  * ip-lookup shape: dedup the key set, broadcast-join back).
   *
-  * State discipline at 100 TB (SURVEY.md §7.4 hard-part 5): every
-  * window/dedup op here requires a watermark, so their state is bounded.
-  * The explicit mapGroupsWithState accumulators accept an opt-in
-  * processing-time `stateTtl` that reaps idle keys (expired keys emit a
-  * final row and are removed) — production deployments SHOULD set it, since
-  * without a TTL their state grows with the number of keys ever seen. (The
-  * TTL is opt-in because ProcessingTimeTimeout makes the query run
-  * continuous timeout-check batches, which test harnesses built on
-  * processAllAvailable cannot drain.) Keys are the shuffle partitioning,
-  * so state scales horizontally with executors.
+  * Event time is declared once, by the caller, with Spark's own
+  * `withWatermark`; the operators here run on that watermarked input and
+  * neither take nor stamp a watermark, so they chain: the reference's
+  * AlertSummary intent (protos/sensor_event.proto:75-77 + B1 bucketing)
+  * is `tumblingCounts(streamingDedup(...), ...)`. [[streamingDedup]] is
+  * the one exception — it heads every at-least-once chain and declares
+  * the watermark itself. An operator whose state Spark would let grow
+  * without a watermark fails at plan build with a named error instead.
+  * Keys are the shuffle partitioning, so state scales horizontally with
+  * executors.
   */
 object StreamOps {
 
+  /** The watermark delay (ms) that `withWatermark` declared on `tsCol`,
+    * read from the metadata Spark stamps on the event-time column. A
+    * streaming input without one fails here, naming the operator: Spark
+    * would accept it and keep the operator's state forever.
+    */
+  private[streaming] def requireWatermark(df: Dataset[_], tsCol: String, op: String): Long = {
+    val md = df.schema(tsCol).metadata
+    if (md.contains(EventTimeWatermark.delayKey)) md.getLong(EventTimeWatermark.delayKey)
+    else if (!df.isStreaming) 0L
+    else throw new IllegalArgumentException(
+      s"$op: column '$tsCol' carries no event-time watermark; declare it upstream with " +
+        s"withWatermark(\"$tsCol\", <delay>), or the operator's state is never evicted")
+  }
+
   /** Tumbling-window counts with late-data drop. */
-  def tumblingCounts(
-      events: DataFrame,
-      tsCol: String,
-      width: String,
-      watermark: String,
-      keyCols: String*): DataFrame = {
+  def tumblingCounts(events: DataFrame, tsCol: String, width: String, keyCols: String*): DataFrame = {
+    requireWatermark(events, tsCol, "tumblingCounts")
     val keyed = keyCols.map(col)
     events
-      .withWatermark(tsCol, watermark)
       .groupBy(window(col(tsCol), width) +: keyed: _*)
       .agg(count(lit(1)).as("n"))
       .select(
@@ -40,29 +49,10 @@ object StreamOps {
           keyed :+ col("n")): _*)
   }
 
-  /** Sliding-window counts (width, slide). */
-  def slidingCounts(
-      events: DataFrame,
-      tsCol: String,
-      width: String,
-      slide: String,
-      watermark: String): DataFrame =
-    events
-      .withWatermark(tsCol, watermark)
-      .groupBy(window(col(tsCol), width, slide))
-      .agg(count(lit(1)).as("n"))
-      .select(col("window.start").as("window_start"), col("window.end").as("window_end"), col("n"))
-
   /** Session windows: rows gapped less than `gap` merge into one session. */
-  def sessionCounts(
-      events: DataFrame,
-      tsCol: String,
-      gap: String,
-      watermark: String,
-      keyCols: String*): DataFrame = {
+  def sessionCounts(events: DataFrame, tsCol: String, gap: String, keyCols: String*): DataFrame = {
     val keyed = keyCols.map(col)
     events
-      .withWatermark(tsCol, watermark)
       .groupBy(session_window(col(tsCol), gap) +: keyed: _*)
       .agg(count(lit(1)).as("n"))
       .select(
@@ -93,85 +83,11 @@ object StreamOps {
     * shuffle join per micro-batch — the same two-phase discipline as the
     * batch query's scaladoc).
     */
-  def incrementalDedup(
-      stream: DataFrame,
-      corpusHashes: DataFrame,
-      textCol: String,
-      tsCol: String,
-      watermark: String): DataFrame =
+  def incrementalDedup(stream: DataFrame, corpusHashes: DataFrame, textCol: String): DataFrame =
     stream
       .withColumn("h", md5(col(textCol).cast("binary")))
       .join(corpusHashes, Seq("h"), "left_anti")
-      .withWatermark(tsCol, watermark)
       .dropDuplicatesWithinWatermark("h")
-
-  /** Running per-sensor alert totals — the reference's AlertSummary intent
-    * as an explicit `mapGroupsWithState` accumulator (update-mode output:
-    * one (sensor_id, total) row per group per trigger).
-    *
-    * State lifecycle: a processing-time TTL expires idle keys (state is
-    * removed and a final row emitted), keeping the store bounded by the
-    * number of ACTIVE sensors rather than all sensors ever seen.
-    */
-  final case class AlertCount(sensorId: String, total: Long)
-
-  def alertSummary(
-      alerts: Dataset[(String, Long)],
-      stateTtl: Option[String] = None): Dataset[AlertCount] = {
-    import alerts.sparkSession.implicits._
-    val timeoutConf =
-      if (stateTtl.isDefined) GroupStateTimeout.ProcessingTimeTimeout
-      else GroupStateTimeout.NoTimeout
-    alerts
-      .groupByKey(_._1)
-      .mapGroupsWithState[Long, AlertCount](timeoutConf) {
-        (sensorId: String, rows: Iterator[(String, Long)], state: GroupState[Long]) =>
-          if (state.hasTimedOut) {
-            val finalTotal = state.getOption.getOrElse(0L)
-            state.remove()
-            AlertCount(sensorId, finalTotal)
-          } else {
-            val total = state.getOption.getOrElse(0L) + rows.map(_._2).sum
-            state.update(total)
-            stateTtl.foreach(state.setTimeoutDuration)
-            AlertCount(sensorId, total)
-          }
-      }
-  }
-
-  /** The reference's full latent AlertSummary intent (AlertSummary proto +
-    * B1 time bucketing): running totals keyed by (sensor, time bucket).
-    * Input rows: (sensorId, epochSeconds, count).
-    */
-  final case class AlertSummaryRow(sensorId: String, bucketStart: Long, totalAlerts: Long)
-
-  def alertSummaryBucketed(
-      alerts: Dataset[(String, Long, Long)],
-      bucketSeconds: Long,
-      stateTtl: Option[String] = None): Dataset[AlertSummaryRow] = {
-    import alerts.sparkSession.implicits._
-    val timeoutConf =
-      if (stateTtl.isDefined) GroupStateTimeout.ProcessingTimeTimeout
-      else GroupStateTimeout.NoTimeout
-    alerts
-      .groupByKey { case (sensor, epochS, _) =>
-        (sensor, epochS - Math.floorMod(epochS, bucketSeconds))
-      }
-      .mapGroupsWithState[Long, AlertSummaryRow](timeoutConf) {
-        case ((sensor, bucket), rows, state) =>
-          if (state.hasTimedOut) {
-            val finalTotal = state.getOption.getOrElse(0L)
-            state.remove()
-            AlertSummaryRow(sensor, bucket, finalTotal)
-          } else {
-            val total = state.getOption.getOrElse(0L) + rows.map(_._3).sum
-            state.update(total)
-            // old buckets go idle once the stream moves on; the TTL reaps them
-            stateTtl.foreach(state.setTimeoutDuration)
-            AlertSummaryRow(sensor, bucket, total)
-          }
-      }
-  }
 
   /** One CDC change record: `op` is "U" (upsert) or "D" (delete tombstone);
     * (tsUs, eventId) is the total version order. */
@@ -225,7 +141,7 @@ object StreamOps {
     * (e.g. alert events with their later acknowledgements) where the right
     * row must land within [left.ts, left.ts + maxLag].
     *
-    * State discipline at 100 TB: both watermarks plus the time-range
+    * State discipline at 100 TB: both sides' watermarks plus the time-range
     * predicate are what make the join's buffered state BOUNDED — Spark
     * evicts a buffered row once the other side's watermark passes its
     * join-window end. An equi-key alone would buffer both streams forever.
@@ -240,21 +156,19 @@ object StreamOps {
   def streamStreamJoin(
       left: DataFrame,
       leftTs: String,
-      leftWatermark: String,
       right: DataFrame,
       rightTs: String,
-      rightWatermark: String,
       key: String,
       maxLag: String,
       joinType: String = "inner",
       rightPrefix: String = "r_"): DataFrame = {
-    val l = left.withWatermark(leftTs, leftWatermark)
-    val r0 = right.withWatermark(rightTs, rightWatermark)
-    val r = r0.columns.foldLeft(r0)((df, c) => df.withColumnRenamed(c, rightPrefix + c))
-    val cond = l(key) === r(rightPrefix + key) &&
-      r(rightPrefix + rightTs) >= l(leftTs) &&
-      r(rightPrefix + rightTs) <= l(leftTs) + expr(s"INTERVAL $maxLag")
-    l.join(r, cond, joinType)
+    requireWatermark(left, leftTs, "streamStreamJoin")
+    requireWatermark(right, rightTs, "streamStreamJoin")
+    val r = right.columns.foldLeft(right)((df, c) => df.withColumnRenamed(c, rightPrefix + c))
+    val cond = left(key) === r(rightPrefix + key) &&
+      r(rightPrefix + rightTs) >= left(leftTs) &&
+      r(rightPrefix + rightTs) <= left(leftTs) + expr(s"INTERVAL $maxLag")
+    left.join(r, cond, joinType)
   }
 
   /** Stream-static enrichment, B3 shape: the stream side keeps its
@@ -361,11 +275,10 @@ object StreamOps {
     * fixed-size bar state, no sort, no per-bar buffering of events.
     */
   def ohlcBars(events: DataFrame, tsCol: String, keyCol: String,
-      eventIdCol: String, centsCol: String,
-      windowDur: String = "1 day", watermark: String = "1 hour"): DataFrame = {
+      eventIdCol: String, centsCol: String, windowDur: String = "1 day"): DataFrame = {
+    requireWatermark(events, tsCol, "ohlcBars")
     val pick = struct(col(tsCol), col(eventIdCol))
     events
-      .withWatermark(tsCol, watermark)
       .groupBy(col(keyCol), window(col(tsCol), windowDur).as("w"))
       .agg(
         min_by(col(centsCol), pick).as("open_cents"),

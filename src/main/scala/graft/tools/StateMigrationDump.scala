@@ -17,7 +17,7 @@ import org.apache.spark.sql.SparkSession
   * {{{
   * val snap = spark.read.parquet(outDir)
   *   .as[StatefulOps.BufferedSnapshot[(Long, Long, Long)]]   // cep / cusum
-  * StatefulOps.patternMatchCountsExactFrom(source, snap, watermark)
+  * StatefulOps.patternMatchCountsExactFrom(source.withWatermark("ts", delay), snap)
   *   .writeStream.option("checkpointLocation", FRESH_CKPT)...
   * }}}
   *

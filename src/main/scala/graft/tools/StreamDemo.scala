@@ -7,8 +7,9 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 
 /** Runnable streaming driver: a real file-source stream of the testdata
-  * events through the watermarked tumbling-window operator, then the full
-  * Snort pipeline through the foreachBatch sink with a stdout writer.
+  * events through streaming dedup chained into the tumbling-window
+  * operator on the dedup's watermark, then the full Snort pipeline through
+  * the foreachBatch sink with a stdout writer.
   *
   * Usage: sbt "runMain graft.tools.StreamDemo [sfDir]"
   */
@@ -28,7 +29,9 @@ object StreamDemo {
     val stream = spark.readStream
       .schema("ts timestamp, event_id bigint, event_type string, user_id bigint")
       .json(stage)
-    val counts = StreamOps.tumblingCounts(stream, "ts", "6 hours", "1 hour", "event_type")
+    // one watermark, declared by the dedup, bounds both operators' state
+    val counts = StreamOps.tumblingCounts(
+      StreamOps.streamingDedup(stream, "ts", "1 hour", "event_id"), "ts", "6 hours", "event_type")
     StreamOps.runToMemory(counts, "stream_counts", OutputMode.Append)
     val out = spark.table("stream_counts")
     println(s"[stream] windows=${out.count()}")
@@ -54,15 +57,18 @@ object StreamDemo {
           .agg(max(col("nRows")).as("rows"), max(col("est")).as("distinct_est"))
           .orderBy(col("key")).show(8, truncate = false)
 
-        // replay-proof frequency: dropDuplicatesWithinWatermark(eventId)
-        // upstream of the CMS fold — the composed exactly-once-effect
-        // pipeline (a redelivered event never touches a counter)
-        val stamped = stream
+        // replay-proof frequency: dropDuplicatesWithinWatermark on the
+        // (key, eventId) pair upstream of the CMS fold — the composed
+        // exactly-once-effect pipeline (a redelivered event never touches
+        // a counter)
+        val deduped = stream
           .select(col("ts"), col("event_id").as("eventId"),
             col("event_type").as("key"), xxhash64(col("user_id")).as("h"))
           .as[graft.streaming.StatefulOps.StampedValue]
-        val cms = graft.streaming.StatefulOps
-          .cmsFrequencyDeduped(stamped, watermarkDelay = "1 hour")
+          .withWatermark("ts", "1 hour")
+          .dropDuplicatesWithinWatermark("key", "eventId")
+          .map(v => graft.streaming.StatefulOps.HashedValue(v.key, v.h))
+        val cms = graft.streaming.StatefulOps.cmsFrequency(deduped)
           .toDF().select(col("key"), col("nRows"))
         StreamOps.runToMemory(cms, "stream_cms", OutputMode.Update)
         println("[sketch] per-type deduped CMS fold (rows reaching the counters):")

@@ -60,6 +60,13 @@ class BufferedExactStreamSpec extends SparkSpec {
       spark.table(name)
     }
 
+  /** The replay-proof composition: the caller's one watermark, then
+    * `dropDuplicatesWithinWatermark` on the (userId, eventId) pair
+    * upstream of the buffered operator.
+    */
+  private def replayProof(ds: org.apache.spark.sql.Dataset[TimedUserEvent], delay: String) =
+    ds.withWatermark("ts", delay).dropDuplicatesWithinWatermark("userId", "eventId")
+
   // ---- batch truths (independent reimplementations) ----
 
   private def sortEvents(evs: Seq[TimedUserEvent]): Seq[TimedUserEvent] =
@@ -131,7 +138,7 @@ class BufferedExactStreamSpec extends SparkSpec {
 
   test("buffered CEP matches the batch regex scan under reversed cross-batch arrival") {
     val rows = run(batches, "bx_cep", OutputMode.Update, 200000L)(
-      StatefulOps.patternMatchCountsExact(_, watermark = "60 seconds"))
+      ds => StatefulOps.patternMatchCountsExact(ds.withWatermark("ts", "60 seconds")))
       .as[PatternCount].collect().toSeq
       .groupBy(_.userId).map { case (u, rs) => u -> rs.maxBy(_.nEvents) }
     users.foreach { case (u, evs) =>
@@ -146,7 +153,7 @@ class BufferedExactStreamSpec extends SparkSpec {
   test("buffered CUSUM latches the batch alarm id under reversed cross-batch arrival") {
     val (target, threshold) = (20L, 100L)
     val rows = run(batches, "bx_cusum", OutputMode.Update, 200000L)(
-      StatefulOps.cusumMonitorExact(_, target, threshold, watermark = "60 seconds"))
+      ds => StatefulOps.cusumMonitorExact(ds.withWatermark("ts", "60 seconds"), target, threshold))
       .as[CusumState].collect().toSeq
       .groupBy(_.userId).map { case (u, rs) => u -> rs.maxBy(_.nEvents) }
     users.foreach { case (u, evs) =>
@@ -160,7 +167,7 @@ class BufferedExactStreamSpec extends SparkSpec {
 
   test("buffered attribution credits the touch that arrived after its purchase") {
     val rows = run(batches, "bx_attr", OutputMode.Append, 200000L)(
-      StatefulOps.lastTouchAttributionExact(_, watermark = "60 seconds"))
+      ds => StatefulOps.lastTouchAttributionExact(ds.withWatermark("ts", "60 seconds")))
       .as[AttributedPurchaseTs].collect().toSeq
       .filter(_.userId != 999L).sortBy(r => (r.userId, r.purchaseEventId))
     val truth = users.values.toSeq.flatMap(attributionTruth)
@@ -174,6 +181,48 @@ class BufferedExactStreamSpec extends SparkSpec {
     assert(rows.map(r => (r.userId, r.purchaseEventId)).distinct.size == rows.size)
   }
 
+  test("un-watermarked input: Spark runs the buffered operator, every entry point fails by name") {
+    import StatefulOps.{BufferedSnapshot, TimedEvent}
+    withRocksDBProvider {
+      val in = MemoryStream[TimedUserEvent](spark)
+      // Spark itself starts the buffered processor without a watermark:
+      // its settle timers never fire, so nothing folds and the buffer
+      // keeps every event
+      val q = in.toDS().groupByKey(_.userId)
+        .transformWithState(new StatefulOps.BufferedPatternProcessor(),
+          org.apache.spark.sql.streaming.TimeMode.EventTime(), OutputMode.Update())
+        .writeStream.outputMode(OutputMode.Update).format("memory")
+        .queryName("bx_unwatermarked").start()
+      in.addData(ev(1L, 10000L, 1L, "view")); q.processAllAvailable()
+      in.addData(ev(9L, 200000L, 2L, "s")); q.processAllAvailable()
+      in.addData(ev(9L, 400000L, 3L, "s")); q.processAllAvailable()
+      q.stop()
+      assert(spark.table("bx_unwatermarked").count() == 0L)
+    }
+    val events = MemoryStream[TimedUserEvent](spark).toDS()
+    val sessions = MemoryStream[TimedEvent](spark).toDS()
+    val counters = spark.emptyDataset[BufferedSnapshot[(Long, Long, Long)]]
+    val touches = spark.emptyDataset[BufferedSnapshot[(Long, Long, String)]]
+    val frags = spark.emptyDataset[BufferedSnapshot[Seq[(Long, Long, Long, Long)]]]
+    def named(op: String)(call: => Any): Unit = {
+      val err = intercept[IllegalArgumentException](call)
+      assert(err.getMessage.startsWith(s"$op: column 'ts' carries no event-time watermark"), err.getMessage)
+    }
+    named("patternMatchCountsExact")(StatefulOps.patternMatchCountsExact(events))
+    named("cusumMonitorExact")(StatefulOps.cusumMonitorExact(events, 20L, 100L))
+    named("lastTouchAttributionExact")(StatefulOps.lastTouchAttributionExact(events))
+    named("timedSessionsExact")(StatefulOps.timedSessionsExact(sessions, 5000L))
+    named("patternMatchCountsExactFrom")(StatefulOps.patternMatchCountsExactFrom(events, counters))
+    named("cusumMonitorExactFrom")(StatefulOps.cusumMonitorExactFrom(events, 20L, 100L, counters))
+    named("lastTouchAttributionExactFrom")(StatefulOps.lastTouchAttributionExactFrom(events, touches))
+    named("timedSessionsExactFrom")(StatefulOps.timedSessionsExactFrom(sessions, 5000L, frags))
+    named("seededDedup")(StatefulOps.seededDedup(events, counters))
+    // the watermarked forms build
+    StatefulOps.patternMatchCountsExactFrom(
+      StatefulOps.seededDedup(events.withWatermark("ts", "10 seconds"), counters), counters)
+    StatefulOps.timedSessionsExact(sessions.withWatermark("ts", "10 seconds"), 5000L)
+  }
+
   test("buffer state drains once the watermark settles its events (the O(horizon) bound's eviction half)") {
     // 200 events for one user inside [10s, 12s), delay 5s: while the
     // watermark sits below the band the buffer ValueState row holds all
@@ -184,7 +233,7 @@ class BufferedExactStreamSpec extends SparkSpec {
     // per key), so the drain signal is the buffer/timer rows vanishing.
     withRocksDBProvider {
       val in = MemoryStream[TimedUserEvent](spark)
-      val q = StatefulOps.patternMatchCountsExact(in.toDS(), watermark = "5 seconds")
+      val q = StatefulOps.patternMatchCountsExact(in.toDS().withWatermark("ts", "5 seconds"))
         .writeStream.outputMode(OutputMode.Update).format("memory")
         .queryName("bx_soak").start()
       val evs = (0 until 200).map(i => ev(6L, 10000L + i * 10, i.toLong, "view"))
@@ -230,7 +279,7 @@ class BufferedExactStreamSpec extends SparkSpec {
     // after settling.
     withRocksDBProvider {
       val in = MemoryStream[TimedUserEvent](spark)
-      val q = StatefulOps.patternMatchCountsExact(in.toDS(), watermark = "5 seconds")
+      val q = StatefulOps.patternMatchCountsExact(in.toDS().withWatermark("ts", "5 seconds"))
         .writeStream.outputMode(OutputMode.Update).format("memory")
         .queryName("bx_soak50").start()
       val types = Array("view", "click", "purchase", "signup")
@@ -276,7 +325,7 @@ class BufferedExactStreamSpec extends SparkSpec {
     // event slipped into a later cohort
     withRocksDBProvider {
       val in = MemoryStream[TimedUserEvent](spark)
-      val q = StatefulOps.patternMatchCountsExact(in.toDS(), watermark = "10 seconds")
+      val q = StatefulOps.patternMatchCountsExact(in.toDS().withWatermark("ts", "10 seconds"))
         .writeStream.outputMode(OutputMode.Update).format("memory")
         .queryName("bx_boundary").start()
       in.addData(Seq(ev(10L, 20000, 1, "view"), ev(998L, 30000, 900, "s")))
@@ -314,7 +363,7 @@ class BufferedExactStreamSpec extends SparkSpec {
     val out = newDir("graft-bx-out")
     def put(rows: String*): Unit = putJson(in)(rows: _*)
     def startQuery() = withRocksDBProvider {
-      StatefulOps.lastTouchAttributionExact(jsonEventSource(in), watermark = "10 seconds")
+      StatefulOps.lastTouchAttributionExact(jsonEventSource(in).withWatermark("ts", "10 seconds"))
         .writeStream.outputMode(OutputMode.Append).format("parquet")
         .option("path", out).option("checkpointLocation", ckpt)
         .start()
@@ -368,7 +417,7 @@ class BufferedExactStreamSpec extends SparkSpec {
       q1.processAllAvailable()
       q1.stop()
       val err = intercept[Exception] {
-        val q2 = StatefulOps.patternMatchCountsExact(src, watermark = "10 seconds")
+        val q2 = StatefulOps.patternMatchCountsExact(src.withWatermark("ts", "10 seconds"))
           .writeStream.outputMode(OutputMode.Update)
           .foreachBatch((df: org.apache.spark.sql.Dataset[PatternCount], _: Long) =>
             { df.count(); () })
@@ -450,7 +499,7 @@ class BufferedExactStreamSpec extends SparkSpec {
 
       // -- bootstrap a fresh checkpoint and keep consuming --
       val q2 = StatefulOps
-        .patternMatchCountsExactFrom(jsonEventSource(inNew), snap, "10 seconds")
+        .patternMatchCountsExactFrom(jsonEventSource(inNew).withWatermark("ts", "10 seconds"), snap)
         .writeStream.outputMode(OutputMode.Update).format("memory")
         .queryName("bx_migrated")
         .option("checkpointLocation", ckptNew).start()
@@ -483,8 +532,8 @@ class BufferedExactStreamSpec extends SparkSpec {
       val inCu = newDir("graft-bxmig-in3")
       val ckptCu = newDir("graft-bxmig-ckpt3")
       val q3 = StatefulOps
-        .cusumMonitorExactFrom(jsonEventSource(inCu), target = 0L,
-          threshold = 1000L, initial = snap, watermark = "10 seconds")
+        .cusumMonitorExactFrom(jsonEventSource(inCu).withWatermark("ts", "10 seconds"), target = 0L,
+          threshold = 1000L, initial = snap)
         .writeStream.outputMode(OutputMode.Update).format("memory")
         .queryName("bx_migrated_cusum")
         .option("checkpointLocation", ckptCu).start()
@@ -520,7 +569,7 @@ class BufferedExactStreamSpec extends SparkSpec {
     val inNew = newDir("graft-bxcur-in2")
     val ckptNew = newDir("graft-bxcur-ckpt2")
     withRocksDBProvider {
-      val q1 = StatefulOps.patternMatchCountsExact(jsonEventSource(inCur), "10 seconds")
+      val q1 = StatefulOps.patternMatchCountsExact(jsonEventSource(inCur).withWatermark("ts", "10 seconds"))
         .writeStream.outputMode(OutputMode.Update)
         .foreachBatch((df: org.apache.spark.sql.Dataset[PatternCount], _: Long) =>
           { df.count(); () })
@@ -551,8 +600,8 @@ class BufferedExactStreamSpec extends SparkSpec {
         .run(spark, ckptCur, dumpDir, "cep", "current") == 3L) // incl. pusher
 
       val q2 = StatefulOps
-        .patternMatchCountsExactFrom(jsonEventSource(inNew),
-          snap.filter(_.userId != 9L), "10 seconds")
+        .patternMatchCountsExactFrom(jsonEventSource(inNew).withWatermark("ts", "10 seconds"),
+          snap.filter(_.userId != 9L))
         .writeStream.outputMode(OutputMode.Update).format("memory")
         .queryName("bx_cur_migrated")
         .option("checkpointLocation", ckptNew).start()
@@ -587,7 +636,7 @@ class BufferedExactStreamSpec extends SparkSpec {
       "true") {
       withRocksDBProvider {
         val in = MemoryStream[TimedUserEvent](spark)
-        val q = StatefulOps.patternMatchCountsExact(in.toDS(), "10 seconds")
+        val q = StatefulOps.patternMatchCountsExact(in.toDS().withWatermark("ts", "10 seconds"))
           .writeStream.outputMode(OutputMode.Update).format("memory")
           .queryName("bxcl_src").option("checkpointLocation", ckpt).start()
         in.addData(Seq(ev(1L, 5000, 0, "view"), ev(1L, 6000, 1, "click"),
@@ -650,7 +699,7 @@ class BufferedExactStreamSpec extends SparkSpec {
       assert(byUser(4L).folded.isEmpty, s"u4 dump wrong: ${byUser.get(4L)}")
 
       val q2 = StatefulOps
-        .lastTouchAttributionExactFrom(jsonEventSource(inNew), snap, "10 seconds")
+        .lastTouchAttributionExactFrom(jsonEventSource(inNew).withWatermark("ts", "10 seconds"), snap)
         .writeStream.outputMode(OutputMode.Append).format("memory")
         .queryName("bx_migrated_attr")
         .option("checkpointLocation", ckptNew).start()
@@ -694,7 +743,7 @@ class BufferedExactStreamSpec extends SparkSpec {
     val out = run(
       Seq(bandB :+ ev(8L, 29900, 10, "s"), bandA :+ ev(8L, 45000, 11, "s")),
       "bx_stage", OutputMode.Update, 200000L)(
-      StatefulOps.patternMatchCountsExact(_, watermark = "20 seconds"))
+      ds => StatefulOps.patternMatchCountsExact(ds.withWatermark("ts", "20 seconds")))
       .as[PatternCount].collect().toSeq.filter(_.userId == 7L)
     // intermediate pass: a row with ONLY band A folded (2 events, 0
     // matches — v,c leaves an open prefix)
@@ -719,7 +768,7 @@ class BufferedExactStreamSpec extends SparkSpec {
       val bs = (0 until 3).map(i => shuffled.drop(i * all.size / 3)
         .take((i + 1) * all.size / 3 - i * all.size / 3))
       val cep = run(bs, s"bxf_cep_$seed", OutputMode.Update, 200000L)(
-        StatefulOps.patternMatchCountsExact(_, watermark = "60 seconds"))
+        ds => StatefulOps.patternMatchCountsExact(ds.withWatermark("ts", "60 seconds")))
         .as[PatternCount].collect().toSeq
         .groupBy(_.userId).map { case (u, rs) => u -> rs.maxBy(_.nEvents) }
       users.foreach { case (u, evs) =>
@@ -728,14 +777,14 @@ class BufferedExactStreamSpec extends SparkSpec {
           s"seed $seed user $u: got ${cep(u)}, truth ($n, $m)")
       }
       val cus = run(bs, s"bxf_cus_$seed", OutputMode.Update, 200000L)(
-        StatefulOps.cusumMonitorExact(_, 20L, 100L, watermark = "60 seconds"))
+        ds => StatefulOps.cusumMonitorExact(ds.withWatermark("ts", "60 seconds"), 20L, 100L))
         .as[CusumState].collect().toSeq
         .groupBy(_.userId).map { case (u, rs) => u -> rs.maxBy(_.nEvents) }
       users.foreach { case (u, evs) =>
         assert(cus(u) == cusumTruth(evs, 20L, 100L), s"seed $seed user $u cusum")
       }
       val att = run(bs, s"bxf_att_$seed", OutputMode.Append, 200000L)(
-        StatefulOps.lastTouchAttributionExact(_, watermark = "60 seconds"))
+        ds => StatefulOps.lastTouchAttributionExact(ds.withWatermark("ts", "60 seconds")))
         .as[AttributedPurchaseTs].collect().toSeq
         .filter(_.userId != 999L).sortBy(r => (r.userId, r.purchaseEventId))
       val truth = users.values.toSeq.flatMap(attributionTruth)
@@ -753,7 +802,7 @@ class BufferedExactStreamSpec extends SparkSpec {
     spark.conf.set(key, "5")
     try withRocksDBProvider {
       val in = MemoryStream[TimedUserEvent](spark)
-      val q = StatefulOps.patternMatchCountsExact(in.toDS(), watermark = "400 seconds")
+      val q = StatefulOps.patternMatchCountsExact(in.toDS().withWatermark("ts", "400 seconds"))
         .writeStream.outputMode(OutputMode.Update).format("memory")
         .queryName("bx_cap").start()
       val err = intercept[Exception] {
@@ -780,7 +829,7 @@ class BufferedExactStreamSpec extends SparkSpec {
     // the AbBench long-horizon wall-clock win into a regression guard.
     withRocksDBProvider {
       val in = MemoryStream[TimedUserEvent](spark)
-      val q = StatefulOps.patternMatchCountsExact(in.toDS(), watermark = "400 seconds")
+      val q = StatefulOps.patternMatchCountsExact(in.toDS().withWatermark("ts", "400 seconds"))
         .writeStream.outputMode("update").format("memory")
         .queryName("bx_mints").start()
       // two data triggers; max ts 35s - 400s keeps the watermark at 0,
@@ -821,13 +870,13 @@ class BufferedExactStreamSpec extends SparkSpec {
       ev(11L, 12000, 2, "purchase"))
     val batches = Seq(evs, evs) // trigger 2 redelivers trigger 1 verbatim
     val dd = run(batches, "bxr_cep_dd", OutputMode.Update, 200000L)(
-      StatefulOps.patternMatchCountsExactDeduped(_, watermark = "60 seconds"))
+      ds => StatefulOps.patternMatchCountsExact(replayProof(ds, "60 seconds")))
       .as[PatternCount].collect().toSeq.filter(_.userId == 11L).maxBy(_.nEvents)
     val (n, m) = cepTruth(evs)
     assert(dd == PatternCount(11L, n, m),
       s"replayed trigger leaked through the CEP dedup: $dd vs ($n events, $m matches)")
     val plain = run(batches, "bxr_cep_pl", OutputMode.Update, 200000L)(
-      StatefulOps.patternMatchCountsExact(_, watermark = "60 seconds"))
+      ds => StatefulOps.patternMatchCountsExact(ds.withWatermark("ts", "60 seconds")))
       .as[PatternCount].collect().toSeq.filter(_.userId == 11L).maxBy(_.nEvents)
     assert(plain.nEvents == 2L * evs.size,
       s"the plain CEP form's documented double-count contract changed: $plain")
@@ -838,13 +887,13 @@ class BufferedExactStreamSpec extends SparkSpec {
     val evs = Seq(ev(12L, 10000, 0, "signup", 500L), ev(12L, 11000, 1, "signup", 10L))
     val batches = Seq(evs, evs)
     val dd = run(batches, "bxr_cus_dd", OutputMode.Update, 200000L)(
-      StatefulOps.cusumMonitorExactDeduped(_, target, threshold, watermark = "60 seconds"))
+      ds => StatefulOps.cusumMonitorExact(replayProof(ds, "60 seconds"), target, threshold))
       .as[CusumState].collect().toSeq.filter(_.userId == 12L).maxBy(_.nEvents)
     val truth = cusumTruth(evs, target, threshold)
     assert(dd == truth,
       s"replayed trigger leaked through the CUSUM dedup: $dd vs $truth")
     val plain = run(batches, "bxr_cus_pl", OutputMode.Update, 200000L)(
-      StatefulOps.cusumMonitorExact(_, target, threshold, watermark = "60 seconds"))
+      ds => StatefulOps.cusumMonitorExact(ds.withWatermark("ts", "60 seconds"), target, threshold))
       .as[CusumState].collect().toSeq.filter(_.userId == 12L).maxBy(_.nEvents)
     assert(plain.nEvents == 2L * evs.size,
       s"the plain CUSUM form's documented double-count contract changed: $plain")
@@ -854,14 +903,14 @@ class BufferedExactStreamSpec extends SparkSpec {
     val evs = Seq(ev(13L, 10000, 0, "view"), ev(13L, 12000, 1, "purchase", 700L))
     val batches = Seq(evs, evs)
     val dd = run(batches, "bxr_att_dd", OutputMode.Append, 200000L)(
-      StatefulOps.lastTouchAttributionExactDeduped(_, watermark = "60 seconds"))
+      ds => StatefulOps.lastTouchAttributionExact(replayProof(ds, "60 seconds")))
       .as[AttributedPurchaseTs].collect().toSeq.filter(_.userId == 13L)
     assert(dd == attributionTruth(evs),
       s"replayed trigger leaked through the attribution dedup: $dd")
     // plain form: the replayed purchase re-folds and re-emits — the same
     // attribution row TWICE (idempotent value, duplicate row; PARITY row 21)
     val plain = run(batches, "bxr_att_pl", OutputMode.Append, 200000L)(
-      StatefulOps.lastTouchAttributionExact(_, watermark = "60 seconds"))
+      ds => StatefulOps.lastTouchAttributionExact(ds.withWatermark("ts", "60 seconds")))
       .as[AttributedPurchaseTs].collect().toSeq.filter(_.userId == 13L)
     assert(plain.size == 2 && plain.distinct == attributionTruth(evs),
       s"the plain attribution form's documented re-emit contract changed: $plain")
@@ -880,7 +929,7 @@ class BufferedExactStreamSpec extends SparkSpec {
     withRocksDBProvider {
       val ts0 = java.sql.Timestamp.valueOf("2024-01-01 00:00:00").getTime
       val in = MemoryStream[TimedUserEvent](spark)
-      val q = StatefulOps.patternMatchCountsExactDeduped(in.toDS(), watermark = "10 seconds")
+      val q = StatefulOps.patternMatchCountsExact(replayProof(in.toDS(), "10 seconds"))
         .writeStream.outputMode(OutputMode.Update).format("memory")
         .queryName("bx_dedup_soak").start()
       val users = 5
@@ -943,7 +992,7 @@ class BufferedExactStreamSpec extends SparkSpec {
     val out = newDir("graft-bxdd-out")
     def put(rows: String*): Unit = putJson(in)(rows: _*)
     def startQuery() = withRocksDBProvider {
-      StatefulOps.lastTouchAttributionExactDeduped(jsonEventSource(in), watermark = "10 seconds")
+      StatefulOps.lastTouchAttributionExact(replayProof(jsonEventSource(in), "10 seconds"))
         .writeStream.outputMode(OutputMode.Append).format("parquet")
         .option("path", out).option("checkpointLocation", ckpt)
         .start()

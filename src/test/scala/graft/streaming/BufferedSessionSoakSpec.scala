@@ -41,8 +41,7 @@ class BufferedSessionSoakSpec extends SparkSpec {
   test("row-22 soak: state rows plateau at the horizon across 50 triggers, then collapse to zero") {
     withRocksDBProvider {
       val in = MemoryStream[TimedEvent](spark)
-      val q = StatefulOps.timedSessionsExact(in.toDS(), gapMs = gapMs,
-          watermark = "5 seconds")
+      val q = StatefulOps.timedSessionsExact(in.toDS().withWatermark("ts", "5 seconds"), gapMs = gapMs)
         .writeStream.outputMode(OutputMode.Append).format("memory")
         .queryName("bs_soak50").start()
       def stateRows = q.lastProgress.stateOperators.map(_.numRowsTotal).sum
@@ -98,8 +97,7 @@ class BufferedSessionSoakSpec extends SparkSpec {
     val ckpt = newDir("graft-bs-soakinv")
     withRocksDBProvider {
       val in = MemoryStream[TimedEvent](spark)
-      val q = StatefulOps.timedSessionsExact(in.toDS(), gapMs = gapMs,
-          watermark = "5 seconds")
+      val q = StatefulOps.timedSessionsExact(in.toDS().withWatermark("ts", "5 seconds"), gapMs = gapMs)
         .writeStream.outputMode(OutputMode.Append).format("memory")
         .queryName("bs_soakinv").option("checkpointLocation", ckpt).start()
       (0 until 8).foreach { t => in.addData(burst(t)); q.processAllAvailable() }

@@ -46,6 +46,13 @@ class BufferedSessionStreamSpec extends SparkSpec {
   /** Independent batch truth: walk the (ts, eventId)-sorted events, split
     * whenever the next event is more than `gap` past the session's last.
     */
+  /** The replay-proof composition: the caller's one watermark, then
+    * `dropDuplicatesWithinWatermark` on the (userId, eventId) pair
+    * upstream of the buffered operator.
+    */
+  private def replayProof(ds: org.apache.spark.sql.Dataset[TimedEvent], delay: String) =
+    ds.withWatermark("ts", delay).dropDuplicatesWithinWatermark("userId", "eventId")
+
   private def truth(evs: Seq[TimedEvent], gap: Long): Seq[SessionSummary] =
     evs.groupBy(_.userId).toSeq.flatMap { case (uid, es) =>
       val sorted = es.sortBy(e => (e.ts.getTime, e.eventId))
@@ -79,7 +86,7 @@ class BufferedSessionStreamSpec extends SparkSpec {
     val all = u1 ++ u2
     val got = run(Seq(Seq(u1(3), u1(4), u2(1)), Seq(u1(2), u2(2)),
       Seq(u1(0), u1(1), u2(0))), "bs_reversed")(
-      StatefulOps.timedSessionsExact(_, gapMs = 5000L, watermark = "60 seconds"))
+      ds => StatefulOps.timedSessionsExact(ds.withWatermark("ts", "60 seconds"), gapMs = 5000L))
     assert(got == truth(all, 5000L), s"got $got\nexpected ${truth(all, 5000L)}")
   }
 
@@ -96,11 +103,11 @@ class BufferedSessionStreamSpec extends SparkSpec {
     val straggler = ev(3L, 11500L, 2) // within gap of fragment #1 (10s..10s)
     val all = frags :+ straggler
     val exact = run(Seq(frags, Seq(straggler)), "bs_overflow")(
-      StatefulOps.timedSessionsExact(_, gapMs = gap, watermark = "120 seconds"))
+      ds => StatefulOps.timedSessionsExact(ds.withWatermark("ts", "120 seconds"), gapMs = gap))
     assert(exact == truth(all, gap), s"exact form: got $exact\nexpected ${truth(all, gap)}")
     assert(exact.count(_.userId == 3L) == 10L, "straggler must merge, not open an 11th session")
     val bounded = run(Seq(frags, Seq(straggler)), "bs_overflow_bounded")(
-      StatefulOps.timedSessions(_, gapMs = gap, watermark = "120 seconds"))
+      ds => StatefulOps.timedSessions(ds.withWatermark("ts", "120 seconds"), gapMs = gap))
     assert(bounded.count(_.userId == 3L) == 11L,
       s"the bounded sibling should still split under K-overflow (residual contract): $bounded")
   }
@@ -109,7 +116,7 @@ class BufferedSessionStreamSpec extends SparkSpec {
     val ckpt = java.nio.file.Files.createTempDirectory("graft-bs-drain").toString
     val evs = Seq(ev(4L, 10000, 1), ev(4L, 12000, 2), ev(4L, 40000, 3))
     val got = run(Seq(evs, Seq(ev(998L, 50000L))), "bs_drain", Some(ckpt))(
-      StatefulOps.timedSessionsExact(_, gapMs = 5000L, watermark = "10 seconds"))
+      ds => StatefulOps.timedSessionsExact(ds.withWatermark("ts", "10 seconds"), gapMs = 5000L))
       .filter(_.userId == 4L)
     assert(got == truth(evs, 5000L), s"got $got")
     // append finality: exactly one row per session even though the flush
@@ -141,7 +148,7 @@ class BufferedSessionStreamSpec extends SparkSpec {
       val dealt = evs.map(e => (rnd.nextInt(3), e))
       (0 until 3).foreach { b => batches += dealt.collect { case (`b`, e) => e } }
       val got = run(batches.result(), s"bs_fuzz_$seed")(
-        StatefulOps.timedSessionsExact(_, gapMs = gap, watermark = "60 seconds"))
+        ds => StatefulOps.timedSessionsExact(ds.withWatermark("ts", "60 seconds"), gapMs = gap))
       assert(got == truth(evs, gap), s"seed $seed: got $got\nexpected ${truth(evs, gap)}")
     }
   }
@@ -220,7 +227,7 @@ class BufferedSessionStreamSpec extends SparkSpec {
       .selectExpr("timestamp_millis(tsMs) as ts", "userId", "eventId", "cents")
       .as[TimedEvent]
     def startQuery() = withRocksDBProvider {
-      StatefulOps.timedSessionsExact(src, gapMs = 5000L, watermark = "10 seconds")
+      StatefulOps.timedSessionsExact(src.withWatermark("ts", "10 seconds"), gapMs = 5000L)
         .writeStream.outputMode(OutputMode.Append).format("parquet")
         .option("path", out).option("checkpointLocation", ckpt)
         .start()
@@ -325,8 +332,7 @@ class BufferedSessionStreamSpec extends SparkSpec {
 
       // -- bootstrap a fresh checkpoint; u1 gets NOTHING new --
       val q2 = StatefulOps
-        .timedSessionsExactFrom(src(inNew), gapMs = 5000L, initial = snap,
-          watermark = "10 seconds")
+        .timedSessionsExactFrom(src(inNew).withWatermark("ts", "10 seconds"), gapMs = 5000L, initial = snap)
         .writeStream.outputMode(OutputMode.Append).format("memory")
         .queryName("bs_migrated")
         .option("checkpointLocation", ckptNew).start()
@@ -376,8 +382,7 @@ class BufferedSessionStreamSpec extends SparkSpec {
       .selectExpr("timestamp_millis(tsMs) as ts", "userId", "eventId", "cents")
       .as[TimedEvent]
     withRocksDBProvider {
-      val q1 = StatefulOps.timedSessionsExact(src(inCur), gapMs = 5000L,
-          watermark = "10 seconds")
+      val q1 = StatefulOps.timedSessionsExact(src(inCur).withWatermark("ts", "10 seconds"), gapMs = 5000L)
         .writeStream.outputMode(OutputMode.Append)
         .foreachBatch((df: org.apache.spark.sql.Dataset[SessionSummary], _: Long) =>
           { df.count(); () })
@@ -403,8 +408,8 @@ class BufferedSessionStreamSpec extends SparkSpec {
         .run(spark, ckptCur, dumpDir, "session", "current") == 3L) // incl. pusher
 
       val q2 = StatefulOps
-        .timedSessionsExactFrom(src(inNew), gapMs = 5000L,
-          initial = snap.filter(_.userId != 9L), watermark = "10 seconds")
+        .timedSessionsExactFrom(src(inNew).withWatermark("ts", "10 seconds"), gapMs = 5000L,
+          initial = snap.filter(_.userId != 9L))
         .writeStream.outputMode(OutputMode.Append).format("memory")
         .queryName("bs_cur_migrated")
         .option("checkpointLocation", ckptNew).start()
@@ -426,7 +431,7 @@ class BufferedSessionStreamSpec extends SparkSpec {
 
   test("the deduped composition absorbs a replayed trigger (row 16's recipe on row 22)") {
     // Rows 19-22's replay column said "dedup upstream" as advice;
-    // timedSessionsExactDeduped ships it. A whole trigger is REDELIVERED
+    // the caller-side dedup composition ships it. A whole trigger is REDELIVERED
     // (same events, same ids — what at-least-once redelivery means):
     // the deduped form's sessions equal the batch truth of the original
     // events; the plain form double-counts the replayed rows into its
@@ -436,11 +441,11 @@ class BufferedSessionStreamSpec extends SparkSpec {
     val evs = Seq(ev(8L, 10000, 1), ev(8L, 12000, 2), ev(8L, 13000, 3))
     val batches = Seq(evs, evs) // trigger 2 redelivers trigger 1 verbatim
     val deduped = run(batches, "bs_dedup_replay")(
-      StatefulOps.timedSessionsExactDeduped(_, gapMs = gap, watermark = "60 seconds"))
+      ds => StatefulOps.timedSessionsExact(replayProof(ds, "60 seconds"), gapMs = gap))
     assert(deduped == truth(evs, gap),
       s"replayed trigger leaked through the dedup: $deduped vs ${truth(evs, gap)}")
     val plain = run(batches, "bs_plain_replay")(
-      StatefulOps.timedSessionsExact(_, gapMs = gap, watermark = "60 seconds"))
+      ds => StatefulOps.timedSessionsExact(ds.withWatermark("ts", "60 seconds"), gapMs = gap))
     assert(plain.map(_.nEvents).sum == 2L * evs.size,
       s"the plain form's documented double-count contract changed: $plain")
   }
@@ -470,7 +475,7 @@ class BufferedSessionStreamSpec extends SparkSpec {
       .selectExpr("timestamp_millis(tsMs) as ts", "userId", "eventId", "cents")
       .as[TimedEvent]
     def startQuery() = withRocksDBProvider {
-      StatefulOps.timedSessionsExactDeduped(src, gapMs = 5000L, watermark = "10 seconds")
+      StatefulOps.timedSessionsExact(replayProof(src, "10 seconds"), gapMs = 5000L)
         .writeStream.outputMode(OutputMode.Append).format("parquet")
         .option("path", out).option("checkpointLocation", ckpt)
         .start()
@@ -506,7 +511,7 @@ class BufferedSessionStreamSpec extends SparkSpec {
     val boundary = ev(5L, 20000L, 1)
     val justIn = ev(5L, 20001L, 2)
     val got = run(Seq(Seq(pusher), Seq(boundary, justIn)), "bs_boundary")(
-      StatefulOps.timedSessionsExact(_, gapMs = 5000L, watermark = "10 seconds"))
+      ds => StatefulOps.timedSessionsExact(ds.withWatermark("ts", "10 seconds"), gapMs = 5000L))
       .filter(_.userId == 5L)
     assert(got == truth(Seq(justIn), 5000L),
       s"boundary event not dropped (or the admitted one lost): $got")

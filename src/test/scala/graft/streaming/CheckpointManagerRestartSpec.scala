@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.{Graft, SparkSpec}
-import graft.pipeline.SensorSchemas
+import graft.pipeline.{SensorSchemas, SnortPipeline}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.checkpointing.FileContextBasedCheckpointFileManager
 import org.apache.spark.sql.functions._
@@ -15,8 +15,9 @@ import scala.jdk.CollectionConverters._
 
 /** Checkpoints move between Spark's default checkpoint file manager and
   * [[LocalCheckpointFileManager]] in both directions without losing or
-  * repeating state, and the Kafka sink keeps its at-least-once contract
-  * across a crash under the product manager.
+  * repeating state, the chained alert summary recovers its dedup and
+  * window state across a restart, and the Kafka sink keeps its
+  * at-least-once contract across a crash under the product manager.
   */
 class CheckpointManagerRestartSpec extends SparkSpec {
   import spark.implicits._
@@ -36,6 +37,17 @@ class CheckpointManagerRestartSpec extends SparkSpec {
     Seq("offsets", "commits").flatMap { d =>
       Option(new File(ckpt, d).list()).toSeq.flatten.filterNot(_.startsWith(".")).map(n => s"$d/$n")
     }.toSet
+
+  /** One SensorEvent as a JSON line: `metrics` alerts, all at `seconds`. */
+  private def sensorEvent(hash: String, metrics: Int, sensor: String = "s",
+      seconds: Long = 1738296906L): String =
+    s"""{"metrics":[${Seq.fill(metrics)("""{"snort_timestamp":"25/01/31-04:15:06.927463"}""").mkString(",")}],
+      "event_hash_sha256":"$hash","event_metrics_count":$metrics,"event_seconds":$seconds,
+      "sensor_id":"$sensor","sensor_version":"1","event_read_at":1738296906927463,
+      "event_sent_at":1738296906900000,"event_received_at":1738296906000000,
+      "snort_interface":"eth0","snort_message":"m","snort_priority":1,
+      "snort_protocol":"TCP","snort_rule_gid":1,"snort_rule_rev":1,
+      "snort_rule_sid":1,"snort_rule":"r","snort_seconds":$seconds}""".replaceAll("\n\\s*", "")
 
   private def hasCrc(ckpt: String, rel: String): Boolean = {
     val f = new File(ckpt, rel)
@@ -102,19 +114,83 @@ class CheckpointManagerRestartSpec extends SparkSpec {
     }
   }
 
+  /** PARITY row 18, the reference's AlertSummary as a chain: SensorEvents
+    * with redeliveries → `streamingDedup` on the event hash →
+    * `explodeMetrics` → one-minute `tumblingCounts` per sensor, and the
+    * running per-sensor total as a plain update-mode groupBy count over the
+    * same deduplicated alerts; each is its own checkpointed query over one
+    * file source. The second run's first batch redelivers the first run's
+    * last batch verbatim, so only recovered dedup state can absorb it. The
+    * first batch carries the bucketed alert-summary rows (2, 3 and 1 alerts
+    * at 100 s, 119 s and 130 s), and the next one the late 5 alerts at
+    * 110 s, inside the watermark.
+    */
+  private def alertSummaryAcrossRestart(): Unit = {
+    val in = newDir("graft-summary-in")
+    val (ckptWindows, ckptTotals) = (newDir("graft-summary-win"), newDir("graft-summary-tot"))
+    val windows = new ConcurrentHashMap[(Long, String), Long]()
+    val totals = new ConcurrentHashMap[String, Long]()
+    def alerts: DataFrame = {
+      val events = spark.readStream.schema(SensorSchemas.sensorEventSchema)
+        .option("maxFilesPerTrigger", 1).json(in)
+        .withColumn("ets", timestamp_seconds($"event_seconds"))
+      SnortPipeline.explodeMetrics(StreamOps.streamingDedup(events, "ets", "1 hour", "event_hash_sha256"))
+    }
+    def start(): Seq[StreamingQuery] = Seq(
+      StreamOps.tumblingCounts(alerts, "ets", "1 minute", "sensor_id")
+        .writeStream.outputMode(OutputMode.Update).option("checkpointLocation", ckptWindows)
+        .foreachBatch { (b: DataFrame, _: Long) =>
+          b.collect().foreach { r =>
+            windows.put((r.getTimestamp(0).getTime / 1000, r.getString(2)), r.getLong(3))
+          }
+        }.start(),
+      alerts.groupBy($"sensor_id").count()
+        .writeStream.outputMode(OutputMode.Update).option("checkpointLocation", ckptTotals)
+        .foreachBatch { (b: DataFrame, _: Long) =>
+          b.collect().foreach(r => totals.put(r.getString(0), r.getLong(1)))
+        }.start())
+    final case class Ev(hash: String, metrics: Int, sensor: String, seconds: Long) {
+      def json = sensorEvent(hash, metrics, sensor, seconds)
+    }
+    val summary = Seq(Ev("b100", 2, "s1", 100L), Ev("b119", 3, "s1", 119L), Ev("b130", 1, "s1", 130L))
+    val late = Ev("b110", 5, "s1", 110L)
+    val fresh = (0 until 36).map(i => Ev(s"h$i", 1 + i % 3, s"s${i % 3}", 600L + i * 7 % 300))
+    val batch0 = summary ++ fresh.take(12)
+    val batch1 = late +: (fresh.slice(12, 24) ++ Seq(summary(1), fresh(3)))
+    val batch2 = batch1 ++ fresh.drop(24) :+ summary(0) // batch1 redelivered after the restart
+    def run(batches: Seq[Seq[Ev]]): Unit = {
+      batches.foreach(b => putJson(in)(b.map(_.json)))
+      val qs = start()
+      try qs.foreach(_.processAllAvailable()) finally qs.foreach(_.stop())
+    }
+    run(Seq(batch0, batch1))
+    run(Seq(batch2))
+    val unique = (summary ++ fresh :+ late).map(e => e.hash -> e).toMap.values
+    assert(unique.size == 40)
+    assert(windows.asScala.toMap ==
+      unique.groupMapReduce(e => (e.seconds - e.seconds % 60, e.sensor))(_.metrics.toLong)(_ + _))
+    assert(windows.get((60L, "s1")) == 10L && windows.get((120L, "s1")) == 1L)
+    assert(totals.asScala.toMap == unique.groupMapReduce(_.sensor)(_.metrics.toLong)(_ + _))
+  }
+
+  test("HDFS-provider alert summary (dedup → explode → tumbling counts, per-sensor totals) is exact across a restart") {
+    withConf("spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider")(alertSummaryAcrossRestart())
+  }
+
+  test("RocksDB changelog alert summary (dedup → explode → tumbling counts, per-sensor totals) is exact across a restart") {
+    withRocksDBProvider {
+      withConf("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true")(
+        alertSummaryAcrossRestart())
+    }
+  }
+
   test("sinkAlerts crashed mid-batch and restarted: every record at least once, duplicates only from the replayed batch") {
     val in = newDir("graft-xcfm-sink-in")
     val ckpt = newDir("graft-xcfm-sink-ckpt")
     val sent = new ConcurrentLinkedQueue[KafkaSink.PreparedRecord]()
     CrashingWriter.queue = sent
-    def event(hash: String, metrics: Int): String =
-      s"""{"metrics":[${Seq.fill(metrics)("""{"snort_timestamp":"25/01/31-04:15:06.927463"}""").mkString(",")}],
-        "event_hash_sha256":"$hash","event_metrics_count":$metrics,"event_seconds":1738296906,
-        "sensor_id":"s","sensor_version":"1","event_read_at":1738296906927463,
-        "event_sent_at":1738296906900000,"event_received_at":1738296906000000,
-        "snort_interface":"eth0","snort_message":"m","snort_priority":1,
-        "snort_protocol":"TCP","snort_rule_gid":1,"snort_rule_rev":1,
-        "snort_rule_sid":1,"snort_rule":"r","snort_seconds":1738296906}""".replaceAll("\n\\s*", "")
+    def event(hash: String, metrics: Int): String = sensorEvent(hash, metrics)
     val batches = (0 until 3).map(b => (0 until 12).map(i => s"h$b-$i" -> (1 + (b + i) % 3)))
     val expected = batches.flatten.toMap
     def start(): StreamingQuery = KafkaSink.sinkAlerts(

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.SparkSpec
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.util.sketch.CountMinSketch
@@ -70,6 +71,15 @@ class CmsStreamSpec extends SparkSpec {
     assert(cms.estimateCount(7L) >= 24L)
   }
 
+  /** The replay-proof composition: one watermark, then
+    * `dropDuplicatesWithinWatermark` on the (key, eventId) pair upstream
+    * of the CMS fold.
+    */
+  private def replayProof(in: Dataset[StatefulOps.StampedValue]): Dataset[HashedValue] =
+    in.withWatermark("ts", "1 hour")
+      .dropDuplicatesWithinWatermark("key", "eventId")
+      .map(v => HashedValue(v.key, v.h))
+
   test("the deduped composition absorbs a replayed trigger: counters unchanged") {
     import StatefulOps.StampedValue
     // same 23 logical events, now carrying unique event ids + a timestamp
@@ -81,8 +91,7 @@ class CmsStreamSpec extends SparkSpec {
     }
     val got = withRocksDBProvider {
       val in = MemoryStream[StampedValue](spark)
-      val q = StatefulOps.cmsFrequencyDeduped(in.toDS(),
-        watermarkDelay = "1 hour", eps = Eps, confidence = Conf, seed = Seed)
+      val q = StatefulOps.cmsFrequency(replayProof(in.toDS()), Eps, Conf, Seed)
         .writeStream.outputMode(OutputMode.Update).format("memory")
         .queryName("cms_dedup_replay").start()
       Seq(stamped, stamped).foreach { b => in.addData(b); q.processAllAvailable() }
@@ -110,8 +119,7 @@ class CmsStreamSpec extends SparkSpec {
       StampedValue(new java.sql.Timestamp(base), 1L, "a", 7L))
     val got = withRocksDBProvider {
       val in = MemoryStream[StampedValue](spark)
-      val q = StatefulOps.cmsFrequencyDeduped(in.toDS(),
-        watermarkDelay = "1 hour", eps = Eps, confidence = Conf, seed = Seed)
+      val q = StatefulOps.cmsFrequency(replayProof(in.toDS()), Eps, Conf, Seed)
         .writeStream.outputMode(OutputMode.Update).format("memory")
         .queryName("cms_dedup_perkey").start()
       in.addData(batch); q.processAllAvailable()

@@ -22,7 +22,7 @@ class IncrementalDedupStreamSpec extends SparkSpec {
       .select(md5(col("text").cast("binary")).as("h"))
     val in = MemoryStream[DocEvent](spark)
     val out = StreamOps.incrementalDedup(
-      in.toDF(), corpus, textCol = "text", tsCol = "ts", watermark = "10 minutes")
+      in.toDF().withWatermark("ts", "10 minutes"), corpus, textCol = "text")
     val q = out.writeStream.outputMode(OutputMode.Append).format("memory")
       .queryName("inc_dedup").start()
     // batch 1: a corpus hit, a fresh doc, and an in-batch duplicate of it

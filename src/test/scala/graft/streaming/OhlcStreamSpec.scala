@@ -32,7 +32,7 @@ class OhlcStreamSpec extends SparkSpec {
       name: String): Map[(Long, Timestamp), (Long, Long, Long, Long, Long, Long)] = {
     val in = MemoryStream[(Timestamp, Long, Long, Long)](spark)
     val bars = StreamOps.ohlcBars(
-      in.toDF().toDF("ts", "user_id", "event_id", "cents"),
+      in.toDF().toDF("ts", "user_id", "event_id", "cents").withWatermark("ts", "1 hour"),
       "ts", "user_id", "event_id", "cents")
     val q = bars.writeStream.outputMode(OutputMode.Append).format("memory")
       .queryName(name).start()

@@ -84,17 +84,24 @@ class RecoverySpec extends SparkSpec {
   }
 
   test("bucketed alert summary accumulates per (sensor, bucket)") {
-    val in = MemoryStream[(String, Long, Long)](spark)
-    val q = StreamOps.alertSummaryBucketed(in.toDS(), bucketSeconds = 60)
+    // the AlertSummary composition: dedup on the alert id, then one-minute
+    // tumbling counts per sensor; the second trigger brings a late bucket-60
+    // row inside the watermark and a redelivery
+    val in = MemoryStream[(String, String, Long)](spark)
+    def alerts(id: String, epochS: Long, n: Int) = (0 until n).map(i => (s"$id-$i", "s1", epochS))
+    val events = in.toDF().toDF("id", "sensorId", "epochS")
+      .withColumn("ts", timestamp_seconds($"epochS"))
+    val q = StreamOps.tumblingCounts(StreamOps.streamingDedup(events, "ts", "1 minute", "id"),
+        "ts", "1 minute", "sensorId")
       .writeStream.outputMode(OutputMode.Update).format("memory")
       .queryName("summary_bucketed").start()
-    in.addData(("s1", 100L, 2L), ("s1", 119L, 3L), ("s1", 130L, 1L))
+    in.addData(alerts("a", 100L, 2) ++ alerts("b", 119L, 3) ++ alerts("c", 130L, 1))
     q.processAllAvailable()
-    in.addData(("s1", 110L, 5L))
+    in.addData(alerts("d", 110L, 5) ++ alerts("b", 119L, 1))
     q.processAllAvailable()
     q.stop()
     val last = spark.table("summary_bucketed")
-      .groupBy($"sensorId", $"bucketStart").agg(max($"totalAlerts").as("t"))
+      .groupBy($"sensorId", unix_seconds($"window_start")).agg(max($"n").as("t"))
       .as[(String, Long, Long)].collect().map { case (s, b, t) => (s, b) -> t }.toMap
     assert(last == Map(("s1", 60L) -> 10L, ("s1", 120L) -> 1L))
   }

@@ -21,7 +21,7 @@ class RocksDBStateSpec extends SparkSpec {
     try {
       val in = MemoryStream[(java.sql.Timestamp, String)](spark)
       val counts = StreamOps.tumblingCounts(
-        in.toDF().toDF("ts", "k"), "ts", "10 minutes", "5 minutes", "k")
+        in.toDF().toDF("ts", "k").withWatermark("ts", "5 minutes"), "ts", "10 minutes", "k")
       val q = counts.writeStream.outputMode(OutputMode.Append).format("memory")
         .queryName("rocksdb_out").start()
       in.addData(

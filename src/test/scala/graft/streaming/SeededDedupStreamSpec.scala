@@ -4,20 +4,21 @@ import graft.SparkSpec
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.OutputMode
 
-/** The migration × dedup closure (r18 verdict task 1): the
-  * `*ExactDeduped` compositions' one stated functional caveat was that a
-  * MIGRATED restart began with an empty dedup table
-  * (`dropDuplicatesWithinWatermark` has no initial-state hook), so a
-  * verbatim redelivery of a pre-migration buffered event inside the
-  * first watermark horizon folded again. The `*ExactDedupedFrom` entry
-  * points close it with a seedable transformWithState dedup
+/** The migration × dedup closure (r18 verdict task 1): the replay-proof
+  * compositions' one stated functional caveat was that a MIGRATED restart
+  * began with an empty dedup table (`dropDuplicatesWithinWatermark` has
+  * no initial-state hook), so a verbatim redelivery of a pre-migration
+  * buffered event inside the first watermark horizon folded again.
+  * [[StatefulOps.seededDedup]] feeding the `*ExactFrom` entry points
+  * closes it with a seedable transformWithState dedup
   * ([[StatefulOps.SeededDedupProcessor]]) whose absorption table is
   * re-armed from the SAME migration dump the buffered operator
   * bootstraps from. These specs pin, in order: the conceded scenario now
   * absorbs (with the plain `*From` double-fold re-pinned alongside so
   * the contrast stays explicit), the fresh-path behavior matches the
-  * shipped `*ExactDeduped` forms, every entry-point shape wires, and the
-  * composed state stays horizon-bounded.
+  * caller-side `dropDuplicatesWithinWatermark` composition, every
+  * entry-point shape wires, and the composed state stays
+  * horizon-bounded.
   *
   * Reference anchor for the at-least-once contract this completes:
   * internal/app/app.go:220-222 (the reference commits offsets only after
@@ -64,18 +65,25 @@ class SeededDedupStreamSpec extends SparkSpec {
       spark.table(name)
     }
 
+  /** The migrated replay-proof stage: the caller's one watermark, then
+    * the dedup seeded from `snap`, ready for the matching `*ExactFrom`.
+    */
+  private def seeded[T, S](ds: org.apache.spark.sql.Dataset[T],
+      snap: org.apache.spark.sql.Dataset[BufferedSnapshot[S]], delay: String) =
+    StatefulOps.seededDedup(ds.withWatermark("ts", delay), snap)
+
   private val emptySnap =
     spark.emptyDataset[BufferedSnapshot[(Long, Long, Long)]]
 
   test("fresh path: the chained-TWS dedup absorbs a replayed trigger like the shipped composition") {
-    // An empty snapshot makes *ExactDedupedFrom a fresh start; its dedup
+    // An empty snapshot makes seededDedup + *ExactFrom a fresh start; its dedup
     // stage is the seedable processor instead of
     // dropDuplicatesWithinWatermark, and must absorb the same verbatim
     // trigger replay the bxr_* cases pin for the shipped forms.
     val evs = Seq(ev(11L, 10000, 0, "view"), ev(11L, 11000, 1, "click"),
       ev(11L, 12000, 2, "purchase"))
     val dd = run(Seq(evs, evs), "sds_cep_fresh", OutputMode.Update, 200000L)(
-      StatefulOps.patternMatchCountsExactDedupedFrom(_, emptySnap, watermark = "60 seconds"))
+      ds => StatefulOps.patternMatchCountsExactFrom(seeded(ds, emptySnap, "60 seconds"), emptySnap))
       .as[PatternCount].collect().toSeq.filter(_.userId == 11L).maxBy(_.nEvents)
     assert(dd == PatternCount(11L, 3L, 1L),
       s"replayed trigger leaked through the seeded dedup chain: $dd")
@@ -85,8 +93,8 @@ class SeededDedupStreamSpec extends SparkSpec {
     val (target, threshold) = (20L, 100L)
     val evs = Seq(ev(12L, 10000, 0, "signup", 500L), ev(12L, 11000, 1, "signup", 10L))
     val cus = run(Seq(evs ++ evs), "sds_cus_fresh", OutputMode.Update, 200000L)(
-      StatefulOps.cusumMonitorExactDedupedFrom(_, target, threshold, emptySnap,
-        watermark = "60 seconds"))
+      ds => StatefulOps.cusumMonitorExactFrom(seeded(ds, emptySnap, "60 seconds"),
+        target, threshold, emptySnap))
       .as[CusumState].collect().toSeq.filter(_.userId == 12L).maxBy(_.nEvents)
     // truth over the UNIQUE events: n=2, s=max(0,480)+(-10)=470, alarm at id 0
     assert(cus == CusumState(12L, 2L, 470L, 0L),
@@ -95,8 +103,8 @@ class SeededDedupStreamSpec extends SparkSpec {
     val sessSnap = spark.emptyDataset[BufferedSnapshot[Seq[(Long, Long, Long, Long)]]]
     withRocksDBProvider {
       val in = MemoryStream[TimedEvent](spark)
-      val q = StatefulOps.timedSessionsExactDedupedFrom(in.toDS(), gapMs = 5000L,
-          initial = sessSnap, watermark = "10 seconds")
+      val q = StatefulOps.timedSessionsExactFrom(seeded(in.toDS(), sessSnap, "10 seconds"),
+          gapMs = 5000L, initial = sessSnap)
         .writeStream.outputMode(OutputMode.Append).format("memory")
         .queryName("sds_sess_fresh").start()
       val sess = Seq(TimedEvent(t(10000), 21L, 0L, 100L), TimedEvent(t(12000), 21L, 1L, 50L))
@@ -115,7 +123,7 @@ class SeededDedupStreamSpec extends SparkSpec {
     // The conceded scenario, end to end: (1) the plain buffered form
     // writes a checkpoint whose buffer still holds u1's purchase (nothing
     // settled — single batch, watermark still 0); (2) the CURRENT-layout
-    // dump reads it offline; (3) *ExactDedupedFrom bootstraps a FRESH
+    // dump reads it offline; (3) seededDedup + *ExactFrom bootstrap a FRESH
     // checkpoint from the dump, and the source REDELIVERS the purchase
     // verbatim — the new query's watermark restarted at 0, so the late
     // filter admits it and only the SEEDED dedup table can absorb it.
@@ -124,8 +132,7 @@ class SeededDedupStreamSpec extends SparkSpec {
     val inOld = newDir("graft-sds-in1")
     val ckptOld = newDir("graft-sds-ckpt1")
     withRocksDBProvider {
-      val q1 = StatefulOps.lastTouchAttributionExact(jsonEventSource(inOld),
-          watermark = "10 seconds")
+      val q1 = StatefulOps.lastTouchAttributionExact(jsonEventSource(inOld).withWatermark("ts", "10 seconds"))
         .writeStream.outputMode(OutputMode.Append)
         .foreachBatch((df: org.apache.spark.sql.Dataset[AttributedPurchaseTs], _: Long) =>
           { df.count(); () })
@@ -166,12 +173,12 @@ class SeededDedupStreamSpec extends SparkSpec {
     }
 
     val deduped = replayRun("sds_mig_dd")(
-      StatefulOps.lastTouchAttributionExactDedupedFrom(_, snap, watermark = "10 seconds"))
+      ds => StatefulOps.lastTouchAttributionExactFrom(seeded(ds, snap, "10 seconds"), snap))
     assert(deduped == Seq(AttributedPurchaseTs(1L, 1L, 20000L, 700L, "view")),
       s"the migrated composition must absorb the pre-migration redelivery: $deduped")
 
     val plain = replayRun("sds_mig_pl")(
-      StatefulOps.lastTouchAttributionExactFrom(_, snap, watermark = "10 seconds"))
+      ds => StatefulOps.lastTouchAttributionExactFrom(ds.withWatermark("ts", "10 seconds"), snap))
     assert(plain.size == 2 && plain.distinct ==
         Seq(AttributedPurchaseTs(1L, 1L, 20000L, 700L, "view")),
       s"the plain *From form's documented re-fold contract changed: $plain")
@@ -186,8 +193,7 @@ class SeededDedupStreamSpec extends SparkSpec {
     val inOld = newDir("graft-sds-in2")
     val ckptOld = newDir("graft-sds-ckpt2")
     withRocksDBProvider {
-      val q1 = StatefulOps.patternMatchCountsExact(jsonEventSource(inOld),
-          watermark = "10 seconds")
+      val q1 = StatefulOps.patternMatchCountsExact(jsonEventSource(inOld).withWatermark("ts", "10 seconds"))
         .writeStream.outputMode(OutputMode.Update)
         .foreachBatch((df: org.apache.spark.sql.Dataset[PatternCount], _: Long) =>
           { df.count(); () })
@@ -203,8 +209,8 @@ class SeededDedupStreamSpec extends SparkSpec {
     val inNew = newDir("graft-sds-in3")
     val ckptNew = newDir("graft-sds-ckpt3")
     withRocksDBProvider {
-      val q = StatefulOps.patternMatchCountsExactDedupedFrom(
-          jsonEventSource(inNew), snap, watermark = "10 seconds")
+      val q = StatefulOps.patternMatchCountsExactFrom(
+          seeded(jsonEventSource(inNew), snap, "10 seconds"), snap)
         .writeStream.outputMode(OutputMode.Update).format("memory")
         .queryName("sds_mig_cep").option("checkpointLocation", ckptNew).start()
       putJson(inNew)(js(1L, 10000, 0, "view"), js(1L, 11000, 1, "click"),
@@ -235,8 +241,8 @@ class SeededDedupStreamSpec extends SparkSpec {
     withRocksDBProvider {
       val ts0 = java.sql.Timestamp.valueOf("2024-01-01 00:00:00").getTime
       val in = MemoryStream[TimedUserEvent](spark)
-      val q = StatefulOps.patternMatchCountsExactDedupedFrom(in.toDS(), emptySnap,
-          watermark = "10 seconds")
+      val q = StatefulOps.patternMatchCountsExactFrom(
+          seeded(in.toDS(), emptySnap, "10 seconds"), emptySnap)
         .writeStream.outputMode(OutputMode.Update).format("memory")
         .queryName("sds_soak").start()
       val users = 5

@@ -61,8 +61,8 @@ class SketchStateSoakSpec extends SparkSpec {
       val left = MemoryStream[(java.sql.Timestamp, Long, String)](spark)
       val right = MemoryStream[(java.sql.Timestamp, Long, String)](spark)
       val joined = StreamOps.streamStreamJoin(
-        left.toDF().toDF("ts", "sensor", "alert"), "ts", "1 minute",
-        right.toDF().toDF("ts", "sensor", "ack"), "ts", "1 minute",
+        left.toDF().toDF("ts", "sensor", "alert").withWatermark("ts", "1 minute"), "ts",
+        right.toDF().toDF("ts", "sensor", "ack").withWatermark("ts", "1 minute"), "ts",
         key = "sensor", maxLag = "2 minutes")
       val q = joined.writeStream.outputMode(OutputMode.Append).format("memory")
         .queryName("ssj_soak").start()
@@ -87,8 +87,8 @@ class SketchStateSoakSpec extends SparkSpec {
   }
 
   test("deduped-CMS composition: dedup state stays bounded by the watermark horizon") {
-    // cmsFrequencyDeduped's stated cost model is O(event ids inside the
-    // watermark horizon) for the dedup operator — prove the EVICTION on
+    // the replay-proof CMS composition's stated cost model is O(event ids
+    // inside the watermark horizon) for the dedup operator — prove the EVICTION on
     // the store metric: ten batches of entirely fresh event ids, event
     // time jumping 60s per batch against a 10s watermark delay, must
     // plateau at O(per-batch ids), not accumulate every id ever seen.
@@ -97,7 +97,10 @@ class SketchStateSoakSpec extends SparkSpec {
     withRocksDBProvider {
       val ts0 = java.sql.Timestamp.valueOf("2024-01-01 00:00:00").getTime
       val in = MemoryStream[StatefulOps.StampedValue](spark)
-      val q = StatefulOps.cmsFrequencyDeduped(in.toDS(), watermarkDelay = "10 seconds")
+      val deduped = in.toDS().withWatermark("ts", "10 seconds")
+        .dropDuplicatesWithinWatermark("key", "eventId")
+        .map(v => StatefulOps.HashedValue(v.key, v.h))
+      val q = StatefulOps.cmsFrequency(deduped)
         .writeStream.outputMode(OutputMode.Update).format("memory")
         .queryName("cms_dedup_soak").start()
       val perBatch = 100

@@ -29,8 +29,8 @@ class StateSoakSpec extends SparkSpec {
     try {
       val in = MemoryStream[(java.sql.Timestamp, Long)](spark)
       val sessions = StreamOps.sessionCounts(
-        in.toDF().toDF("ts", "user"), "ts", gap = "1 minute",
-        watermark = "2 minutes", "user")
+        in.toDF().toDF("ts", "user").withWatermark("ts", "2 minutes"), "ts", gap = "1 minute",
+        "user")
       val q = sessions.writeStream.outputMode(OutputMode.Append).format("memory")
         .queryName("soak_out").start()
       val base = java.sql.Timestamp.valueOf("2024-01-01 00:00:00").getTime

@@ -20,7 +20,7 @@ class StreamingSpec extends SparkSpec {
   test("tumbling window with watermark drops late data in append mode") {
     val in = MemoryStream[(Timestamp, String)](spark)
     val counts = StreamOps.tumblingCounts(
-      in.toDF().toDF("ts", "sensor"), "ts", "10 minutes", "5 minutes", "sensor")
+      in.toDF().toDF("ts", "sensor").withWatermark("ts", "5 minutes"), "ts", "10 minutes", "sensor")
     val q = counts.writeStream.outputMode(OutputMode.Append).format("memory")
       .queryName("tumbling").start()
     in.addData((ts("2024-01-01 10:01:00"), "s1"), (ts("2024-01-01 10:02:00"), "s1"))
@@ -42,7 +42,7 @@ class StreamingSpec extends SparkSpec {
   test("session windows merge gap-adjacent events") {
     val in = MemoryStream[(Timestamp, String)](spark)
     val sessions = StreamOps.sessionCounts(
-      in.toDF().toDF("ts", "user"), "ts", "5 minutes", "1 minute", "user")
+      in.toDF().toDF("ts", "user").withWatermark("ts", "1 minute"), "ts", "5 minutes", "user")
     val q = sessions.writeStream.outputMode(OutputMode.Append).format("memory")
       .queryName("sessions").start()
     in.addData(
@@ -74,18 +74,75 @@ class StreamingSpec extends SparkSpec {
     assert(got == Seq("h1", "h2"))
   }
 
-  test("alertSummary accumulates per-sensor totals across triggers") {
-    val in = MemoryStream[(String, Long)](spark)
-    val q = StreamOps.alertSummary(in.toDS()).writeStream
+  test("per-sensor alert totals accumulate across triggers (groupBy count)") {
+    // the running AlertSummary{total_alerts}: one alert row per alert
+    val in = MemoryStream[String](spark)
+    val q = in.toDF().toDF("sensorId").groupBy($"sensorId").count().writeStream
       .outputMode(OutputMode.Update).format("memory").queryName("summary").start()
-    in.addData(("s1", 3L), ("s2", 1L))
+    in.addData(Seq.fill(3)("s1") :+ "s2")
     q.processAllAvailable()
-    in.addData(("s1", 2L))
+    in.addData("s1", "s1")
     q.processAllAvailable()
     q.stop()
     val last = spark.table("summary").groupBy($"sensorId")
-      .agg(max($"total").as("t")).as[(String, Long)].collect().toMap
+      .agg(max($"count").as("t")).as[(String, Long)].collect().toMap
     assert(last == Map("s1" -> 5L, "s2" -> 1L))
+  }
+
+  test("streaming dedup chains into tumbling counts on the dedup's watermark") {
+    // the chain Spark refused while each operator stamped its own watermark
+    val in = MemoryStream[(Timestamp, String, String)](spark)
+    val counts = StreamOps.tumblingCounts(
+      StreamOps.streamingDedup(in.toDF().toDF("ts", "hash", "sensor"), "ts", "5 minutes", "hash"),
+      "ts", "10 minutes", "sensor")
+    val q = counts.writeStream.outputMode(OutputMode.Append).format("memory")
+      .queryName("dedup_tumbling").start()
+    in.addData((ts("2024-01-01 10:01:00"), "h1", "s1"), (ts("2024-01-01 10:02:00"), "h2", "s1"),
+      (ts("2024-01-01 10:01:00"), "h1", "s1")) // a redelivery in the same trigger
+    q.processAllAvailable()
+    in.addData((ts("2024-01-01 10:02:00"), "h2", "s1")) // a redelivery one trigger later
+    q.processAllAvailable()
+    in.addData((ts("2024-01-01 11:00:00"), "h3", "s1")) // close the 10:00 window
+    q.processAllAvailable()
+    in.addData((ts("2024-01-01 12:00:00"), "h4", "s1"))
+    q.processAllAvailable()
+    q.stop()
+    val rows = spark.table("dedup_tumbling")
+      .select(date_format($"window_start", "HH:mm").as("w"), $"n")
+      .as[(String, Long)].collect().toMap
+    assert(rows("10:00") == 2)
+  }
+
+  test("operators whose state Spark keeps without a watermark fail by name on un-watermarked input") {
+    val in = MemoryStream[(Timestamp, String)](spark)
+    val raw = in.toDF().toDF("ts", "k")
+    // Spark itself starts these un-watermarked: an update-mode window and
+    // an inner stream-stream join, whose state would then grow forever
+    val acks = MemoryStream[(Timestamp, String)](spark)
+    val r = acks.toDF().toDF("r_ts", "r_k")
+    val joined = raw.join(r, $"k" === $"r_k" && $"r_ts" >= $"ts" && $"r_ts" <= $"ts" + expr("INTERVAL 5 minutes"))
+    val sparkQs = Seq(
+      raw.groupBy(window($"ts", "10 minutes"), $"k").count().writeStream.outputMode(OutputMode.Update)
+        .format("memory").queryName("unwatermarked_window").start(),
+      joined.writeStream.outputMode(OutputMode.Append).format("memory").queryName("unwatermarked_join").start())
+    in.addData((ts("2024-01-01 10:01:00"), "s1"))
+    acks.addData((ts("2024-01-01 10:02:00"), "s1"))
+    sparkQs.foreach { q => q.processAllAvailable(); q.stop() }
+    assert(spark.table("unwatermarked_window").count() == 1L && spark.table("unwatermarked_join").count() == 1L)
+    def named(op: String)(call: => Any): Unit = {
+      val err = intercept[IllegalArgumentException](call)
+      assert(err.getMessage.startsWith(s"$op: column 'ts' carries no event-time watermark"), err.getMessage)
+    }
+    named("tumblingCounts")(StreamOps.tumblingCounts(raw, "ts", "10 minutes", "k"))
+    val trades = raw.withColumn("id", lit(1L)).withColumn("cents", lit(1L))
+    named("ohlcBars")(StreamOps.ohlcBars(trades, "ts", "k", "id", "cents"))
+    val watermarked = raw.withWatermark("ts", "1 minute")
+    named("streamStreamJoin")(StreamOps.streamStreamJoin(raw, "ts", watermarked, "ts", "k", "5 minutes"))
+    named("streamStreamJoin")(StreamOps.streamStreamJoin(watermarked, "ts", raw, "ts", "k", "5 minutes"))
+    // the watermarked forms build; a batch input needs no watermark
+    StreamOps.tumblingCounts(watermarked, "ts", "10 minutes", "k")
+    StreamOps.streamStreamJoin(watermarked, "ts", watermarked, "ts", "k", "5 minutes")
+    StreamOps.tumblingCounts(Seq((ts("2024-01-01 10:01:00"), "s1")).toDF("ts", "k"), "ts", "10 minutes", "k")
   }
 
   test("stream-static broadcast enrichment") {
@@ -232,8 +289,8 @@ class StreamingSpec extends SparkSpec {
     val alerts = MemoryStream[(Timestamp, String, String)](spark)
     val acks = MemoryStream[(Timestamp, String, String)](spark)
     val joined = StreamOps.streamStreamJoin(
-      alerts.toDF().toDF("ts", "sensor", "alert"), "ts", "1 minute",
-      acks.toDF().toDF("ts", "sensor", "ack"), "ts", "1 minute",
+      alerts.toDF().toDF("ts", "sensor", "alert").withWatermark("ts", "1 minute"), "ts",
+      acks.toDF().toDF("ts", "sensor", "ack").withWatermark("ts", "1 minute"), "ts",
       key = "sensor", maxLag = "5 minutes", joinType = "leftOuter")
     val q = joined.writeStream.outputMode(OutputMode.Append).format("memory")
       .queryName("ssjoin").start()
@@ -263,8 +320,8 @@ class StreamingSpec extends SparkSpec {
     val alerts = MemoryStream[(Timestamp, String, String)](spark)
     val acks = MemoryStream[(Timestamp, String, String)](spark)
     val joined = StreamOps.streamStreamJoin(
-      alerts.toDF().toDF("ts", "sensor", "alert"), "ts", "1 minute",
-      acks.toDF().toDF("ts", "sensor", "ack"), "ts", "1 minute",
+      alerts.toDF().toDF("ts", "sensor", "alert").withWatermark("ts", "1 minute"), "ts",
+      acks.toDF().toDF("ts", "sensor", "ack").withWatermark("ts", "1 minute"), "ts",
       key = "sensor", maxLag = "5 minutes", joinType = "fullOuter")
     val q = joined.writeStream.outputMode(OutputMode.Append).format("memory")
       .queryName("ssjoin_full").start()

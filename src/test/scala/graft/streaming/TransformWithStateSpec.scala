@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.SparkSpec
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.streaming.OutputMode
+import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
 
 /** transformWithState (StatefulOps.runningUserTotals) — Spark 4's
   * arbitrary-state API with multiple named state variables (ValueState
@@ -64,7 +64,7 @@ class TransformWithStateSpec extends SparkSpec {
     withRocksDBProvider {
       val base = 1700000000000L
       val in = MemoryStream[TimedEvent](spark)
-      val q = StatefulOps.timedSessions(in.toDS(), gapMs = 60000L, watermark = "0 seconds")
+      val q = StatefulOps.timedSessions(in.toDS().withWatermark("ts", "0 seconds"), gapMs = 60000L)
         .writeStream.outputMode(OutputMode.Append).format("memory")
         .queryName("tws_sessions").start()
       // user 1: two events 30s apart (one session); user 2: one event
@@ -95,8 +95,7 @@ class TransformWithStateSpec extends SparkSpec {
       val base = 1700000000000L
       val in = MemoryStream[TimedEvent](spark)
       // generous watermark delay so the cross-batch late event is NOT dropped
-      val q = StatefulOps.timedSessions(in.toDS(), gapMs = 60000L,
-        watermark = "10 minutes")
+      val q = StatefulOps.timedSessions(in.toDS().withWatermark("ts", "10 minutes"), gapMs = 60000L)
         .writeStream.outputMode(OutputMode.Append).format("memory")
         .queryName("tws_late_start").start()
       in.addData(TimedEvent(t(base + 40000L), 1L, 1L, 100L))
@@ -125,8 +124,7 @@ class TransformWithStateSpec extends SparkSpec {
     withRocksDBProvider {
       val base = 1700000000000L
       val in = MemoryStream[TimedEvent](spark)
-      val q = StatefulOps.timedSessions(in.toDS(), gapMs = 60000L,
-        watermark = "10 minutes")
+      val q = StatefulOps.timedSessions(in.toDS().withWatermark("ts", "10 minutes"), gapMs = 60000L)
         .writeStream.outputMode(OutputMode.Append).format("memory")
         .queryName("tws_late_frag").start()
       in.addData(TimedEvent(t(base + 300000L), 1L, 1L, 100L))
@@ -157,8 +155,7 @@ class TransformWithStateSpec extends SparkSpec {
     withRocksDBProvider {
       val base = 1700000000000L
       val in = MemoryStream[TimedEvent](spark)
-      val q = StatefulOps.timedSessions(in.toDS(), gapMs = 60000L,
-        watermark = "10 minutes")
+      val q = StatefulOps.timedSessions(in.toDS().withWatermark("ts", "10 minutes"), gapMs = 60000L)
         .writeStream.outputMode(OutputMode.Append).format("memory")
         .queryName("tws_frag_merge").start()
       in.addData(TimedEvent(t(base + 300000L), 1L, 1L, 100L))
@@ -192,8 +189,7 @@ class TransformWithStateSpec extends SparkSpec {
     withRocksDBProvider {
       val base = 1700000000000L
       val in = MemoryStream[TimedEvent](spark)
-      val q = StatefulOps.timedSessions(in.toDS(), gapMs = 60000L,
-        watermark = "10 minutes")
+      val q = StatefulOps.timedSessions(in.toDS().withWatermark("ts", "10 minutes"), gapMs = 60000L)
         .writeStream.outputMode(OutputMode.Append).format("memory")
         .queryName("tws_frag_backmerge").start()
       in.addData(TimedEvent(t(base + 300000L), 1L, 1L, 100L))
@@ -229,8 +225,7 @@ class TransformWithStateSpec extends SparkSpec {
     withRocksDBProvider {
       val base = 1700000000000L
       val in = MemoryStream[TimedEvent](spark)
-      val q = StatefulOps.timedSessions(in.toDS(), gapMs = 60000L,
-        watermark = "10 minutes")
+      val q = StatefulOps.timedSessions(in.toDS().withWatermark("ts", "10 minutes"), gapMs = 60000L)
         .writeStream.outputMode(OutputMode.Append).format("memory")
         .queryName("tws_frag_inline").start()
       in.addData(TimedEvent(t(base + 300000L), 1L, 1L, 100L))
@@ -272,8 +267,7 @@ class TransformWithStateSpec extends SparkSpec {
     withRocksDBProvider {
       val base = 1700000000000L
       val in = MemoryStream[TimedEvent](spark)
-      val q = StatefulOps.timedSessions(in.toDS(), gapMs = 60000L,
-        watermark = "10 minutes")
+      val q = StatefulOps.timedSessions(in.toDS().withWatermark("ts", "10 minutes"), gapMs = 60000L)
         .writeStream.outputMode(OutputMode.Append).format("memory")
         .queryName("tws_xbatch_merge").start()
       in.addData(TimedEvent(t(base + 300000L), 1L, 1L, 100L))
@@ -308,8 +302,8 @@ class TransformWithStateSpec extends SparkSpec {
       val in = MemoryStream[TimedEvent](spark)
       // K = 2 open fragments; all events land in ONE batch so the
       // watermark never closes anything mid-test
-      val q = StatefulOps.timedSessions(in.toDS(), gapMs = 60000L,
-        watermark = "10 minutes", maxFragments = 2)
+      val q = StatefulOps.timedSessions(in.toDS().withWatermark("ts", "10 minutes"), gapMs = 60000L,
+        maxFragments = 2)
         .writeStream.outputMode(OutputMode.Append).format("memory")
         .queryName("tws_overflow").start()
       // three mutually gap-separated singletons: the third insert
@@ -360,8 +354,8 @@ class TransformWithStateSpec extends SparkSpec {
       val in = MemoryStream[TimedEvent](spark)
       // 30min delay: batch 1's max ts is base+10min, so the batch-2
       // straggler at ts=base stays safely inside the watermark
-      val q = StatefulOps.timedSessions(in.toDS(), gapMs = 60000L,
-        watermark = "30 minutes", maxFragments = 2)
+      val q = StatefulOps.timedSessions(in.toDS().withWatermark("ts", "30 minutes"), gapMs = 60000L,
+        maxFragments = 2)
         .writeStream.outputMode(OutputMode.Append).format("memory")
         .queryName("tws_overflow_fold").start()
       in.addData(
@@ -426,8 +420,8 @@ class TransformWithStateSpec extends SparkSpec {
         events.filter(e => math.floorMod(e.eventId * 2654435761L, 3L) == i))
       assert(batches.forall(_.nonEmpty))
       val in = MemoryStream[TimedEvent](spark)
-      val q = StatefulOps.timedSessions(in.toDS(), gapMs = gapMs,
-        watermark = "35 days", maxFragments = 64)
+      val q = StatefulOps.timedSessions(in.toDS().withWatermark("ts", "35 days"), gapMs = gapMs,
+        maxFragments = 64)
         .writeStream.outputMode(OutputMode.Append).format("memory")
         .queryName("tws_real_parity").start()
       batches.foreach { b => in.addData(b); q.processAllAvailable() }
@@ -448,6 +442,28 @@ class TransformWithStateSpec extends SparkSpec {
       assert(missing.isEmpty && extra.isEmpty,
         s"streaming != batch sessionization: missing=${missing.take(3)} extra=${extra.take(3)} " +
           s"(|truth|=${truth.size}, |got|=${got.size})")
+    }
+  }
+
+  test("un-watermarked input: Spark runs the timer operator, timedSessions fails by name") {
+    import StatefulOps.{SessionProcessor, TimedEvent}
+    def t(ms: Long) = new java.sql.Timestamp(ms)
+    withRocksDBProvider {
+      val in = MemoryStream[TimedEvent](spark)
+      // Spark itself starts event-time timers without a watermark; they
+      // never fire, so no session closes and its state is never evicted
+      val q = in.toDS().groupByKey(_.userId)
+        .transformWithState(new SessionProcessor(60000L), TimeMode.EventTime(), OutputMode.Append())
+        .writeStream.outputMode(OutputMode.Append).format("memory")
+        .queryName("tws_unwatermarked").start()
+      in.addData(TimedEvent(t(1700000000000L), 1L, 1L, 100L)); q.processAllAvailable()
+      in.addData(TimedEvent(t(1700000000000L + 3600000L), 9L, 2L, 1L)); q.processAllAvailable()
+      in.addData(TimedEvent(t(1700000000000L + 7200000L), 9L, 3L, 1L)); q.processAllAvailable()
+      q.stop()
+      assert(spark.table("tws_unwatermarked").count() == 0L)
+      val err = intercept[IllegalArgumentException](StatefulOps.timedSessions(in.toDS(), gapMs = 60000L))
+      assert(err.getMessage.startsWith("timedSessions: column 'ts' carries no event-time watermark"),
+        err.getMessage)
     }
   }
 

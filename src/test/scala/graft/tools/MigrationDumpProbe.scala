@@ -77,7 +77,7 @@ object MigrationDumpProbe {
             .transformWithState(new OldBufferLayoutProcessor(),
               org.apache.spark.sql.streaming.TimeMode.EventTime(), OutputMode.Update())
         case _ =>
-          StatefulOps.patternMatchCountsExact(in.toDS(), watermark = "4000 seconds")
+          StatefulOps.patternMatchCountsExact(in.toDS().withWatermark("ts", "4000 seconds"))
       }
       val q = wire.writeStream.outputMode(OutputMode.Update)
         .foreachBatch((df: org.apache.spark.sql.Dataset[StatefulOps.PatternCount],

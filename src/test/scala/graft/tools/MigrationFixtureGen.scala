@@ -208,7 +208,7 @@ object MigrationFixtureGen {
 
     regen("cep-current") { ckpt =>
       val in = MemoryStream[StatefulOps.TimedUserEvent](spark)
-      val q = StatefulOps.patternMatchCountsExact(in.toDS(), "10 seconds")
+      val q = StatefulOps.patternMatchCountsExact(in.toDS().withWatermark("ts", "10 seconds"))
         .writeStream.outputMode(OutputMode.Update)
         .foreachBatch((df: org.apache.spark.sql.Dataset[StatefulOps.PatternCount],
             _: Long) => { df.count(); () })
@@ -227,8 +227,8 @@ object MigrationFixtureGen {
 
     regen("cusum-current") { ckpt =>
       val in = MemoryStream[StatefulOps.TimedUserEvent](spark)
-      val q = StatefulOps.cusumMonitorExact(in.toDS(), target = 20L,
-          threshold = 15L, watermark = "10 seconds")
+      val q = StatefulOps.cusumMonitorExact(in.toDS().withWatermark("ts", "10 seconds"), target = 20L,
+          threshold = 15L)
         .writeStream.outputMode(OutputMode.Update)
         .foreachBatch((df: org.apache.spark.sql.Dataset[StatefulOps.CusumState],
             _: Long) => { df.count(); () })
@@ -250,7 +250,7 @@ object MigrationFixtureGen {
 
     regen("attribution-current") { ckpt =>
       val in = MemoryStream[StatefulOps.TimedUserEvent](spark)
-      val q = StatefulOps.lastTouchAttributionExact(in.toDS(), "10 seconds")
+      val q = StatefulOps.lastTouchAttributionExact(in.toDS().withWatermark("ts", "10 seconds"))
         .writeStream.outputMode(OutputMode.Append)
         .foreachBatch((df: org.apache.spark.sql.Dataset[StatefulOps.AttributedPurchaseTs],
             _: Long) => { df.count(); () })
@@ -270,8 +270,7 @@ object MigrationFixtureGen {
 
     regen("session-current") { ckpt =>
       val in = MemoryStream[StatefulOps.TimedEvent](spark)
-      val q = StatefulOps.timedSessionsExact(in.toDS(), gapMs = 5000L,
-          watermark = "10 seconds")
+      val q = StatefulOps.timedSessionsExact(in.toDS().withWatermark("ts", "10 seconds"), gapMs = 5000L)
         .writeStream.outputMode(OutputMode.Append)
         .foreachBatch((df: org.apache.spark.sql.Dataset[StatefulOps.SessionSummary],
             _: Long) => { df.count(); () })
