@@ -24,16 +24,21 @@ Three checks, strongest applicable wins:
 
 Contextual `:N` citations (backtick refs without a file) resolve
 against the most recently named .scala file — the PATH it resolved to,
-not just the basename. A basename shared by two source files is an
-ERROR unless the citation carries a disambiguating path suffix
-(`streaming/Foo.scala:3`).
+not just the basename — unless a source file is named bare (without
+`.scala`, as in "BufferedSessionStreamSpec `:153`") between the previous
+citation and this one: the nearest such name becomes the file. A
+basename shared by two source files is an ERROR unless the citation
+carries a disambiguating path suffix (`streaming/Foo.scala:3`); a bare
+name cannot carry one, so a shared one is an ERROR.
 
 Usage: python3 scripts/parity_sweep.py [--quiet] [--selftest]
   --selftest: (1) the real tree must pass; (2) a synthetic fixture
   reproducing the r17 near-miss — a different test's opening line
   occupying a cited line number in BufferedSessionStreamSpec — must
-  FAIL. Exercised by the GATE ritual so the content checks cannot
-  silently rot.
+  FAIL; (3) a cited entry point replaced by another def must FAIL;
+  (4) a contextual citation after a bare spec name must be checked
+  against that spec, not the last `.scala` file named. Exercised by the
+  GATE ritual so the content checks cannot silently rot.
 Exit 0 when every citation resolves to its named/described anchor.
 """
 import re
@@ -47,6 +52,9 @@ SELFTEST = "--selftest" in sys.argv
 # explicit: Optional/path/File.scala:12,34   contextual: `:12,34`
 EXPLICIT = re.compile(r"([A-Za-z0-9_]+(?:/[A-Za-z0-9_]+)*\.scala):(\d+(?:,\d+)*)")
 CONTEXTUAL = re.compile(r"`:(\d+(?:,\d+)*)`")
+# a source file named without its extension, standing alone (not
+# `Foo.scala`, not a member reference such as `StreamOps.tumblingCounts`)
+BARE_NAME = re.compile(r"(?<![\w.])([A-Z]\w*)(?![\w.])")
 
 # an anchor line should carry real code; these are the shapes the ledger
 # cites (entry points, processors, tests, named vals) or at minimum a
@@ -91,11 +99,14 @@ def sweep(text, paths, read_lines, quiet=True):
     checked = 0
     kinds = {"name": 0, "desc": 0, "plausible": 0}
     cur_path = None
+    prev_end = 0
     events = [(m.start(), "explicit", m) for m in EXPLICIT.finditer(text)]
     events += [(m.start(), "contextual", m) for m in CONTEXTUAL.finditer(text)]
     events.sort(key=lambda e: e[0])
 
     for _, kind, m in events:
+        gap, prev_end = text[prev_end:m.start()], m.end()
+        bare = []
         if kind == "explicit":
             full, lines = m.group(1), m.group(2)
             fname = full.split("/")[-1]
@@ -118,6 +129,16 @@ def sweep(text, paths, read_lines, quiet=True):
                 continue
             cur_path = matching[0]
         else:
+            bare = [n for n in BARE_NAME.findall(gap) if f"{n}.scala" in paths]
+            if bare:
+                cands = paths[f"{bare[-1]}.scala"]
+                if len(cands) != 1:
+                    failures.append(
+                        f"{bare[-1]} `:{m.group(1)}`: bare name shared by "
+                        f"{len(cands)} sources — cite the file with a path suffix")
+                    cur_path = None
+                    continue
+                cur_path = cands[0]
             if cur_path is None:
                 continue
             lines = m.group(1)
@@ -141,7 +162,8 @@ def sweep(text, paths, read_lines, quiet=True):
                 if kind == "contextual" else None
             if da:
                 desc = da.group(1)
-            elif db:
+            elif db and (not bare or db.group(1).strip() != bare[-1]):
+                # the label is the bare file name itself, not a description
                 desc = db.group(1)
 
         nums = [int(x) for x in lines.split(",")]
@@ -255,6 +277,36 @@ def run_selftest():
         return 1
     print(f"[selftest] ok: name fixture caught at {ntarget.name}:{nln} "
           f"-> {nhit[0][:120]}")
+
+    # (4) a bare spec name before a contextual citation, after an explicit
+    # citation of ANOTHER file: the citation is the named spec's line, so
+    # a foreign test header there must fail even though the other file
+    # is untouched.
+    def first_test(p):
+        lines = p.read_text().splitlines()
+        ln = next(i + 1 for i, l in enumerate(lines) if TEST_TITLE.search(l))
+        return lines, ln, TEST_TITLE.search(lines[ln - 1]).group(1)
+
+    _, eln, etitle = first_test(paths["BufferedExactStreamSpec.scala"][0])
+    bare = paths["BufferedSessionStreamSpec.scala"][0]
+    lines, bln, title = first_test(bare)
+    fixture = (f"`BufferedExactStreamSpec.scala:{eln}` ({etitle}); "
+               f"BufferedSessionStreamSpec `:{bln}` ({title})")
+    bdoc = list(lines)
+    bdoc[bln - 1] = '  test("synthetic probe: a foreign test landed on this line") {'
+
+    def read_lines3(p):
+        return bdoc if p == bare else p.read_text().splitlines()
+
+    _, _, clean = sweep(fixture, paths, lambda p: p.read_text().splitlines())
+    _, _, failures3 = sweep(fixture, paths, read_lines3, quiet=True)
+    bhit = [f for f in failures3 if f.startswith(f"{bare.name}:{bln} ")]
+    if clean or not bhit:
+        print(f"[selftest] FAIL: bare-name citation `:{bln}` not checked against "
+              f"{bare.name} (clean run: {clean}; doctored run: {failures3})")
+        return 1
+    print(f"[selftest] ok: bare-name fixture caught at {bare.name}:{bln} "
+          f"-> {bhit[0][:120]}")
     return 0
 
 

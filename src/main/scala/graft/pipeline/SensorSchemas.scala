@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.types._
 
 /** Explicit input schemas mirroring the reference's protobuf contract
@@ -80,4 +81,11 @@ object SensorSchemas {
     StructField("snort_seconds", LongType, nullable = false),
     StructField("snort_service", StringType),
     StructField("snort_type_of_service", LongType)))
+
+  /** The proto3 default of a declared field: null for an `optional` one,
+    * else "" or 0. The decoder reads an absent field as this, and
+    * `SnortPipeline.alerts` reads a null in a non-optional field as it.
+    */
+  def proto3Default(f: StructField): Literal =
+    if (f.nullable) Literal(null, f.dataType) else Literal.default(f.dataType)
 }

@@ -2,7 +2,10 @@ package graft.pipeline
 
 import graft.functions.Scalars
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.KnownNullable
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
+import org.apache.spark.sql.types.{ArrayType, StructField, StructType}
 
 /** The reference's whole live data path as one declarative Spark plan
   * (SURVEY.md §3.1, internal/app/app.go:173-225):
@@ -91,9 +94,43 @@ object SnortPipeline {
     col("m.snort_udp_length").as("udp_len"),
     col("m.snort_vlan").as("vlan"))
 
-  /** Full pipeline: SensorEvent batch → flat SnortAlert records. */
+  /** Full pipeline: SensorEvent batch → flat SnortAlert records. The
+    * events are read under the declared SensorEvent schema first, so the
+    * SnortAlert type, and with it the sink's Avro layout, is one whatever
+    * frame carried them.
+    */
   def alerts(events: DataFrame): DataFrame =
-    explodeMetrics(events).select(alertColumns: _*)
+    explodeMetrics(declared(events)).select(alertColumns: _*)
+
+  /** `events` under [[SensorSchemas.sensorEventSchema]] by proto3 rules (a
+    * `from_json` frame, say, is nullable throughout): an `optional` field
+    * is nullable, a null in any other field reads as its proto3 default
+    * ("" or 0, what the decoder emits for an absent field), and a null
+    * metrics element is dropped, as the wire cannot carry one. Only
+    * nullability is read: a column of another type fails here, by name.
+    * Input already under the declared schema passes through unchanged.
+    */
+  private def declared(events: DataFrame): DataFrame = {
+    val reads = SensorSchemas.sensorEventSchema.fields.flatMap { want =>
+      val have = events.schema(want.name)
+      if (have.dataType == want.dataType && have.nullable == want.nullable) None
+      else Some(want.name -> proto3Read(col(want.name), have, want))
+    }
+    if (reads.isEmpty) events else events.withColumns(reads.toMap)
+  }
+
+  private def proto3Read(c: Column, have: StructField, want: StructField): Column = {
+    val read = (have.dataType, want.dataType) match {
+      case (ArrayType(h: StructType, _), ArrayType(w: StructType, _)) =>
+        transform(filter(c, _.isNotNull), m =>
+          struct(w.fields.map(f => proto3Read(m(f.name), h(f.name), f).as(f.name)).toSeq: _*))
+      case (h, w) if h == w => c
+      case (h, w) => throw new IllegalArgumentException(
+        s"SensorEvent column '${want.name}' is ${h.sql}, declared ${w.sql}")
+    }
+    if (want.nullable) ColumnBridge.column(KnownNullable(ColumnBridge.expression(read)))
+    else coalesce(read, ColumnBridge.column(SensorSchemas.proto3Default(want)))
+  }
 
   /** Kafka producer envelope (internal/app/app.go:182-215): record key,
     * the four routing headers, and the true event-time record timestamp

@@ -11,29 +11,27 @@ import org.apache.spark.unsafe.Platform
 
 /** Avro for the sink path. The image ships Avro core but not the
   * spark-avro bridge module, so the engine derives the Avro schema from
-  * the Spark StructType directly — the same "schema follows the struct"
-  * contract as the reference's generic Avro serializer
-  * (internal/schema/schema.go:36-43) — and writes the Avro binary form of
-  * that schema natively from the InternalRow ([[AvroWire]],
-  * [[ConfluentAvroValue]]).
+  * the Spark StructType directly and writes its binary form natively from
+  * the InternalRow ([[AvroWire]], [[ConfluentAvroValue]]). The reference's
+  * generic Avro serializer follows one fixed Go struct
+  * (internal/schema/schema.go:36-43); here the SnortAlert struct is fixed
+  * because `SnortPipeline.alerts` reads every input under the declared
+  * SensorEvent schema, so each schema id carries one Avro layout.
   */
 object AvroCodec {
 
-  /** StructType → Avro record schema. Nullable fields become
-    * union(null, T); nested structs recurse (SnortAlert.metadata).
+  /** StructType → Avro record schema over the three kinds a SnortAlert
+    * has: string, long and nested record (SnortAlert.metadata). Nullable
+    * fields become union(null, T).
     */
   def avroSchema(st: StructType, name: String, namespace: String = "graft"): Schema = {
     val fields = new java.util.ArrayList[Schema.Field]()
     st.fields.foreach { f =>
-      val base = f.dataType match {
-        case StringType  => Schema.create(Schema.Type.STRING)
-        case LongType    => Schema.create(Schema.Type.LONG)
-        case IntegerType => Schema.create(Schema.Type.INT)
-        case DoubleType  => Schema.create(Schema.Type.DOUBLE)
-        case BooleanType => Schema.create(Schema.Type.BOOLEAN)
-        case BinaryType  => Schema.create(Schema.Type.BYTES)
-        case nested: StructType => avroSchema(nested, s"${name}_${f.name}", namespace)
-        case other => throw new IllegalArgumentException(s"unsupported type $other for ${f.name}")
+      val base = AvroWire.kindOf(f) match {
+        case AvroWire.Utf8 => Schema.create(Schema.Type.STRING)
+        case AvroWire.I64 => Schema.create(Schema.Type.LONG)
+        case AvroWire.Rec =>
+          avroSchema(f.dataType.asInstanceOf[StructType], s"${name}_${f.name}", namespace)
       }
       val (schema, default) =
         if (f.nullable)
@@ -57,19 +55,23 @@ object AvroCodec {
 
 /** Static kernel: Avro binary encoding (public Avro spec) of an InternalRow
   * under `AvroCodec.avroSchema` of its StructType — union branch index
-  * 0 (null) / 1 (value) for nullable fields, zigzag varint int/long,
-  * little-endian IEEE double, one-byte boolean, length-prefixed bytes and
-  * UTF-8 copied straight out of the UTF8String, nested records inline.
+  * 0 (null) / 1 (value) for nullable fields, zigzag varint long, UTF-8
+  * copied straight out of the UTF8String, nested records inline.
   * Sized first, so each value is written once into an exact-size array.
   */
 object AvroWire {
   private[streaming] final val Utf8 = 0
   private[streaming] final val I64 = 1
-  private[streaming] final val I32 = 2
-  private[streaming] final val F64 = 3
-  private[streaming] final val Bool = 4
-  private[streaming] final val Bytes = 5
-  private[streaming] final val Rec = 6
+  private[streaming] final val Rec = 2
+
+  /** The kind of one field; any other type fails, naming the field. */
+  private[streaming] def kindOf(f: StructField): Int = f.dataType match {
+    case StringType => Utf8
+    case LongType => I64
+    case _: StructType => Rec
+    case other =>
+      throw new IllegalArgumentException(s"unsupported Avro type ${other.sql} for field ${f.name}")
+  }
 
   /** 5-byte Confluent header for `schemaId`, then the Avro body of `row`. */
   def framed(row: InternalRow, layout: AvroLayout, schemaId: Int): Array[Byte] = {
@@ -104,10 +106,6 @@ object AvroWire {
     (l.kind(i): @annotation.switch) match {
       case Utf8 => val b = row.getUTF8String(i).numBytes; varintSize(zigzag(b)) + b
       case I64 => varintSize(zigzag(row.getLong(i)))
-      case I32 => varintSize(zigzag(row.getInt(i)))
-      case F64 => 8
-      case Bool => 1
-      case Bytes => val b = row.getBinary(i).length; varintSize(zigzag(b)) + b
       case Rec => size(row.getStruct(i, l.nested(i).kind.length), l.nested(i))
     }
 
@@ -132,18 +130,6 @@ object AvroWire {
           s.writeToMemory(out, Platform.BYTE_ARRAY_OFFSET + p)
           p + s.numBytes
         case I64 => writeVarint(out, pos, zigzag(row.getLong(i)))
-        case I32 => writeVarint(out, pos, zigzag(row.getInt(i)))
-        case F64 =>
-          val bits = java.lang.Double.doubleToRawLongBits(row.getDouble(i))
-          var k = 0
-          while (k < 8) { out(pos + k) = (bits >>> (8 * k)).toByte; k += 1 }
-          pos + 8
-        case Bool => out(pos) = (if (row.getBoolean(i)) 1 else 0).toByte; pos + 1
-        case Bytes =>
-          val b = row.getBinary(i)
-          val p = writeVarint(out, pos, zigzag(b.length))
-          System.arraycopy(b, 0, out, p, b.length)
-          p + b.length
         case Rec => write(row.getStruct(i, l.nested(i).kind.length), l.nested(i), out, pos)
       }
       i += 1
@@ -156,17 +142,7 @@ object AvroWire {
   * [[AvroWire]] kernel walks it.
   */
 final class AvroLayout(st: StructType) extends Serializable {
-  import AvroWire._
-  val kind: Array[Int] = st.fields.map(_.dataType match {
-    case StringType => Utf8
-    case LongType => I64
-    case IntegerType => I32
-    case DoubleType => F64
-    case BooleanType => Bool
-    case BinaryType => Bytes
-    case _: StructType => Rec
-    case other => throw new IllegalArgumentException(s"unsupported Avro type $other")
-  })
+  val kind: Array[Int] = st.fields.map(AvroWire.kindOf)
   val nullable: Array[Boolean] = st.fields.map(_.nullable)
   val nested: Array[AvroLayout] = st.fields.map(_.dataType match {
     case s: StructType => new AvroLayout(s)

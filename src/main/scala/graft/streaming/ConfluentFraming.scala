@@ -1,8 +1,5 @@
 package graft.streaming
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions._
-
 /** Confluent Schema Registry wire framing (public wire format): 1 magic byte
   * 0x00 + 4-byte big-endian schema id + — for the protobuf serde only — a
   * zigzag-varint *message-indexes* block locating the message type inside
@@ -89,13 +86,9 @@ object ConfluentFraming {
     */
   def payloadOffset(framed: Array[Byte]): Int = scan(framed, null)
 
-  /** Frame a payload for a fixed schema id + message indexes (static per
+  /** The header bytes for a schema id + message-indexes list (static per
     * target topic/message type; [0] — the wire shorthand 0x00 — by default).
     */
-  def add(payload: Column, schemaId: Int, messageIndexes: Seq[Int] = Seq(0)): Column =
-    concat(lit(header(schemaId, messageIndexes)), payload)
-
-  /** The literal header bytes for a schema id + message-indexes list. */
   def header(schemaId: Int, messageIndexes: Seq[Int] = Seq(0)): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream()
     out.write(0)
@@ -108,8 +101,4 @@ object ConfluentFraming {
     }
     out.toByteArray
   }
-
-  /** Schema id carried in a framed value (for routing / compat checks). */
-  def schemaId(value: Column): Column =
-    conv(hex(substring(value, 2, 4)), 16, 10).cast("int")
 }

@@ -90,11 +90,7 @@ object ProtobufWire {
         case other => throw new IllegalArgumentException(s"unsupported $other")
       }
     }
-    val defaults: Array[Any] = schema.fields.map { f =>
-      if (f.nullable) null
-      else if (f.dataType == StringType) UTF8String.EMPTY_UTF8
-      else 0L
-    }
+    val defaults: Array[Any] = schema.fields.map(SensorSchemas.proto3Default(_).value)
   }
 
   private val metricLayout = new Layout(SensorSchemas.metricSchema, metricFields, null)
@@ -186,15 +182,15 @@ object ProtobufWire {
     new GenericInternalRow(values)
   }
 
-  /** The decode kernel: one Kafka value → 0 or 1 SensorEvent rows. A null
-    * value (a Kafka tombstone, the compacted-topic delete marker), a bad
-    * Confluent frame or bad protobuf is counted once on `malformed` (when
-    * not null) and yields no row.
+  /** The decode kernel: one registry-framed Kafka value → 0 or 1
+    * SensorEvent rows. A null value (a Kafka tombstone, the compacted-topic
+    * delete marker), a bad Confluent frame or bad protobuf is counted once
+    * on `malformed` (when not null) and yields no row.
     */
-  def decodeRows(value: Array[Byte], framed: Boolean, malformed: LongAccumulator): Iterator[InternalRow] =
+  def decodeRows(value: Array[Byte], malformed: LongAccumulator): Iterator[InternalRow] =
     try {
       if (value == null) throw new MalformedRecord("tombstone")
-      val from = if (framed) ConfluentFraming.payloadOffset(value) else 0
+      val from = ConfluentFraming.payloadOffset(value)
       Iterator.single(decodeMessage(new Reader(value, from, value.length), eventLayout))
     } catch {
       case _: MalformedRecord | _: ConfluentFraming.BadFrame =>
@@ -205,41 +201,28 @@ object ProtobufWire {
   /** Named failed-event counter, visible in the Spark UI / status API —
     * the engine's form of the reference's count-and-continue failed-event
     * accounting (app.go:85-97). Create once per pipeline and pass to
-    * [[decode]]/[[decodeFramed]].
+    * [[decodeFramed]].
     */
   def malformedCounter(spark: org.apache.spark.sql.SparkSession): LongAccumulator =
     spark.sparkContext.longAccumulator("graft.protobuf.malformed_records")
 
-  /** DataFrame op: binary `valueCol` (an unframed protobuf payload) → full
-    * SensorEvent rows, through the [[SensorEventDecoder]] generator, so the
-    * same operator serves batch frames and `readStream` pipelines.
-    * Malformed records are counted on `malformed` (when given) and dropped,
-    * mirroring the reference's count-and-continue handling of failed
-    * events (app.go:85-97) — poison Kafka messages must not kill the
-    * stream, but their rate must stay observable.
-    */
-  def decode(
-      df: DataFrame,
-      valueCol: String,
-      malformed: Option[LongAccumulator] = None): DataFrame =
-    decodeWith(df, valueCol, framed = false, malformed)
-
-  /** Like [[decode]] but takes the raw Confluent-framed Kafka value and
-    * parses magic + schema id + message-indexes inside the same kernel
+  /** DataFrame op: binary `valueCol` (the raw registry-framed Kafka value)
+    * → full SensorEvent rows, through the [[SensorEventDecoder]] generator,
+    * so the same operator serves batch frames and `readStream` pipelines.
+    * Magic + schema id + message-indexes are parsed inside the same kernel
     * (the indexes block is variable-length, so framing cannot be a static
-    * `substring`). Bad frames count as malformed too.
+    * `substring`). Bad frames and bad protobuf are counted on `malformed`
+    * (when given) and dropped, mirroring the reference's count-and-continue
+    * handling of failed events (app.go:85-97) — poison Kafka messages must
+    * not kill the stream, but their rate must stay observable.
     */
   def decodeFramed(
       df: DataFrame,
       valueCol: String,
-      malformed: Option[LongAccumulator] = None): DataFrame =
-    decodeWith(df, valueCol, framed = true, malformed)
-
-  private def decodeWith(df: DataFrame, valueCol: String, framed: Boolean,
-      malformed: Option[LongAccumulator]): DataFrame = {
+      malformed: Option[LongAccumulator] = None): DataFrame = {
     import org.apache.spark.sql.graftbridge.ColumnBridge
     df.select(ColumnBridge.column(SensorEventDecoder(
-      ColumnBridge.expression(df.col(valueCol)), framed, malformed.orNull)))
+      ColumnBridge.expression(df.col(valueCol)), malformed.orNull)))
   }
 
   // ---- encode (tests + sink symmetry) ------------------------------------
@@ -290,10 +273,10 @@ object ProtobufWire {
 /** 0-or-1-row generator over a binary Kafka value: the SensorEvent decode
   * kernel ([[ProtobufWire.decodeRows]]) as a Catalyst `Generator`, so the
   * decoded columns feed the rest of the plan as InternalRows inside the
-  * same whole-stage-codegen span. `framed` reads a Confluent header first;
-  * `malformed` (may be null) counts the dropped records.
+  * same whole-stage-codegen span. `malformed` (may be null) counts the
+  * dropped records.
   */
-case class SensorEventDecoder(child: Expression, framed: Boolean, malformed: LongAccumulator)
+case class SensorEventDecoder(child: Expression, malformed: LongAccumulator)
     extends UnaryExpression with Generator {
 
   override def elementSchema: StructType = SensorSchemas.sensorEventSchema
@@ -304,7 +287,7 @@ case class SensorEventDecoder(child: Expression, framed: Boolean, malformed: Lon
       s"SensorEvent decode requires BINARY input, got ${child.dataType.sql}")
 
   override def eval(input: InternalRow): IterableOnce[InternalRow] =
-    ProtobufWire.decodeRows(child.eval(input).asInstanceOf[Array[Byte]], framed, malformed)
+    ProtobufWire.decodeRows(child.eval(input).asInstanceOf[Array[Byte]], malformed)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val in = child.genCode(ctx)
@@ -314,12 +297,12 @@ case class SensorEventDecoder(child: Expression, framed: Boolean, malformed: Lon
     ev.copy(code = code"""
       |${in.code}
       |scala.collection.Iterator<InternalRow> ${ev.value} =
-      |  graft.streaming.ProtobufWire.decodeRows(${in.isNull} ? null : ${in.value}, $framed, $counter);
+      |  graft.streaming.ProtobufWire.decodeRows(${in.isNull} ? null : ${in.value}, $counter);
       |""".stripMargin, isNull = FalseLiteral)
   }
 
   // the counter's running value is not part of the plan's identity
-  override protected def stringArgs: Iterator[Any] = Iterator(child, framed)
+  override protected def stringArgs: Iterator[Any] = Iterator(child)
 
   override protected def withNewChildInternal(newChild: Expression): SensorEventDecoder =
     copy(child = newChild)

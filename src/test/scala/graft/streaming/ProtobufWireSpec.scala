@@ -26,27 +26,25 @@ class ProtobufWireSpec extends SparkSpec {
 
   private val valueSchema = StructType(Seq(StructField("value", BinaryType)))
 
-  /** The product decoder over `values` through a DataFrame, in the given
-    * codegen mode: the decoded rows in input order and the malformed count.
+  /** The product decoder over framed `values` through a DataFrame, in the
+    * given codegen mode: the decoded rows in input order and the malformed
+    * count.
     */
-  private def productDecode(values: Seq[Array[Byte]], framed: Boolean,
-      codegen: Boolean = true): (Seq[Row], Long) =
+  private def productDecode(values: Seq[Array[Byte]], codegen: Boolean = true): (Seq[Row], Long) =
     withConf("spark.sql.codegen.wholeStage" -> codegen.toString,
         "spark.sql.codegen.factoryMode" -> (if (codegen) "FALLBACK" else "NO_CODEGEN")) {
       val counter = ProtobufWire.malformedCounter(spark)
       val df = spark.createDataFrame(values.map(Row(_)).asJava, valueSchema)
-      val out =
-        if (framed) ProtobufWire.decodeFramed(df, "value", Some(counter))
-        else ProtobufWire.decode(df, "value", Some(counter))
+      val out = ProtobufWire.decodeFramed(df, "value", Some(counter))
       (out.collect().toSeq, counter.value)
     }
 
-  /** One value straight through the decode kernel, as a Row; None when it
-    * counted the value malformed (exactly once).
+  /** One framed value straight through the decode kernel, as a Row; None
+    * when it counted the value malformed (exactly once).
     */
-  private def kernelDecode(value: Array[Byte], framed: Boolean): Option[Row] = {
+  private def kernelDecode(value: Array[Byte]): Option[Row] = {
     val counter = new LongAccumulator
-    val rows = ProtobufWire.decodeRows(value, framed, counter).toList
+    val rows = ProtobufWire.decodeRows(value, counter).toList
     assert(rows.size + counter.value == 1, s"${rows.size} rows, ${counter.value} malformed")
     rows.foreach(assertCanonicalUtf8(_, SensorSchemas.sensorEventSchema))
     rows.headOption.map(toRow)
@@ -74,17 +72,17 @@ class ProtobufWireSpec extends SparkSpec {
     r => convert(r).asInstanceOf[Row]
   }
 
-  /** Every value decodes in the kernel, and in both DataFrame codegen
-    * modes, exactly as the Row oracle decodes it, or is counted malformed
-    * where the oracle rejects it.
+  /** Every framed value decodes in the kernel, and in both DataFrame
+    * codegen modes, exactly as the Row oracle decodes it, or is counted
+    * malformed where the oracle rejects it.
     */
-  private def assertMatchesOracle(values: Seq[Array[Byte]], framed: Boolean): Unit = {
-    val want = values.map(RowProtobufOracle.decodeValue(_, framed))
+  private def assertMatchesOracle(values: Seq[Array[Byte]]): Unit = {
+    val want = values.map(RowProtobufOracle.decodeValue(_, framed = true))
     values.zip(want).zipWithIndex.foreach { case ((v, w), i) =>
-      assert(kernelDecode(v, framed) == w, s"value $i: ${Option(v).map(_.toSeq)}")
+      assert(kernelDecode(v) == w, s"value $i: ${Option(v).map(_.toSeq)}")
     }
     for (codegen <- Seq(true, false)) {
-      val (rows, malformed) = productDecode(values, framed, codegen)
+      val (rows, malformed) = productDecode(values, codegen)
       assert(rows == want.flatten, s"codegen=$codegen")
       assert(malformed == want.count(_.isEmpty), s"codegen=$codegen")
     }
@@ -117,20 +115,19 @@ class ProtobufWireSpec extends SparkSpec {
 
   test("roundtrip: encode → Confluent frame → decodeFramed equals input") {
     val original = event("hash-x", Seq(metric("25/01/31-04:15:06.927463"), metric("t2")))
-    val (rows, malformed) =
-      productDecode(Seq(withFrame(ProtobufWire.encodeSensorEvent(original))), framed = true)
+    val (rows, malformed) = productDecode(Seq(withFrame(ProtobufWire.encodeSensorEvent(original))))
     assert(rows == Seq(original) && malformed == 0)
   }
 
   test("unknown fields are skipped, defaults fill absent scalars") {
     // append an unknown varint field (number 99): tag = 99<<3|0 = 792
     val base = ProtobufWire.encodeSensorEvent(event("h", Seq.empty))
-    val decoded = kernelDecode(base ++ bytes(0x98, 0x06, 0x2a), framed = false).get
+    val decoded = kernelDecode(withFrame(base ++ bytes(0x98, 0x06, 0x2a))).get
     val schema = SensorSchemas.sensorEventSchema
     assert(decoded.getString(schema.fieldIndex("event_hash_sha256")) == "h")
     assert(decoded.isNullAt(schema.fieldIndex("snort_classification")))
     // the empty message: plain scalars default, optional ones null, metrics empty
-    val empty = kernelDecode(Array.emptyByteArray, framed = false).get
+    val empty = kernelDecode(withFrame(Array.emptyByteArray)).get
     assert(empty.getString(schema.fieldIndex("sensor_id")) == "")
     assert(empty.getLong(schema.fieldIndex("event_seconds")) == 0L)
     assert(empty.isNullAt(schema.fieldIndex("snort_service")))
@@ -142,7 +139,7 @@ class ProtobufWireSpec extends SparkSpec {
     val value = withFrame(ProtobufWire.encodeSensorEvent(
       event("hash-1", Seq(metric("25/01/31-04:15:06.927463"), metric("x")))))
     val df = spark.createDataFrame(Seq(Row(value)).asJava, valueSchema)
-    assert(df.select(ConfluentFraming.schemaId(col("value"))).head().getInt(0) == 17)
+    assert(ConfluentFraming.parseHeader(value)._1 == 17)
     val alerts = SnortPipeline.alerts(ProtobufWire.decodeFramed(df, "value"))
     assert(alerts.collect().length == 2)
     val row = alerts.orderBy(col("timestamp")).head()
@@ -159,13 +156,13 @@ class ProtobufWireSpec extends SparkSpec {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
     val in = MemoryStream[Array[Byte]](spark)
-    val decoded = ProtobufWire.decode(in.toDF().toDF("payload"), "payload")
+    val decoded = ProtobufWire.decodeFramed(in.toDF().toDF("payload"), "payload")
     val q = decoded.writeStream.format("memory").queryName("proto_stream").start()
-    in.addData(
+    in.addData(Seq(
       ProtobufWire.encodeSensorEvent(event("ok-1", Seq(metric("t")))),
       Array[Byte](0x0a, 0x7f),                   // truncated length-delimited
       Array[Byte](0x98.toByte, 0x06),            // truncated varint field
-      ProtobufWire.encodeSensorEvent(event("ok-2", Seq.empty)))
+      ProtobufWire.encodeSensorEvent(event("ok-2", Seq.empty))).map(withFrame))
     q.processAllAvailable()
     q.stop()
     val hashes = spark.table("proto_stream")
@@ -219,12 +216,12 @@ class ProtobufWireSpec extends SparkSpec {
     out.write((4 << 3) | 2); out.write(0x02); out.write(0x41); out.write(0x42)
     // then a correct string field 5 (sensor_id)
     out.write((5 << 3) | 2); out.write(0x02); out.write('s'); out.write('1')
-    val decoded = kernelDecode(out.toByteArray, framed = false).get
+    val decoded = kernelDecode(withFrame(out.toByteArray)).get
     val schema = SensorSchemas.sensorEventSchema
     assert(decoded.getLong(schema.fieldIndex("event_seconds")) == 0L) // default, not 0x41
     assert(decoded.getString(schema.fieldIndex("sensor_id")) == "s1") // parse continued
     // string field with varint wire type likewise skipped
-    val decoded2 = kernelDecode(bytes((5 << 3) | 0, 0x07), framed = false).get
+    val decoded2 = kernelDecode(withFrame(bytes((5 << 3) | 0, 0x07))).get
     assert(decoded2.getString(schema.fieldIndex("sensor_id")) == "")
   }
 
@@ -279,8 +276,9 @@ class ProtobufWireSpec extends SparkSpec {
       else ConfluentFraming.header(17, Seq(rnd.nextInt(3), rnd.nextInt(5))) ++ body
     }
     assert(values.forall(v => RowProtobufOracle.decodeValue(v, framed = true).isDefined))
-    assertMatchesOracle(values, framed = true)
-    assertMatchesOracle(values.map(v => v.drop(ConfluentFraming.payloadOffset(v))), framed = false)
+    assertMatchesOracle(values)
+    // the same payloads behind the [0] shorthand header
+    assertMatchesOracle(values.map(v => withFrame(v.drop(ConfluentFraming.payloadOffset(v)))))
   }
 
   test("hostile input: each value decodes as the oracle does or counts once as malformed") {
@@ -316,7 +314,6 @@ class ProtobufWireSpec extends SparkSpec {
       ok ++ lenDelimited(5, bytes(0xf0, 0x8f, 0xbf, 0xbf)), // overlong 4-byte
       ok ++ lenDelimited(1, lenDelimited(2, bytes(0x62, 0x80, 0x63))), // invalid UTF-8 in a metric
       ok ++ lenDelimited(5, "ok ✓ 😀".getBytes(UTF_8)))    // valid multi-byte
-    assertMatchesOracle(hostile, framed = false)
     val frames = hostile.filter(_ != null).map(withFrame) ++ Seq(
       bytes(1, 0, 0, 0, 17, 0) ++ ok,                     // bad magic
       bytes(0, 0, 0, 0, 17),                              // shorter than 6 bytes
@@ -325,7 +322,7 @@ class ProtobufWireSpec extends SparkSpec {
       bytes(0, 0, 0, 0, 17, 2, 1) ++ ok,                  // negative index
       bytes(0, 0, 0, 0, 17, 6, 2),                        // truncated index block
       bytes(0, 0, 0, 0, 17) ++ varint(256) ++ Array.fill(128)(0.toByte) ++ ok) // 128 indexes: valid
-    assertMatchesOracle(null +: frames, framed = true)
+    assertMatchesOracle(null +: frames)
   }
 
   test("lengths near Long.MaxValue count once as malformed") {
@@ -341,8 +338,7 @@ class ProtobufWireSpec extends SparkSpec {
       ok ++ tag(99, 2) ++ varint(Long.MaxValue - 2) ++ bytes(1, 2), // unknown wire-type-2 field
       tag(99, 2) ++ varint(Long.MaxValue - 10))                     // unknown, back to the start
     assert(overflowing.forall(RowProtobufOracle.decodeValue(_, framed = false).isEmpty))
-    assertMatchesOracle(overflowing, framed = false)
-    assertMatchesOracle(overflowing.map(withFrame), framed = true)
+    assertMatchesOracle(overflowing.map(withFrame))
   }
 
   private def withFrame(payload: Array[Byte]): Array[Byte] =

@@ -158,17 +158,13 @@ class StreamingSpec extends SparkSpec {
     assert(got == Map("10.0.0.1" -> Some("internal"), "1.2.3.4" -> None))
   }
 
-  test("Confluent framing: add/schemaId/payloadOffset roundtrip") {
+  test("Confluent framing: header/payloadOffset roundtrip") {
     val payload = "hello".getBytes("UTF-8")
-    val df = Seq(Tuple1(payload)).toDF("payload")
-      .withColumn("framed", ConfluentFraming.add($"payload", 42))
-      .withColumn("sid", ConfluentFraming.schemaId($"framed"))
-    val row = df.select($"framed", $"sid").head()
-    val framed = row.getAs[Array[Byte]]("framed")
+    val framed = ConfluentFraming.header(42) ++ payload
     // 6-byte header: magic + schema id + the 0x00 message-indexes shorthand
     assert(framed.length == payload.length + 6)
     assert(framed.drop(ConfluentFraming.payloadOffset(framed)).toSeq == payload.toSeq)
-    assert(row.getAs[Int]("sid") == 42)
+    assert(ConfluentFraming.parseHeader(framed)._1 == 42)
   }
 
   test("Avro roundtrip: nested struct, nullables, framing in prepared records") {
@@ -259,30 +255,74 @@ class StreamingSpec extends SparkSpec {
     val got = KafkaSink.prepareRecords(envelope, "t", 9).collect()
       .map(_.value.toSeq).sortBy(_.mkString(",")).toSeq
     assert(got == want)
-    // every other type the schema derivation maps, nullable and not
-    import org.apache.spark.sql.types._
-    val st = StructType(Seq(
-      StructField("i", IntegerType, nullable = false), StructField("oi", IntegerType),
-      StructField("d", DoubleType, nullable = false), StructField("od", DoubleType),
-      StructField("b", BooleanType, nullable = false), StructField("ob", BooleanType),
-      StructField("bin", BinaryType, nullable = false), StructField("obin", BinaryType),
-      StructField("rec", StructType(Seq(StructField("s", StringType),
-        StructField("l", LongType, nullable = false))))))
-    val rows = (0 until 40).map { _ =>
-      def int(): Int = Seq(0, -1, 63, -64, Int.MaxValue, Int.MinValue, rnd.nextInt())(rnd.nextInt(7))
-      def dbl(): Double = Seq(0.0, -0.0, 1.5, Double.NaN, Double.NegativeInfinity,
-        Double.MinPositiveValue, rnd.nextDouble())(rnd.nextInt(7))
-      def bin(): Array[Byte] = Array.fill(rnd.nextInt(4) * 50)(rnd.nextInt(256).toByte)
-      Row(int(), opt(int()), dbl(), opt(dbl()), rnd.nextBoolean(), opt(rnd.nextBoolean()),
-        bin(), opt(bin()), opt(Row(opt(text()), long())))
-    }
-    assertAvroMatchesOracle(spark.createDataFrame(rows.asJava, st), 200)
     // a type the schema derivation does not map, even nested, fails analysis
     val nestedArray = Seq((1L, Seq(1L))).toDF("l", "xs")
       .select(struct($"l", struct($"xs").as("n")).as("s"))
     val err = intercept[org.apache.spark.sql.AnalysisException](
       nestedArray.select(AvroCodec.confluentValue($"s", 1)))
     assert(err.getMessage.contains("unsupported Avro type"), err.getMessage)
+    val int = Seq((1L, 2)).toDF("l", "i").select(struct($"l", $"i").as("s"))
+    val intErr = intercept[org.apache.spark.sql.AnalysisException](
+      int.select(AvroCodec.confluentValue($"s", 1)))
+    assert(intErr.getMessage.contains("unsupported Avro type INT for field i"), intErr.getMessage)
+  }
+
+  test("one Avro layout per schema id: from_json and framed protobuf emit identical records") {
+    import graft.pipeline.SnortPipeline
+    val common = """"event_metrics_count":1,"event_seconds":1738296906,"sensor_id":"s",
+      "sensor_version":"1","event_read_at":1738296906927463,"event_sent_at":1738296906900000,
+      "event_received_at":1738296906000000,"snort_interface":"eth0","snort_priority":2,
+      "snort_protocol":"TCP","snort_rule_gid":1,"snort_rule_rev":1,"snort_rule_sid":1,
+      "snort_rule":"r""""
+    // a full event, and one whose non-optional snort_seconds, snort_message
+    // and metric snort_timestamp are null, with a null metrics element
+    val full = s"""{"metrics":[{"snort_timestamp":"25/01/31-04:15:06.927463",
+      "snort_dst_port":443},{"snort_timestamp":"25/01/31-04:15:07.1"}],
+      "event_hash_sha256":"h-full","snort_classification":"recon","snort_message":"m",
+      "snort_seconds":1738296906,$common}"""
+    val nulls = s"""{"metrics":[null,{"snort_timestamp":null,"snort_src_address":"10.0.0.1"}],
+      "event_hash_sha256":"h-nulls","snort_message":null,"snort_seconds":null,$common}"""
+    val json = Seq(full, nulls).map(_.replaceAll("\n\\s*", "")).toDF("value")
+      .select(from_json($"value", SensorSchemas.sensorEventSchema).as("e")).select("e.*")
+    // the same events on the wire: null fields and elements left off
+    val framed = json.collect().toSeq.map { r =>
+      val wire = Row.fromSeq(r.toSeq.updated(0, r.getSeq[Row](0).filter(_ != null)))
+      ConfluentFraming.header(7) ++ ProtobufWire.encodeSensorEvent(wire)
+    }
+    val proto = ProtobufWire.decodeFramed(framed.toDF("value"), "value")
+    def records(events: org.apache.spark.sql.DataFrame): Seq[(String, Seq[Byte], Long, Map[String, String])] =
+      KafkaSink.prepareRecords(SnortPipeline.withEnvelope(SnortPipeline.alerts(events)), "alerts", 7)
+        .collect().toSeq
+        .map(r => (new String(r.key, "UTF-8"), r.value.toSeq, r.timestampMs, r.headers))
+        .sortBy(r => (r._1, r._2.mkString(",")))
+    val fromJson = records(json)
+    val fromProto = records(proto)
+    assert(fromJson.map(_._1) == Seq("h-full", "h-full", "h-nulls"))
+    assert(fromJson == fromProto)
+    // an optional field that is non-null in the frame keeps its union
+    val classified = proto.withColumn("snort_classification", coalesce($"snort_classification", lit("recon")))
+    assert(records(classified).take(2) == fromProto.take(2))
+    // only nullability is read: a column of another type is not cast
+    val retyped = intercept[IllegalArgumentException](
+      SnortPipeline.alerts(json.withColumn("snort_seconds", $"snort_seconds".cast("int"))))
+    assert(retyped.getMessage.contains("'snort_seconds' is INT, declared BIGINT"), retyped.getMessage)
+    // every value reads back, whole, through the one SnortAlert schema
+    val declared = SnortPipeline.withEnvelope(SnortPipeline.alerts(
+      spark.createDataFrame(java.util.List.of[Row](), SensorSchemas.sensorEventSchema)))
+      .drop("kafka_key", "event_time", "headers").schema
+    val schema = AvroCodec.avroSchema(declared, "SnortAlert")
+    val back = fromJson.map { case (_, value, _, _) =>
+      val body = value.drop(5).toArray
+      val decoder = DecoderFactory.get().binaryDecoder(body, null)
+      val rec = new GenericDatumReader[GenericRecord](schema).read(null, decoder)
+      assert(decoder.isEnd && RowAvroOracle.encode(rec, schema).toSeq == body.toSeq)
+      rec
+    }
+    // the null event reads as its proto3 defaults, stamped at epoch 0
+    assert(fromJson(2)._3 == 0L)
+    assert(back(2).get("seconds") == 0L && back(2).get("msg").toString == "")
+    assert(back(2).get("timestamp").toString == "" && back(2).get("src_addr").toString == "10.0.0.1")
+    assert(back(0).get("class").toString == "recon" && back(2).get("class") == null)
   }
 
   test("stream-stream join: matches within lag, drops outside, outer-pads after watermark") {
