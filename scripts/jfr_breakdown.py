@@ -1,0 +1,116 @@
+#!/usr/bin/env python3
+"""Where a streaming query's stream-execution thread spends its CPU, from a JFR recording.
+
+Reads the `jdk.ExecutionSample` events of a Java Flight Recorder file
+(through `jfr print --json --stack-depth 300 --events jdk.ExecutionSample`,
+or a file that command already wrote) and buckets the samples of every
+"stream execution thread" (the thread that plans and runs each
+micro-batch) by the innermost phase marker on the stack:
+
+  analysis          Catalyst analysis (QueryExecution.analyzed, Analyzer)
+  optimise/plan     optimizer rules, physical planning, prepareForExecution
+  codegen source    whole-stage and projection code generation (including
+                    Janino on a code-cache miss)
+  closure clean     Spark's ClosureCleaner
+  job               job submission through the DAG scheduler
+  other             everything else (offset/commit logs, the sink's own work)
+
+Record a benchmark run with, for example:
+
+  JDK_JAVA_OPTIONS=-XX:StartFlightRecording=filename=etl.jfr,settings=profile \\
+    python3 alertbench/run.py --workload etl --seed 1 --seconds 6 --trace 0
+  python3 scripts/jfr_breakdown.py etl.jfr
+
+Usage: python3 scripts/jfr_breakdown.py RECORDING.(jfr|json) [--thread REGEX]
+"""
+import argparse
+import json
+import re
+import subprocess
+import sys
+
+BUCKETS = ["analysis", "optimise/plan", "codegen source", "closure clean", "job", "other"]
+
+# (bucket, regex over "class.method"), tried on each frame from the top of
+# the stack down; the first frame that matches any rule names the bucket.
+RULES = [
+    ("closure clean", re.compile(r"^org\.apache\.spark\.util\.(Spark)?ClosureCleaner")),
+    ("codegen source", re.compile(
+        r"^org\.apache\.spark\.sql\.catalyst\.expressions\.codegen\."
+        r"|^org\.apache\.spark\.sql\.execution\.WholeStageCodegenExec\.doCodeGen"
+        r"|^org\.codehaus\.(janino|commons)\.")),
+    ("analysis", re.compile(
+        r"^org\.apache\.spark\.sql\.catalyst\.analysis\."
+        r"|^org\.apache\.spark\.sql\.execution\.QueryExecution\.(assertAnalyzed|analyzed|lazyAnalyzed)")),
+    ("optimise/plan", re.compile(
+        r"^org\.apache\.spark\.sql\.catalyst\.optimizer\."
+        r"|^org\.apache\.spark\.sql\.catalyst\.planning\."
+        r"|^org\.apache\.spark\.sql\.execution\.SparkStrategies"
+        r"|^org\.apache\.spark\.sql\.execution\.QueryExecution\$?\.(optimizedPlan|lazyOptimizedPlan"
+        r"|sparkPlan|lazySparkPlan|executedPlan|lazyExecutedPlan|createSparkPlan|prepareForExecution)")),
+    ("job", re.compile(
+        r"^org\.apache\.spark\.scheduler\.DAGScheduler"
+        r"|^org\.apache\.spark\.SparkContext\.(runJob|submitJob)")),
+]
+
+
+def frame_name(frame):
+    m = frame["method"]
+    return m["type"]["name"].replace("/", ".") + "." + m["name"]
+
+
+def bucket(frames):
+    for f in frames:
+        name = frame_name(f)
+        for b, rule in RULES:
+            if rule.search(name):
+                return b
+    return "other"
+
+
+def events(text):
+    """Yield the recording's events one at a time, so a large print does
+    not have to be held as one parsed tree."""
+    dec = json.JSONDecoder()
+    i = text.index("[", text.index('"events"')) + 1
+    while True:
+        while text[i] in " \t\r\n,":
+            i += 1
+        if text[i] == "]":
+            return
+        ev, i = dec.raw_decode(text, i)
+        yield ev
+
+
+def main():
+    ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
+    ap.add_argument("recording", help="a .jfr file, or the JSON `jfr print --json` wrote")
+    ap.add_argument("--thread", default=r"^stream execution thread",
+                    help="regex over the sampled thread's Java name")
+    args = ap.parse_args()
+    if args.recording.endswith(".json"):
+        with open(args.recording) as f:
+            text = f.read()
+    else:
+        text = subprocess.run(
+            ["jfr", "print", "--json", "--stack-depth", "300", "--events", "jdk.ExecutionSample",
+             args.recording], check=True, stdout=subprocess.PIPE, text=True).stdout
+    thread = re.compile(args.thread)
+    counts = dict.fromkeys(BUCKETS, 0)
+    total = 0
+    for ev in events(text):
+        v = ev["values"]
+        name = (v.get("sampledThread") or {}).get("javaName") or ""
+        if ev.get("type") != "jdk.ExecutionSample" or not thread.search(name):
+            continue
+        total += 1
+        counts[bucket((v.get("stackTrace") or {}).get("frames") or [])] += 1
+    if total == 0:
+        sys.exit(f"no samples on a thread matching {args.thread!r}")
+    print(f"{total} samples on threads matching {args.thread!r}")
+    for b in BUCKETS:
+        print(f"  {b:<15} {counts[b]:>6}  {100.0 * counts[b] / total:5.1f}%")
+
+
+if __name__ == "__main__":
+    main()

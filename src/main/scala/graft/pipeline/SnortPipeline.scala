@@ -110,7 +110,7 @@ object SnortPipeline {
     * nullability is read: a column of another type fails here, by name.
     * Input already under the declared schema passes through unchanged.
     */
-  private def declared(events: DataFrame): DataFrame = {
+  private[graft] def declared(events: DataFrame): DataFrame = {
     val reads = SensorSchemas.sensorEventSchema.fields.flatMap { want =>
       val have = events.schema(want.name)
       if (have.dataType == want.dataType && have.nullable == want.nullable) None

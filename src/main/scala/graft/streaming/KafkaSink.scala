@@ -1,9 +1,15 @@
 package graft.streaming
 
 import graft.pipeline.SnortPipeline
-import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders}
+import org.apache.spark.TaskContext
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, Row}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{
+  AttributeSeq, BindReferences, Expression, GenericInternalRow, JoinedRow, UnsafeProjection}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.BinaryType
+import org.apache.spark.sql.streaming.DataStreamWriter
+import org.apache.spark.sql.types.{ArrayType, BinaryType, StructField, StructType}
 
 /** Kafka producer-side preparation (SURVEY.md A9 + §7.4 hard-part 1).
   *
@@ -15,6 +21,12 @@ import org.apache.spark.sql.types.BinaryType
   * constructing ProducerRecord(topic, null, timestampMs, key, value,
   * headers); in tests a collector (no Kafka broker, and no kafka-clients
   * jar, ship with this image).
+  *
+  * The streaming sink plans the SnortAlert record projection once per
+  * query, when [[sinkAlerts]] is called: each micro-batch then runs one RDD
+  * job over the decoded batch, with no per-trigger analysis, optimisation,
+  * physical planning or typed deserializer. The batch path
+  * (`emit(prepareRecords(...))`) plans per call and writes the same records.
   */
 object KafkaSink {
 
@@ -37,19 +49,23 @@ object KafkaSink {
 
   implicit val preparedEncoder: Encoder[PreparedRecord] = Encoders.product[PreparedRecord]
 
-  /** SnortAlert envelope rows → PreparedRecords. Key = event hash (utf8),
-    * value = Confluent-framed Avro of the alert struct, timestamp = event
-    * time millis, headers = the four routing headers (app.go:182-188).
+  /** The producer-record columns of an envelope, in [[PreparedRecord]]
+    * order after the topic: key = event hash (utf8), value =
+    * Confluent-framed Avro of the alert struct, timestamp = event time
+    * millis, headers = the four routing headers (app.go:182-188).
     */
-  def prepareRecords(envelope: DataFrame, topic: String, schemaId: Int): Dataset[PreparedRecord] = {
+  private def recordColumns(envelope: DataFrame, schemaId: Int): Seq[Column] = {
     val alertCols = envelope.columns.toSeq.filterNot(Set("kafka_key", "event_time", "headers"))
-    envelope.select(
-      lit(topic).as("topic"),
+    Seq(
       col("kafka_key").cast(BinaryType).as("key"),
       AvroCodec.confluentValue(struct(alertCols.map(col): _*), schemaId).as("value"),
       unix_millis(col("event_time")).as("timestampMs"),
-      col("headers")).as[PreparedRecord]
+      col("headers"))
   }
+
+  /** SnortAlert envelope rows → PreparedRecords. */
+  def prepareRecords(envelope: DataFrame, topic: String, schemaId: Int): Dataset[PreparedRecord] =
+    envelope.select(lit(topic).as("topic") +: recordColumns(envelope, schemaId): _*).as[PreparedRecord]
 
   /** Batch/stream-agnostic emit: per partition, one writer, drain, close —
     * the at-least-once contract is the checkpoint's (SURVEY.md A10).
@@ -62,15 +78,109 @@ object KafkaSink {
     }
 
   /** Full reference pipeline as a streaming sink: SensorEvents → alerts →
-    * envelope → prepared records → writer, via foreachBatch.
+    * envelope → prepared records → writer, via foreachBatch. The events
+    * are read under the declared SensorEvent schema in the stream, and
+    * the record projection is planned here, once; each micro-batch is one
+    * job over the batch's rows, the job `RDD.foreachPartition` would run.
+    * Its function is a plain class, not a closure, so Spark's closure
+    * cleaner does not re-read a class file every batch. Spark session settings
+    * that analysis fixes in the plan (time zone, ANSI mode) are those in
+    * force when `sinkAlerts` is called.
     */
   def sinkAlerts(
       sensorEvents: DataFrame,
       topic: String,
       schemaId: Int,
-      writerFactory: () => RecordWriter): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    sensorEvents.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-      val envelope = SnortPipeline.withEnvelope(SnortPipeline.alerts(batch))
-      emit(prepareRecords(envelope, topic, schemaId), writerFactory)
+      writerFactory: () => RecordWriter): DataStreamWriter[Row] = {
+    val events = SnortPipeline.declared(sensorEvents)
+    val send = AlertRecords.plan(events, topic, schemaId, writerFactory)
+    events.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
+      val rows = batch.queryExecution.toRdd
+      rows.sparkContext.runJob(rows, send)
+      ()
     }
+  }
+
+  /** The SnortAlert record projection of one event row per metric, planned
+    * once: `stages` are the optimised plan's chain of projections, each
+    * bound to its child's output, the first to the event row joined with
+    * its metric `m`.
+    */
+  private final class AlertRecords(
+      stages: Seq[Seq[Expression]],
+      metricsOrdinal: Int,
+      metricFields: Int,
+      topic: String,
+      writerFactory: () => RecordWriter) extends ((TaskContext, Iterator[InternalRow]) => Unit) with Serializable {
+
+    /** Explode, project and send one partition's event rows, as
+      * `emit(prepareRecords(withEnvelope(alerts(events))))` does: a null
+      * or empty metrics array yields no record, as `explode` does.
+      */
+    def apply(task: TaskContext, events: Iterator[InternalRow]): Unit = {
+      val projections = stages.map { exprs =>
+        val p = UnsafeProjection.create(exprs)
+        p.initialize(task.partitionId())
+        p
+      }
+      val metric = new GenericInternalRow(1)
+      val joined = new JoinedRow(null, metric)
+      val w = writerFactory()
+      try events.foreach { event =>
+        if (!event.isNullAt(metricsOrdinal)) {
+          val metrics = event.getArray(metricsOrdinal)
+          joined.withLeft(event)
+          var i = 0
+          while (i < metrics.numElements()) {
+            metric.update(0, metrics.getStruct(i, metricFields))
+            var r: InternalRow = joined
+            projections.foreach(p => r = p(r))
+            w.send(record(r))
+            i += 1
+          }
+        }
+      }
+      finally w.flushAndClose()
+    }
+
+    /** The projected (key, value, timestampMs, headers) row as a record. */
+    private def record(r: InternalRow): PreparedRecord = {
+      val h = r.getMap(3)
+      val headers = Map.newBuilder[String, String]
+      var i = 0
+      while (i < h.numElements()) {
+        headers += h.keyArray().getUTF8String(i).toString -> h.valueArray().getUTF8String(i).toString
+        i += 1
+      }
+      PreparedRecord(topic, r.getBinary(0), r.getBinary(1), r.getLong(2), headers.result())
+    }
+  }
+
+  private object AlertRecords {
+
+    /** Plan [[recordColumns]] of `withEnvelope` of the alert projection over
+      * a placeholder relation of the declared event columns plus `m`, the
+      * metric element type; fail by name unless the optimised plan is a
+      * chain of projections over that placeholder.
+      */
+    def plan(events: DataFrame, topic: String, schemaId: Int, writerFactory: () => RecordWriter): AlertRecords = {
+      val metricsOrdinal = events.schema.fieldIndex("metrics")
+      val metrics = events.schema(metricsOrdinal).dataType.asInstanceOf[ArrayType]
+      val metricType = metrics.elementType.asInstanceOf[StructType]
+      val spark = events.sparkSession
+      val rows = spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
+        StructType(events.schema.fields :+ StructField("m", metricType, metrics.containsNull)))
+      val input = rows.queryExecution.analyzed.output
+      val envelope = SnortPipeline.withEnvelope(rows.select(SnortPipeline.alertColumns: _*))
+      val optimized = envelope.select(recordColumns(envelope, schemaId): _*).queryExecution.optimizedPlan
+      def stages(p: LogicalPlan): List[Seq[Expression]] = p match {
+        case Project(list, child) => stages(child) :+ BindReferences.bindReferences(list, AttributeSeq(child.output))
+        case leaf if leaf.children.isEmpty && leaf.output == input => Nil
+        case other => throw new IllegalStateException(
+          s"sinkAlerts: the SnortAlert record plan is not a chain of projections over the event row " +
+            s"(found ${other.nodeName}):\n${optimized.treeString}")
+      }
+      new AlertRecords(stages(optimized), metricsOrdinal, metricType.length, topic, writerFactory)
+    }
+  }
 }

@@ -382,27 +382,136 @@ class StreamingSpec extends SparkSpec {
     assert(rows.contains((None, Some("k2"))), s"unmatched right row missing: $rows")
   }
 
+  /** SensorEvents carried as JSON `value` strings, to keep MemoryStream
+    * simple: `from_json` reads them nullable throughout (undeclared).
+    */
+  private def fromJson(values: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    values.select(from_json($"value", SensorSchemas.sensorEventSchema).as("e")).select("e.*")
+
+  /** One single-metric SensorEvent with hash "hs". */
+  private val sinkFixture = """{"metrics":[{"snort_timestamp":"25/01/31-04:15:06.927463"}],
+    "event_hash_sha256":"hs","event_metrics_count":1,"event_seconds":1738296906,
+    "sensor_id":"s","sensor_version":"1","event_read_at":1738296906927463,
+    "event_sent_at":1738296906900000,"event_received_at":1738296906000000,
+    "snort_interface":"eth0","snort_message":"m","snort_priority":1,
+    "snort_protocol":"TCP","snort_rule_gid":1,"snort_rule_rev":1,
+    "snort_rule_sid":1,"snort_rule":"r","snort_seconds":1738296906}""".replaceAll("\n\\s*", "")
+
   test("sinkAlerts streams fixture events through foreachBatch to a writer") {
     val collected = new java.util.concurrent.ConcurrentLinkedQueue[KafkaSink.PreparedRecord]()
     CollectingWriter.queue = collected
     val in = MemoryStream[String](spark)
-    // carry the fixture through a JSON column to keep MemoryStream simple
-    val fixture = """{"metrics":[{"snort_timestamp":"25/01/31-04:15:06.927463"}],
-      "event_hash_sha256":"hs","event_metrics_count":1,"event_seconds":1738296906,
-      "sensor_id":"s","sensor_version":"1","event_read_at":1738296906927463,
-      "event_sent_at":1738296906900000,"event_received_at":1738296906000000,
-      "snort_interface":"eth0","snort_message":"m","snort_priority":1,
-      "snort_protocol":"TCP","snort_rule_gid":1,"snort_rule_rev":1,
-      "snort_rule_sid":1,"snort_rule":"r","snort_seconds":1738296906}""".replaceAll("\n\\s*", "")
-    val parsed = in.toDF()
-      .select(from_json($"value", SensorSchemas.sensorEventSchema).as("e"))
-      .select("e.*")
-    val q = KafkaSink.sinkAlerts(parsed, "t", 1, () => new CollectingWriter).start()
-    in.addData(fixture)
+    val q = KafkaSink.sinkAlerts(fromJson(in.toDF()), "t", 1, () => new CollectingWriter).start()
+    in.addData(sinkFixture)
     q.processAllAvailable()
     q.stop()
     assert(collected.size() == 1)
     assert(new String(collected.peek().key, "UTF-8") == "hs")
+  }
+
+  test("sinkAlerts sends exactly the records of emit(prepareRecords(...)) over the same events") {
+    import graft.pipeline.SnortPipeline
+    def event(hash: String, metrics: Option[String], rest: String): String =
+      s"""{${metrics.fold("")(m => "\"metrics\":[" + m + "],")}"event_hash_sha256":"$hash",
+        "event_metrics_count":1,"event_seconds":1738296906,"sensor_id":"s-$hash",
+        "sensor_version":"1","event_read_at":1738296906927463,"event_sent_at":1738296906900000,
+        "event_received_at":1738296906000000,"snort_interface":"eth0","snort_priority":2,
+        "snort_protocol":"TCP","snort_rule_gid":1,"snort_rule_rev":1,"snort_rule_sid":1,
+        "snort_rule":"r"$rest}""".replaceAll("\n\\s*", "")
+    def metric(ts: String, n: Int) =
+      s"""{"snort_timestamp":"$ts","snort_dst_port":$n,"snort_src_address":"10.0.0.$n"}"""
+    val seen = ""","snort_message":"m","snort_seconds":1738296906"""
+    val fixtures = Seq(
+      // multi-metric events, classified and not
+      event("multi", Some(Seq(metric("25/01/31-04:15:06.927463", 1), metric("25/01/31-04:15:07.1", 2),
+        metric("25/01/31-04:15:08", 3)).mkString(",")), s""","snort_classification":"recon"$seen"""),
+      event("unclassified", Some(Seq(metric("25/01/31-04:15:09.5", 4), metric("25/01/31-04:15:10", 5))
+        .mkString(",")), seen),
+      // absent and empty metrics yield no records
+      event("absent", None, seen),
+      event("empty", Some(""), seen),
+      // an unparseable Snort timestamp falls back to snort_seconds
+      event("badts", Some(metric("not a time", 6)), s""","snort_classification":"c"$seen"""),
+      // null required fields and a null metrics element (only JSON carries them)
+      event("nulls", Some(s"""null,${metric("25/01/31-04:15:11", 7)}"""),
+        ""","snort_message":null,"snort_seconds":null"""))
+    val json = fromJson(fixtures.toDF("value"))
+    assert(json.schema != SensorSchemas.sensorEventSchema) // from_json is nullable throughout
+    // the same events on the wire (nulls left off), among poison frames
+    val frames = json.collect().toSeq.map { r =>
+      val wire = Row.fromSeq(r.toSeq.updated(0, Option(r.getSeq[Row](0)).map(_.filter(_ != null)).orNull))
+      ConfluentFraming.header(7) ++ ProtobufWire.encodeSensorEvent(wire)
+    }
+    val poison = Seq(Array[Byte](1, 0, 0, 0, 7, 0), Array[Byte](0, 0),
+      ConfluentFraming.header(7) ++ Array[Byte](0x12, 0x7f))
+    val wire = frames.take(3) ++ poison.take(2) ++ frames.drop(3) ++ poison.drop(2)
+
+    type Sent = Map[(String, Seq[Byte], Seq[Byte], Long, Map[String, String]), Int]
+    def sent(run: => Unit): Sent = {
+      val q = new java.util.concurrent.ConcurrentLinkedQueue[KafkaSink.PreparedRecord]()
+      CollectingWriter.queue = q
+      run
+      q.asScala.toSeq.map(r => (r.topic, r.key.toSeq, r.value.toSeq, r.timestampMs, r.headers))
+        .groupMapReduce(identity)(_ => 1)(_ + _)
+    }
+    def viaBatch(events: org.apache.spark.sql.DataFrame): Sent = sent(KafkaSink.emit(
+      KafkaSink.prepareRecords(SnortPipeline.withEnvelope(SnortPipeline.alerts(events)), "alerts", 7),
+      () => new CollectingWriter))
+    def viaStream[A: org.apache.spark.sql.Encoder](batches: Seq[Seq[A]])(
+        events: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame): Sent = sent {
+      val in = MemoryStream[A](spark, 2)
+      val q = KafkaSink.sinkAlerts(events(in.toDF()), "alerts", 7, () => new CollectingWriter).start()
+      try batches.foreach { b => in.addData(b); q.processAllAvailable() }
+      finally q.stop()
+    }
+    val batchJson = viaBatch(json)
+    assert(batchJson.values.sum == 7)
+    assert(batchJson.keys.map(r => new String(r._2.toArray, "UTF-8")) ==
+      Set("multi", "unclassified", "badts", "nulls"))
+    val badts = batchJson.keys.find(_._2 == "badts".getBytes("UTF-8").toSeq).get
+    assert(badts._4 == 1738296906000L && badts._5("classification") == "c")
+    assert(batchJson.keys.filter(_._2 == "unclassified".getBytes("UTF-8").toSeq)
+      .forall(_._5("classification") == ""))
+    assert(viaStream(Seq(fixtures.take(3), fixtures.drop(3)))(fromJson) == batchJson)
+
+    val malformed = Seq.fill(2)(ProtobufWire.malformedCounter(spark))
+    val batchProto = viaBatch(ProtobufWire.decodeFramed(wire.toDF("value"), "value", Some(malformed(0))))
+    assert(batchProto.values.sum == 7)
+    val streamProto = viaStream(Seq(wire.take(4), wire.drop(4)))(
+      ProtobufWire.decodeFramed(_, "value", Some(malformed(1))))
+    assert(streamProto == batchProto)
+    assert(malformed.map(_.value) == Seq(3L, 3L))
+  }
+
+  test("sinkAlerts runs one SQL execution per micro-batch") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    import org.apache.spark.graftbridge.TestListenerBusBridge
+    val collected = new java.util.concurrent.ConcurrentLinkedQueue[KafkaSink.PreparedRecord]()
+    CollectingWriter.queue = collected
+    val starts = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case _: SparkListenerSQLExecutionStart => starts.incrementAndGet(); ()
+        case _ =>
+      }
+    }
+    val in = MemoryStream[String](spark)
+    val q = KafkaSink.sinkAlerts(fromJson(in.toDF()), "t", 1, () => new CollectingWriter).start()
+    val k = 3
+    try {
+      in.addData(sinkFixture)
+      q.processAllAvailable()
+      TestListenerBusBridge.drain(spark.sparkContext)
+      spark.sparkContext.addSparkListener(listener)
+      (1 to k).foreach { _ => in.addData(sinkFixture); q.processAllAvailable() }
+      TestListenerBusBridge.drain(spark.sparkContext)
+    } finally {
+      q.stop()
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(collected.size() == k + 1)
+    assert(starts.get() == k, s"${starts.get()} SQL executions over $k micro-batches")
   }
 }
 
