@@ -16,11 +16,13 @@ Three checks, strongest applicable wins:
     with the test's quoted title. This is the check that catches the
     r17 near-miss class: an insertion shifting a DIFFERENT named test
     exactly onto a cited line number now fails instead of passing.
- 3. PLAUSIBLE: citations with neither a name nor a matchable
-    description fall back to the r16 rule — the line must carry real
-    code (def/class/test/val/..., not a blank or a lone brace). This
-    residual class is reported in the summary line so its size is
-    visible at seal time.
+ 3. ANCHOR SHAPE: citations with neither a name nor a matchable
+    description must land on a line that opens an anchor — a
+    `test("...")` in a `*Spec.scala` file, a `def`, `class`, `object`,
+    `val` or `trait` (after its modifiers) anywhere else — so a citation
+    that drifts into a test or method body fails. This residual class is
+    reported in the summary line (as "plausible") so its size is visible
+    at seal time.
 
 Contextual `:N` citations (backtick refs without a file) resolve
 against the most recently named .scala file — the PATH it resolved to,
@@ -37,7 +39,8 @@ Usage: python3 scripts/parity_sweep.py [--quiet] [--selftest]
   occupying a cited line number in BufferedSessionStreamSpec — must
   FAIL; (3) a cited entry point replaced by another def must FAIL;
   (4) a contextual citation after a bare spec name must be checked
-  against that spec, not the last `.scala` file named. Exercised by the
+  against that spec, not the last `.scala` file named; (5) a bare spec
+  citation shifted onto a test-body line must FAIL. Exercised by the
   GATE ritual so the content checks cannot silently rot.
 Exit 0 when every citation resolves to its named/described anchor.
 """
@@ -56,12 +59,18 @@ CONTEXTUAL = re.compile(r"`:(\d+(?:,\d+)*)`")
 # `Foo.scala`, not a member reference such as `StreamOps.tumblingCounts`)
 BARE_NAME = re.compile(r"(?<![\w.])([A-Z]\w*)(?![\w.])")
 
-# an anchor line should carry real code; these are the shapes the ledger
-# cites (entry points, processors, tests, named vals) or at minimum a
-# non-empty statement
-PLAUSIBLE = re.compile(
-    r"\b(def|class|object|test\(|val|var|case|override|private|final|new)\b"
-    r"|[A-Za-z0-9_]\(")
+# an anchor line must OPEN what the ledger cites: a test in a spec, a
+# declaration (after its modifiers) anywhere else — never a line inside a
+# body, which is where a drifted citation lands
+SPEC_ANCHOR = re.compile(r'^test\("')
+DECL_ANCHOR = re.compile(
+    r"^(?:(?:(?:private|protected)(?:\[\w+\])?|final|override|abstract|sealed"
+    r"|implicit|lazy|case)\s+)*(?:def|class|object|val|trait)\b")
+
+
+def anchor_shaped(fname, content):
+    pattern = SPEC_ANCHOR if fname.endswith("Spec.scala") else DECL_ANCHOR
+    return bool(pattern.match(content))
 
 # name adjacent to the citation: `name` (`<cite>  /  <cite>` (`name`
 NAME_BEFORE = re.compile(r"`([A-Za-z_]\w*)`\s*\(`$")
@@ -173,8 +182,7 @@ def sweep(text, paths, read_lines, quiet=True):
                 failures.append(f"{fname}:{ln}: beyond EOF ({len(src)} lines)")
                 continue
             content = src[ln - 1].strip()
-            plausible = bool(content) and content not in ("}", "{", "})", "},") \
-                and PLAUSIBLE.search(content)
+            plausible = anchor_shaped(fname, content)
             # a name/desc found next to a comma-list applies to the FIRST
             # cited line only (the list's tail are related anchors, e.g.
             # "(`patternMatchCountsExact`; processor `:979`)")
@@ -257,11 +265,15 @@ def run_selftest():
 
     # (3) the NAME-class twin: a cited entry point replaced by a
     # different def on the same line must also fail.
-    nm = re.search(r"`(\w+)` \(`([\w/]+\.scala):(\d+)", text)
+    # either convention: `name` (`File.scala:N` or `File.scala:N` (`name`
+    nm = re.search(r"`(?P<name>\w+)` \(`(?P<file>[\w/]+\.scala):(?P<line>\d+)"
+                   r"|`(?P<file2>[\w/]+\.scala):(?P<line2>\d+)` \(`(?P<name2>\w+)`", text)
     if not nm:
         print("[selftest] FAIL: no name-convention citation found")
         return 1
-    nname, nfull, nln = nm.group(1), nm.group(2), int(nm.group(3))
+    nname = nm.group("name") or nm.group("name2")
+    nfull = nm.group("file") or nm.group("file2")
+    nln = int(nm.group("line") or nm.group("line2"))
     ntarget = [p for p in paths[nfull.split("/")[-1]] if str(p).endswith(nfull)][0]
     ndoc = ntarget.read_text().splitlines()
     ndoc[nln - 1] = "  def someOtherEntryPoint(): Unit = {"
@@ -307,6 +319,29 @@ def run_selftest():
         return 1
     print(f"[selftest] ok: bare-name fixture caught at {bare.name}:{bln} "
           f"-> {bhit[0][:120]}")
+
+    # (5) a spec citation with neither a name nor a description, shifted
+    # onto a code line inside a test body by a one-line deletion above it,
+    # must fail the anchor-shape check
+    spec = paths["BufferedExactStreamSpec.scala"][0]
+    slines = spec.read_text().splitlines()
+    sln = next(i + 1 for i, l in enumerate(slines)
+               if TEST_TITLE.search(l) and slines[i + 1].strip().startswith("val "))
+    fixture5 = f"see `BufferedExactStreamSpec.scala:{sln}`."
+    shifted = slines[1:]
+
+    def read_lines5(p):
+        return shifted if p == spec else p.read_text().splitlines()
+
+    _, _, clean5 = sweep(fixture5, paths, lambda p: p.read_text().splitlines())
+    _, _, failures5 = sweep(fixture5, paths, read_lines5, quiet=True)
+    shit = [f for f in failures5 if f.startswith(f"{spec.name}:{sln} ")]
+    if clean5 or not shit:
+        print(f"[selftest] FAIL: a citation shifted onto the test-body line "
+              f"{shifted[sln - 1].strip()!r} passed (clean run: {clean5})")
+        return 1
+    print(f"[selftest] ok: shifted-citation fixture caught at {spec.name}:{sln} "
+          f"-> {shit[0][:120]}")
     return 0
 
 

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.operators.KmvSketch
-import org.apache.spark.sql.{Dataset, Encoder, Encoders, Row}
+import org.apache.spark.sql.{Dataset, Encoders}
 import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.streaming.{
   MapState, OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
@@ -262,6 +262,23 @@ object StatefulOps {
 
   final case class PatternCount(userId: Long, nEvents: Long, nMatches: Long)
 
+  /** One step of the vc*p DFA (see [[PatternProcessor]]) over the state
+    * `(inPrefix, nEvents, nMatches)`. Shared by [[PatternProcessor]] and
+    * [[BufferedPatternProcessor]] so the two siblings can never diverge
+    * on the transition table.
+    */
+  private[streaming] def patternStep(s: (Long, Long, Long),
+      eventType: String): (Long, Long, Long) = {
+    val (inPrefix, n, matches) = s
+    eventType.headOption match {
+      case Some('v') => (1L, n + 1, matches)
+      case Some('c') => (inPrefix, n + 1, matches) // sustains an open prefix, never opens one
+      case Some('p') =>
+        if (inPrefix == 1L) (0L, n + 1, matches + 1) else (inPrefix, n + 1, matches)
+      case _ => (0L, n + 1, matches)
+    }
+  }
+
   /** Streaming CEP — the incremental twin of q_events_pattern_match: the
     * regex scan "view, any clicks, purchase" (vc*p, non-overlapping,
     * left-to-right) compiled to a 2-state DFA folded over each user's
@@ -301,19 +318,12 @@ object StatefulOps {
         userId: Long,
         rows: Iterator[StreamOps.UserEvent],
         timerValues: TimerValues): Iterator[PatternCount] = {
-      var (inPrefix, n, matches) = if (st.exists()) st.get() else (0L, 0L, 0L)
+      var s = if (st.exists()) st.get() else (0L, 0L, 0L)
       rows.toVector.sortBy(r => (r.tsUs, r.eventId)).foreach { r =>
-        n += 1
-        r.eventType.headOption match {
-          case Some('v') => inPrefix = 1L
-          case Some('c') => // sustains an open prefix, never opens one
-          case Some('p') =>
-            if (inPrefix == 1L) { matches += 1; inPrefix = 0L }
-          case _ => inPrefix = 0L
-        }
+        s = patternStep(s, r.eventType)
       }
-      st.update((inPrefix, n, matches))
-      Iterator.single(PatternCount(userId, n, matches))
+      st.update(s)
+      Iterator.single(PatternCount(userId, s._2, s._3))
     }
   }
 
@@ -329,6 +339,18 @@ object StatefulOps {
 
   final case class CusumState(userId: Long, nEvents: Long, cusum: Long,
     firstAlarmEventId: Long) // -1 while no alarm
+
+  /** One step of the CUSUM recursion (see [[CusumProcessor]]) over the
+    * state `(nEvents, cusum, firstAlarmEventId)`. Shared by
+    * [[CusumProcessor]] and [[BufferedCusumProcessor]] so the two
+    * siblings can never diverge on the recursion or the alarm latch.
+    */
+  private[streaming] def cusumStep(s: (Long, Long, Long), eventId: Long,
+      cents: Long, target: Long, threshold: Long): (Long, Long, Long) = {
+    val (n, acc, alarm) = s
+    val next = math.max(0L, acc + (cents - target))
+    (n + 1, next, if (next > threshold && alarm < 0) eventId else alarm)
+  }
 
   /** Streaming CUSUM drift monitor — the incremental twin of q_ts_cusum:
     * the batch query needs the prefix-min identity because window frames
@@ -360,14 +382,12 @@ object StatefulOps {
         userId: Long,
         rows: Iterator[StreamOps.UserEvent],
         timerValues: TimerValues): Iterator[CusumState] = {
-      var (n, s, alarm) = if (st.exists()) st.get() else (0L, 0L, -1L)
+      var s = if (st.exists()) st.get() else (0L, 0L, -1L)
       rows.toVector.sortBy(r => (r.tsUs, r.eventId)).foreach { r =>
-        n += 1
-        s = math.max(0L, s + (r.cents - target))
-        if (s > threshold && alarm < 0) alarm = r.eventId
+        s = cusumStep(s, r.eventId, r.cents, target, threshold)
       }
-      st.update((n, s, alarm))
-      Iterator.single(CusumState(userId, n, s, alarm))
+      st.update(s)
+      Iterator.single(CusumState(userId, s._1, s._2, s._3))
     }
   }
 
@@ -691,17 +711,6 @@ object StatefulOps {
   final case class AttributedPurchaseTs(
     userId: Long, purchaseEventId: Long, tsMs: Long, cents: Long, touchType: String)
 
-  /** One key's buffered-exact state, externalized: the not-yet-settled
-    * event buffer plus the operator's folded state (None when the key
-    * never settled anything). This is BOTH the shape
-    * [[StateMigration.readOldBufferedExact]] dumps from a pre-r15
-    * ValueState-layout checkpoint AND the initial-state row the `*From`
-    * entry points bootstrap a fresh checkpoint with — the write-path half
-    * of the migration recipe (r14 verdict task 2).
-    */
-  final case class BufferedSnapshot[S](
-    userId: Long, buffer: Seq[(Long, Long, String, Long)], folded: Option[S])
-
   /** Shared skeleton of the buffered-exact trio: a per-key event buffer
     * (ListState of (tsMs, eventId, type, cents) tuples) plus the
     * operator's own small fold state `S`. Input rows only append to the
@@ -747,8 +756,7 @@ object StatefulOps {
     */
   abstract private[streaming] class WatermarkBufferedProcessor[S, O](
       maxBuffered: Long = DefaultMaxBufferedEvents)
-      extends org.apache.spark.sql.streaming.StatefulProcessorWithInitialState[
-        Long, TimedUserEvent, O, BufferedSnapshot[S]] {
+      extends StatefulProcessor[Long, TimedUserEvent, O] {
     protected type BufEvent = (Long, Long, String, Long) // (tsMs, eventId, type, cents)
 
     protected def stateEncoder: org.apache.spark.sql.Encoder[S]
@@ -913,33 +921,6 @@ object StatefulOps {
       }
       out.result().iterator
     }
-
-    /** Write-path bootstrap for checkpoint migration (r14 verdict task 2):
-      * seed this key's buffer, folded state, and timer from an externally
-      * dumped [[BufferedSnapshot]] — one call per key, before the first
-      * batch of the new query. The armed cache and the single live timer
-      * are REBUILT from the snapshot (they are derived state), so the
-      * snapshot only has to carry what the old checkpoint knew: the
-      * unsettled events and the fold result so far.
-      */
-    override def handleInitialState(
-        userId: Long,
-        initial: BufferedSnapshot[S],
-        timerValues: TimerValues): Unit = {
-      initial.folded.foreach(st.update)
-      val n = initial.buffer.size.toLong
-      if (n > 0) {
-        guardDepth(userId, n)
-        buf.appendList(initial.buffer.toArray)
-      }
-      val bufTimer =
-        if (initial.buffer.isEmpty) None else Some(initial.buffer.map(_._1).min)
-      val stTimer = initial.folded.flatMap(nextTimerFromState)
-      (bufTimer.toSeq ++ stTimer.toSeq).reduceOption(_ min _).foreach { t =>
-        getHandle.registerTimer(t)
-        armed.update((t, n))
-      }
-    }
   }
 
   /** Buffered-exact CEP: same vc*p DFA as [[PatternProcessor]], folded in
@@ -951,18 +932,8 @@ object StatefulOps {
     protected def stateEncoder =
       Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong, Encoders.scalaLong)
     protected def zero = (0L, 0L, 0L)
-    protected def fold(userId: Long, s: (Long, Long, Long), e: BufEvent) = {
-      var (inPrefix, n, matches) = s
-      n += 1
-      e._3.headOption match {
-        case Some('v') => inPrefix = 1L
-        case Some('c') => // sustains an open prefix, never opens one
-        case Some('p') =>
-          if (inPrefix == 1L) { matches += 1; inPrefix = 0L }
-        case _ => inPrefix = 0L
-      }
-      ((inPrefix, n, matches), Seq.empty)
-    }
+    protected def fold(userId: Long, s: (Long, Long, Long), e: BufEvent) =
+      (patternStep(s, e._3), Seq.empty)
     protected def snapshot(userId: Long, s: (Long, Long, Long)) =
       Seq(PatternCount(userId, s._2, s._3))
   }
@@ -977,13 +948,8 @@ object StatefulOps {
     protected def stateEncoder =
       Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong, Encoders.scalaLong)
     protected def zero = (0L, 0L, -1L)
-    protected def fold(userId: Long, s: (Long, Long, Long), e: BufEvent) = {
-      var (n, acc, alarm) = s
-      n += 1
-      acc = math.max(0L, acc + (e._4 - target))
-      if (acc > threshold && alarm < 0) alarm = e._2
-      ((n, acc, alarm), Seq.empty)
-    }
+    protected def fold(userId: Long, s: (Long, Long, Long), e: BufEvent) =
+      (cusumStep(s, e._2, e._4, target, threshold), Seq.empty)
     protected def snapshot(userId: Long, s: (Long, Long, Long)) =
       Seq(CusumState(userId, s._1, s._2, s._3))
   }
@@ -1118,227 +1084,5 @@ object StatefulOps {
       .transformWithState(new BufferedSessionProcessor(gapMs,
           bufferedCap(events.sparkSession)),
         TimeMode.EventTime(), OutputMode.Append())
-  }
-
-  // ===== checkpoint migration entry points (r14 verdict task 2) ========
-  //
-  // A checkpoint written by the pre-r14-continuation buffered-exact
-  // layout (buffer as ValueState[Seq]) cannot restart on the shipped
-  // ListState operators — Spark fails fast with
-  // STATE_STORE_VALUE_SCHEMA_NOT_COMPATIBLE (pinned by the migration
-  // test). The road forward for a user holding such a checkpoint:
-  //
-  //   1. DUMP: StateMigration.readOldBufferedExact reads the old
-  //      checkpoint's state offline (Spark's `statestore` batch reader —
-  //      no streaming restart needed) into BufferedSnapshot rows;
-  //   2. BOOTSTRAP: start the SAME operator on a FRESH checkpoint via the
-  //      *From entry point below, passing the dump as initial state —
-  //      handleInitialState re-seeds each key's buffer, folded state, and
-  //      timer before the first batch;
-  //   3. RESUME the source from the old checkpoint's committed offsets
-  //      (the offsets/ WAL is layout-independent; for Kafka, copy the
-  //      last committed offsets into startingOffsets).
-  //
-  // One contract caveat, stated: the new query's watermark restarts at 0,
-  // so events the OLD query would have dropped as late can be admitted
-  // during the first trigger(s) after migration. That only ever WIDENS
-  // admission — each admitted event still folds exactly once (the fold
-  // invariant is against the new query's own monotone watermark) — but a
-  // bit-exact handover additionally requires the resumed source not to
-  // replay pre-offset rows (step 3), exactly as within-version restarts
-  // require. A replay-proof migrated pipeline feeds the `*From` entry
-  // point through [[seededDedup]], which re-arms the dedup absorption
-  // table from the same dump.
-
-  /** [[patternMatchCountsExact]] bootstrapped from dumped state. */
-  def patternMatchCountsExactFrom(events: Dataset[TimedUserEvent],
-      initial: Dataset[BufferedSnapshot[(Long, Long, Long)]]): Dataset[PatternCount] = {
-    import events.sparkSession.implicits._
-    StreamOps.requireWatermark(events, "ts", "patternMatchCountsExactFrom")
-    events
-      .groupByKey(_.userId)
-      .transformWithState(new BufferedPatternProcessor(bufferedCap(events.sparkSession)),
-        TimeMode.EventTime(), OutputMode.Update(), initial.groupByKey(_.userId))
-  }
-
-  /** [[cusumMonitorExact]] bootstrapped from dumped state. */
-  def cusumMonitorExactFrom(events: Dataset[TimedUserEvent], target: Long,
-      threshold: Long, initial: Dataset[BufferedSnapshot[(Long, Long, Long)]]): Dataset[CusumState] = {
-    import events.sparkSession.implicits._
-    StreamOps.requireWatermark(events, "ts", "cusumMonitorExactFrom")
-    events
-      .groupByKey(_.userId)
-      .transformWithState(new BufferedCusumProcessor(target, threshold,
-          bufferedCap(events.sparkSession)),
-        TimeMode.EventTime(), OutputMode.Update(), initial.groupByKey(_.userId))
-  }
-
-  /** [[lastTouchAttributionExact]] bootstrapped from dumped state. */
-  def lastTouchAttributionExactFrom(events: Dataset[TimedUserEvent],
-      initial: Dataset[BufferedSnapshot[(Long, Long, String)]]): Dataset[AttributedPurchaseTs] = {
-    import events.sparkSession.implicits._
-    StreamOps.requireWatermark(events, "ts", "lastTouchAttributionExactFrom")
-    events
-      .groupByKey(_.userId)
-      .transformWithState(new BufferedAttributionProcessor(bufferedCap(events.sparkSession)),
-        TimeMode.EventTime(), OutputMode.Append(), initial.groupByKey(_.userId))
-  }
-
-  /** [[timedSessionsExact]] bootstrapped from dumped state (r15 verdict
-    * task 1 — the fourth `*From` rider, completing the migration surface).
-    * The snapshot's fold state is row 22's open-fragment list; its close
-    * timers are NOT in the snapshot — `handleInitialState` re-derives the
-    * key's one live timer as min(min buffered ts, earliest open fragment's
-    * `last + gap`) via the [[BufferedSessionProcessor]] `nextTimerFromState`
-    * override, so a key holding ONLY an open fragment (buffer fully
-    * settled before the dump) re-arms its close timer from initial state
-    * alone and the session still emits exactly once — pinned by the
-    * session round-trip spec.
-    */
-  def timedSessionsExactFrom(events: Dataset[TimedEvent], gapMs: Long,
-      initial: Dataset[BufferedSnapshot[Seq[(Long, Long, Long, Long)]]]): Dataset[SessionSummary] = {
-    import events.sparkSession.implicits._
-    StreamOps.requireWatermark(events, "ts", "timedSessionsExactFrom")
-    asUserEvents(events)
-      .groupByKey(_.userId)
-      .transformWithState(new BufferedSessionProcessor(gapMs,
-          bufferedCap(events.sparkSession)),
-        TimeMode.EventTime(), OutputMode.Append(), initial.groupByKey(_.userId))
-  }
-
-  // ===== migration × dedup: the seedable dedup stage (r18) =============
-  //
-  // `dropDuplicatesWithinWatermark` has no initial-state hook, so a
-  // replay-proof pipeline restarted VIA MIGRATION would begin with an
-  // empty dedup table, and a redelivery of a pre-migration buffered event
-  // inside the first watermark horizon would fold again. [[seededDedup]]
-  // closes that with a transformWithState dedup stage — which HAS an
-  // initial-state hook — keyed on the (userId, eventId) idempotency pair
-  // and seeded from the SAME migration dump the buffered operator
-  // bootstraps from. The dump's buffered events are exactly the
-  // in-horizon set (everything settled has ts <= the old watermark and
-  // everything later is still in the buffer), so seeding one dedup token
-  // per buffered event re-arms precisely the absorption the old
-  // checkpoint's dropDuplicates state provided for events that can still
-  // fold.
-  //
-  // What the seed does NOT cover, stated plainly: events the OLD query
-  // had already SETTLED are not in the dump (the fold state is
-  // aggregated), so a redelivery of a settled event is excluded the same
-  // way the plain `*From` contract excludes it — recipe step 3 (resume
-  // the source from committed offsets). What the seed ADDS over step 3
-  // alone: offset resume can be imprecise in practice (e.g. a Kafka
-  // group rewound to an earlier commit), and any replayed row that is in
-  // the dump's buffered set is now absorbed instead of double-folded —
-  // the bootstrap tolerates replay over the whole buffered window.
-  //
-  // Chaining mechanics: the dedup stage emits its survivors with their
-  // original `ts` and re-declares it as the event-time column via the
-  // `transformWithState(..., eventTimeColumnName, ...)` overload, which
-  // is Spark's supported way to run a second stateful operator
-  // downstream of a transformWithState (the engine re-derives the
-  // downstream watermark from the declared column). Emitted rows always
-  // carry ts STRICTLY past the late-filter watermark (only admitted rows
-  // are re-emitted), so the chain never trips the
-  // emitted-rows-older-than-watermark guard.
-
-  /** A dedup token to seed [[SeededDedupProcessor]] with: this (userId,
-    * eventId) pair was delivered at `tsMs` before the migration and must
-    * not fold again if redelivered. Produced from a migration dump by
-    * [[dedupSeeds]].
-    */
-  final case class DedupSeed(userId: Long, eventId: Long, tsMs: Long)
-
-  /** The seedable transformWithState twin of
-    * `dropDuplicatesWithinWatermark("userId", "eventId")` — same
-    * idempotency-token contract (eventId unique per key among LIVE events
-    * in the horizon, see [[StampedValue]]), same state class (one row per
-    * (userId, eventId) inside the watermark horizon), same eviction (a
-    * token clears when the watermark passes its event's ts by the full
-    * delay, so token lifetime == dropDuplicatesWithinWatermark's "kept
-    * for at least the delay" contract). What it adds:
-    * `handleInitialState` — a migration dump can re-arm the absorption
-    * table, which the built-in operator cannot.
-    *
-    * Keyed on the PAIR so the initial state lands exactly one call per
-    * token; the first live occurrence passes through (first-wins, like
-    * the built-in), every later one inside the horizon drops. A
-    * redelivery arriving AFTER the horizon is dropped by the downstream
-    * buffered operator's own late filter (its ts is <= the watermark by
-    * then), so absorption holds across the full timeline. Rows pass
-    * through untyped, so one stage serves both event surfaces
-    * ([[TimedUserEvent]] and [[TimedEvent]]).
-    */
-  final class SeededDedupProcessor(horizonMs: Long)
-      extends org.apache.spark.sql.streaming.StatefulProcessorWithInitialState[
-        (Long, Long), Row, Row, DedupSeed] {
-    @transient private var seen: ValueState[Long] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      seen = getHandle.getValueState[Long]("seenTs", Encoders.scalaLong, TTLConfig.NONE)
-    }
-
-    override def handleInputRows(
-        key: (Long, Long),
-        rows: Iterator[Row],
-        timerValues: TimerValues): Iterator[Row] = {
-      if (seen.exists() || rows.isEmpty) Iterator.empty
-      else {
-        val first = rows.next() // first-wins; the rest of the batch drops
-        val tsMs = first.getAs[java.sql.Timestamp]("ts").getTime
-        seen.update(tsMs)
-        getHandle.registerTimer(tsMs + horizonMs)
-        Iterator.single(first)
-      }
-    }
-
-    override def handleExpiredTimer(
-        key: (Long, Long),
-        timerValues: TimerValues,
-        expiredTimerInfo: org.apache.spark.sql.streaming.ExpiredTimerInfo): Iterator[Row] = {
-      seen.clear() // past the horizon the late filter takes over
-      Iterator.empty
-    }
-
-    /** Re-arm one absorption token from the migration dump — state plus
-      * its eviction timer, both derived from the seed's event ts exactly
-      * as a live first occurrence would have armed them.
-      */
-    override def handleInitialState(
-        key: (Long, Long),
-        initial: DedupSeed,
-        timerValues: TimerValues): Unit = {
-      seen.update(initial.tsMs)
-      getHandle.registerTimer(initial.tsMs + horizonMs)
-    }
-  }
-
-  /** One [[DedupSeed]] per buffered event of a migration dump — the
-    * replayable set the seeded dedup re-arms. Distributed flatMap, no
-    * driver traffic; the seeds co-partition with the stream by pair key
-    * inside `transformWithState(..., initialState)`.
-    */
-  def dedupSeeds[S](snap: Dataset[BufferedSnapshot[S]]): Dataset[DedupSeed] = {
-    import snap.sparkSession.implicits._
-    snap.flatMap(s => s.buffer.map(e => DedupSeed(s.userId, e._2, e._1)))
-  }
-
-  /** The migrated replay-proof dedup stage: drop redeliveries on the
-    * (userId, eventId) pair of a watermarked event stream, with the
-    * absorption table seeded from the migration dump `initial` — feed the
-    * result to the matching `*ExactFrom` with the same dump. The token
-    * horizon is the watermark delay the caller declared on `ts`, so no
-    * delay argument is needed; survivors keep their type and re-declare
-    * `ts` as the event-time column for the downstream operator.
-    */
-  def seededDedup[T, S](events: Dataset[T], initial: Dataset[BufferedSnapshot[S]]): Dataset[T] = {
-    import events.sparkSession.implicits._
-    val horizonMs = StreamOps.requireWatermark(events, "ts", "seededDedup")
-    implicit val rows: Encoder[Row] = Encoders.row(events.schema)
-    events.toDF()
-      .groupByKey(r => (r.getAs[Long]("userId"), r.getAs[Long]("eventId")))
-      .transformWithState(new SeededDedupProcessor(horizonMs), "ts", OutputMode.Append(),
-        dedupSeeds(initial).groupByKey(s => (s.userId, s.eventId)))
-      .as[T](events.encoder)
   }
 }

@@ -51,6 +51,7 @@ object StreamOps {
 
   /** Session windows: rows gapped less than `gap` merge into one session. */
   def sessionCounts(events: DataFrame, tsCol: String, gap: String, keyCols: String*): DataFrame = {
+    requireWatermark(events, tsCol, "sessionCounts")
     val keyed = keyCols.map(col)
     events
       .groupBy(session_window(col(tsCol), gap) +: keyed: _*)

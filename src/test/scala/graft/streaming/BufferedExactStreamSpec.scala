@@ -182,7 +182,7 @@ class BufferedExactStreamSpec extends SparkSpec {
   }
 
   test("un-watermarked input: Spark runs the buffered operator, every entry point fails by name") {
-    import StatefulOps.{BufferedSnapshot, TimedEvent}
+    import StatefulOps.TimedEvent
     withRocksDBProvider {
       val in = MemoryStream[TimedUserEvent](spark)
       // Spark itself starts the buffered processor without a watermark:
@@ -201,9 +201,6 @@ class BufferedExactStreamSpec extends SparkSpec {
     }
     val events = MemoryStream[TimedUserEvent](spark).toDS()
     val sessions = MemoryStream[TimedEvent](spark).toDS()
-    val counters = spark.emptyDataset[BufferedSnapshot[(Long, Long, Long)]]
-    val touches = spark.emptyDataset[BufferedSnapshot[(Long, Long, String)]]
-    val frags = spark.emptyDataset[BufferedSnapshot[Seq[(Long, Long, Long, Long)]]]
     def named(op: String)(call: => Any): Unit = {
       val err = intercept[IllegalArgumentException](call)
       assert(err.getMessage.startsWith(s"$op: column 'ts' carries no event-time watermark"), err.getMessage)
@@ -212,14 +209,8 @@ class BufferedExactStreamSpec extends SparkSpec {
     named("cusumMonitorExact")(StatefulOps.cusumMonitorExact(events, 20L, 100L))
     named("lastTouchAttributionExact")(StatefulOps.lastTouchAttributionExact(events))
     named("timedSessionsExact")(StatefulOps.timedSessionsExact(sessions, 5000L))
-    named("patternMatchCountsExactFrom")(StatefulOps.patternMatchCountsExactFrom(events, counters))
-    named("cusumMonitorExactFrom")(StatefulOps.cusumMonitorExactFrom(events, 20L, 100L, counters))
-    named("lastTouchAttributionExactFrom")(StatefulOps.lastTouchAttributionExactFrom(events, touches))
-    named("timedSessionsExactFrom")(StatefulOps.timedSessionsExactFrom(sessions, 5000L, frags))
-    named("seededDedup")(StatefulOps.seededDedup(events, counters))
     // the watermarked forms build
-    StatefulOps.patternMatchCountsExactFrom(
-      StatefulOps.seededDedup(events.withWatermark("ts", "10 seconds"), counters), counters)
+    StatefulOps.patternMatchCountsExact(events.withWatermark("ts", "10 seconds"))
     StatefulOps.timedSessionsExact(sessions.withWatermark("ts", "10 seconds"), 5000L)
   }
 
@@ -389,334 +380,6 @@ class BufferedExactStreamSpec extends SparkSpec {
       AttributedPurchaseTs(1L, 1L, 20000L, 700L, "view"),
       AttributedPurchaseTs(2L, 11L, 20000L, 900L, "click")),
       s"restart broke buffered-exact state: $rows")
-  }
-
-  test("migration: an old ValueState-buffer checkpoint fails fast with the named error") {
-    // PARITY's migration note as a tested contract: the r14 continuation
-    // changed the buffer state variable ValueState[Seq] -> ListState, so
-    // a checkpoint written under the old layout must be REJECTED at
-    // restart with Spark's named state-variable-type error — fail-fast,
-    // never silent corruption. Run 1 writes a checkpoint through a
-    // processor registering the pre-change layout; run 2 restarts the
-    // shipped buffered-exact operator on it.
-    val in = newDir("graft-bxm-in")
-    val ckpt = newDir("graft-bxm-ckpt")
-    def put(rows: String*): Unit = putJson(in)(rows: _*)
-    def src = jsonEventSource(in)
-    withRocksDBProvider {
-      // memory sink cannot recover from a checkpoint; foreachBatch can,
-      // and the sink's contents are irrelevant here
-      val q1 = src.withWatermark("ts", "10 seconds").groupByKey(_.userId)
-        .transformWithState(new OldBufferLayoutProcessor,
-          org.apache.spark.sql.streaming.TimeMode.EventTime(), OutputMode.Update())
-        .writeStream.outputMode(OutputMode.Update)
-        .foreachBatch((df: org.apache.spark.sql.Dataset[PatternCount], _: Long) =>
-          { df.count(); () })
-        .option("checkpointLocation", ckpt).start()
-      put("""{"tsMs":10000,"userId":1,"eventId":0,"eventType":"view","cents":0}""")
-      q1.processAllAvailable()
-      q1.stop()
-      val err = intercept[Exception] {
-        val q2 = StatefulOps.patternMatchCountsExact(src.withWatermark("ts", "10 seconds"))
-          .writeStream.outputMode(OutputMode.Update)
-          .foreachBatch((df: org.apache.spark.sql.Dataset[PatternCount], _: Long) =>
-            { df.count(); () })
-          .option("checkpointLocation", ckpt).start()
-        put("""{"tsMs":20000,"userId":1,"eventId":1,"eventType":"purchase","cents":0}""")
-        try q2.processAllAvailable() finally q2.stop()
-      }
-      val chain = Iterator.iterate(err: Throwable)(_.getCause).takeWhile(_ != null)
-        .map(e => s"${e.getClass.getName}: ${e.getMessage}").mkString("\n")
-      // Spark 4.1 rejects the layout at the schema layer
-      // (STATE_STORE_VALUE_SCHEMA_NOT_COMPATIBLE); accept the
-      // variable-type form too in case a future version checks types
-      // first — either way the contract is a NAMED error, no silent read
-      assert(chain.contains("SCHEMA_NOT_COMPATIBLE")
-          || chain.contains("INVALID_VARIABLE_TYPE_CHANGE"),
-        s"expected a named state-incompatibility error, got:\n$chain")
-    }
-  }
-
-  test("migration: dump the old layout offline, bootstrap a fresh checkpoint, resume exactly") {
-    // The road FORWARD from the fail-fast above (r14 verdict task 2),
-    // end-to-end: (1) a checkpoint written under the OLD ValueState-buffer
-    // layout holds u1 = folded (1,2,0) [a settled v,c prefix] + one
-    // buffered purchase, u2 = one buffered view and NO fold result;
-    // (2) StateMigration reads it offline into BufferedSnapshot rows;
-    // (3) the shipped operator starts on a FRESH checkpoint with that
-    // dump as initial state and the stream continues. Resume-exactness:
-    //  - u1 gets NO events after the migration — its buffered purchase
-    //    must settle from the bootstrapped timer alone and fold onto the
-    //    bootstrapped prefix: (3 events, 1 match);
-    //  - u2's post-migration purchase (16s) must fold AFTER its
-    //    pre-migration buffered view (15s) in event-time order: (2, 1).
-    val inOld = newDir("graft-bxmig-in1")
-    val ckptOld = newDir("graft-bxmig-ckpt1")
-    val inNew = newDir("graft-bxmig-in2")
-    val ckptNew = newDir("graft-bxmig-ckpt2")
-    withRocksDBProvider {
-      val q1 = jsonEventSource(inOld).withWatermark("ts", "10 seconds")
-        .groupByKey(_.userId)
-        .transformWithState(new OldBufferLayoutProcessor(
-            Map(1L -> ((1L, 2L, 0L)), 7L -> ((1L, 5L, 1L))), bufferless = Set(7L)),
-          org.apache.spark.sql.streaming.TimeMode.EventTime(), OutputMode.Update())
-        .writeStream.outputMode(OutputMode.Update)
-        .foreachBatch((df: org.apache.spark.sql.Dataset[PatternCount], _: Long) =>
-          { df.count(); () })
-        .option("checkpointLocation", ckptOld).start()
-      putJson(inOld)(js(1L, 20000, 2, "purchase"), js(2L, 15000, 10, "view"),
-        js(7L, 15000, 70, "view")) // u7's row installs folded, never buffers
-      q1.processAllAvailable()
-      q1.stop()
-
-      // -- dump (offline; no streaming restart against the old layout) --
-      val snap = StateMigration
-        .readOldBufferedExact[(Long, Long, Long)](spark, ckptOld)
-      val byUser = snap.collect().map(s => s.userId -> s).toMap
-      assert(byUser(1L).buffer == Seq((20000L, 2L, "purchase", 0L))
-          && byUser(1L).folded == Some((1L, 2L, 0L)),
-        s"u1 dump wrong: ${byUser.get(1L)}")
-      assert(byUser(2L).buffer == Seq((15000L, 10L, "view", 0L))
-          && byUser(2L).folded.isEmpty,
-        s"u2 dump wrong: ${byUser.get(2L)}")
-      // the drained-key shape (r15 ADVICE): u7 exists ONLY in the folded
-      // var — its buffer reads back null and must coalesce to the EMPTY
-      // buffer (the ArrayType(NullType) -> array<struct> cast), not crash
-      // or drop the key
-      assert(byUser(7L) == StatefulOps.BufferedSnapshot(7L, Seq.empty,
-          Some((1L, 5L, 1L))),
-        s"drained-key dump wrong: ${byUser.get(7L)}")
-
-      // -- the scripted form of the same dump: parquet out, parquet back
-      // (what an ops runbook calls via graft.tools.StateMigrationDump) --
-      val dumpDir = newDir("graft-bxmig-dump")
-      assert(graft.tools.StateMigrationDump.run(spark, ckptOld, dumpDir, "cep") == 3L)
-      val viaParquet = spark.read.parquet(dumpDir)
-        .as[StatefulOps.BufferedSnapshot[(Long, Long, Long)]]
-        .collect().map(s => s.userId -> s).toMap
-      assert(viaParquet == byUser,
-        s"scripted dump diverged from the direct read: $viaParquet vs $byUser")
-
-      // -- bootstrap a fresh checkpoint and keep consuming --
-      val q2 = StatefulOps
-        .patternMatchCountsExactFrom(jsonEventSource(inNew).withWatermark("ts", "10 seconds"), snap)
-        .writeStream.outputMode(OutputMode.Update).format("memory")
-        .queryName("bx_migrated")
-        .option("checkpointLocation", ckptNew).start()
-      putJson(inNew)(js(2L, 16000, 11, "purchase"), js(7L, 17000, 71, "purchase"),
-        js(9L, 25000, 90, "s"))
-      q2.processAllAvailable()
-      putJson(inNew)(js(9L, 300000, 91, "s"))
-      q2.processAllAvailable()
-      putJson(inNew)(js(9L, 400000, 92, "s"))
-      q2.processAllAvailable()
-      q2.stop()
-      val rows = spark.table("bx_migrated").as[PatternCount].collect()
-        .filter(_.userId <= 7L).groupBy(_.userId)
-        .map { case (u, rs) => u -> rs.maxBy(_.nEvents) }
-      assert(rows(1L) == PatternCount(1L, 3L, 1L),
-        s"u1 must settle on the bootstrapped fold+timer alone: ${rows.get(1L)}")
-      assert(rows(2L) == PatternCount(2L, 2L, 1L),
-        s"u2's pre-migration view must fold before its post-migration purchase: ${rows.get(2L)}")
-      // the drained-key snapshot bootstraps cleanly: u7's empty buffer
-      // seeds no timer, and its post-migration purchase folds onto the
-      // dumped (inPrefix=1, n=5, matches=1) prefix
-      assert(rows(7L) == PatternCount(7L, 6L, 2L),
-        s"drained-key bootstrap must continue from the folded record alone: ${rows.get(7L)}")
-
-      // -- the CUSUM entry point bootstraps from the SAME dump (its fold
-      // state is the same (Long, Long, Long) layout): folded (1,2,0)
-      // reads as n=1, acc=2, alarm latched at event 0; settling u1's
-      // buffered zero-cents purchase under target=0 must give (2, 2, 0),
-      // and u2 folds its two events from zero to (2, 0, -1) --
-      val inCu = newDir("graft-bxmig-in3")
-      val ckptCu = newDir("graft-bxmig-ckpt3")
-      val q3 = StatefulOps
-        .cusumMonitorExactFrom(jsonEventSource(inCu).withWatermark("ts", "10 seconds"), target = 0L,
-          threshold = 1000L, initial = snap)
-        .writeStream.outputMode(OutputMode.Update).format("memory")
-        .queryName("bx_migrated_cusum")
-        .option("checkpointLocation", ckptCu).start()
-      putJson(inCu)(js(2L, 16000, 11, "purchase"), js(9L, 25000, 90, "s"))
-      q3.processAllAvailable()
-      putJson(inCu)(js(9L, 300000, 91, "s"))
-      q3.processAllAvailable()
-      putJson(inCu)(js(9L, 400000, 92, "s"))
-      q3.processAllAvailable()
-      q3.stop()
-      val cu = spark.table("bx_migrated_cusum").as[CusumState].collect()
-        .filter(_.userId <= 2L).groupBy(_.userId)
-        .map { case (u, rs) => u -> rs.maxBy(_.nEvents) }
-      assert(cu(1L) == CusumState(1L, 2L, 2L, 0L),
-        s"CUSUM bootstrap must continue the dumped recursion + latch: ${cu.get(1L)}")
-      assert(cu(2L) == CusumState(2L, 2L, 0L, -1L),
-        s"CUSUM bootstrap from empty fold state wrong: ${cu.get(2L)}")
-    }
-  }
-
-  test("migration insurance: the CURRENT ListState layout dumps and bootstraps too") {
-    // r16: readOldBufferedExact rescues pre-r14 checkpoints; this pins
-    // the CURRENT-layout reader (buffer as ListState — one statestore row
-    // per element, re-aggregated per key) so the NEXT layout break
-    // already has a working dump of the checkpoints users hold then.
-    // The SHIPPED operator builds the state: u1 settles a (v,c) prefix
-    // (folded (1,2,0), buffer drained — the ListState-cleared coalesce
-    // leg) then buffers a purchase past the watermark; u2 buffers a view.
-    // Dump, bootstrap a fresh checkpoint, and the continuation must
-    // match the old-layout round trip's expectations exactly.
-    val inCur = newDir("graft-bxcur-in1")
-    val ckptCur = newDir("graft-bxcur-ckpt1")
-    val inNew = newDir("graft-bxcur-in2")
-    val ckptNew = newDir("graft-bxcur-ckpt2")
-    withRocksDBProvider {
-      val q1 = StatefulOps.patternMatchCountsExact(jsonEventSource(inCur).withWatermark("ts", "10 seconds"))
-        .writeStream.outputMode(OutputMode.Update)
-        .foreachBatch((df: org.apache.spark.sql.Dataset[PatternCount], _: Long) =>
-          { df.count(); () })
-        .option("checkpointLocation", ckptCur).start()
-      putJson(inCur)(js(1L, 5000, 0, "view"), js(1L, 6000, 1, "click"),
-        js(9L, 16000, 90, "s"))
-      q1.processAllAvailable()
-      // wm 6s: the timer pass folds u1's (v,c) into (1,2,0); the new
-      // batch buffers u1's 20s purchase and u2's 15s view past wm 10s
-      putJson(inCur)(js(1L, 20000, 2, "purchase"), js(2L, 15000, 10, "view"),
-        js(9L, 17000, 91, "s"))
-      q1.processAllAvailable()
-      q1.stop()
-
-      val snap = StateMigration
-        .readCurrentBufferedExact[(Long, Long, Long)](spark, ckptCur)
-      val byUser = snap.collect().map(s => s.userId -> s).toMap
-        .filter(_._1 != 9L) // the pusher has its own buffered state
-      assert(byUser(1L) == StatefulOps.BufferedSnapshot(1L,
-          Seq((20000L, 2L, "purchase", 0L)), Some((1L, 2L, 0L))),
-        s"u1 current-layout dump wrong: ${byUser.get(1L)}")
-      assert(byUser(2L) == StatefulOps.BufferedSnapshot(2L,
-          Seq((15000L, 10L, "view", 0L)), None),
-        s"u2 current-layout dump wrong: ${byUser.get(2L)}")
-
-      val dumpDir = newDir("graft-bxcur-dump")
-      assert(graft.tools.StateMigrationDump
-        .run(spark, ckptCur, dumpDir, "cep", "current") == 3L) // incl. pusher
-
-      val q2 = StatefulOps
-        .patternMatchCountsExactFrom(jsonEventSource(inNew).withWatermark("ts", "10 seconds"),
-          snap.filter(_.userId != 9L))
-        .writeStream.outputMode(OutputMode.Update).format("memory")
-        .queryName("bx_cur_migrated")
-        .option("checkpointLocation", ckptNew).start()
-      putJson(inNew)(js(2L, 16000, 11, "purchase"), js(9L, 25000, 90, "s"))
-      q2.processAllAvailable()
-      putJson(inNew)(js(9L, 300000, 91, "s"))
-      q2.processAllAvailable()
-      putJson(inNew)(js(9L, 400000, 92, "s"))
-      q2.processAllAvailable()
-      q2.stop()
-      val rows = spark.table("bx_cur_migrated").as[PatternCount].collect()
-        .filter(_.userId <= 2L).groupBy(_.userId)
-        .map { case (u, rs) => u -> rs.maxBy(_.nEvents) }
-      assert(rows(1L) == PatternCount(1L, 3L, 1L),
-        s"u1 must settle on the bootstrapped fold+timer alone: ${rows.get(1L)}")
-      assert(rows(2L) == PatternCount(2L, 2L, 1L),
-        s"u2's pre-dump view must fold before its post-bootstrap purchase: ${rows.get(2L)}")
-    }
-  }
-
-  test("the current-layout dump reads CHANGELOG-mode checkpoints (the new session default)") {
-    // Graft.session now writes RocksDB checkpoints in changelog mode by
-    // default (r16 decision), so the checkpoints a future migration has
-    // to rescue will mostly be changelog-mode — the offline statestore
-    // reader must REPLAY changelogs onto the last snapshot to see current
-    // state, not just unzip a full snapshot. Pin it: the shipped operator
-    // writes a changelog-mode checkpoint whose LAST commits are
-    // changelog-only deltas (the fold + late buffer writes), and the dump
-    // must read the post-replay state exactly.
-    val ckpt = newDir("graft-bxcl-ckpt")
-    withConf("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" ->
-      "true") {
-      withRocksDBProvider {
-        val in = MemoryStream[TimedUserEvent](spark)
-        val q = StatefulOps.patternMatchCountsExact(in.toDS().withWatermark("ts", "10 seconds"))
-          .writeStream.outputMode(OutputMode.Update).format("memory")
-          .queryName("bxcl_src").option("checkpointLocation", ckpt).start()
-        in.addData(Seq(ev(1L, 5000, 0, "view"), ev(1L, 6000, 1, "click"),
-          ev(9L, 16000, 90, "s")))
-        q.processAllAvailable()
-        // the timer pass folds u1 -> folded (1,2,0) and drains its
-        // ListState; the purchase buffers past wm 10s — both writes land
-        // in a changelog delta, not a snapshot
-        in.addData(Seq(ev(1L, 20000, 2, "purchase"), ev(2L, 15000, 10, "view"),
-          ev(9L, 17000, 91, "s")))
-        q.processAllAvailable()
-        q.stop()
-        val byUser = StateMigration
-          .readCurrentBufferedExact[(Long, Long, Long)](spark, ckpt)
-          .collect().map(s => s.userId -> s).toMap
-        assert(byUser(1L) == StatefulOps.BufferedSnapshot(1L,
-            Seq((20000L, 2L, "purchase", 0L)), Some((1L, 2L, 0L))),
-          s"changelog-mode dump missed replayed state: ${byUser.get(1L)}")
-        assert(byUser(2L) == StatefulOps.BufferedSnapshot(2L,
-            Seq((15000L, 10L, "view", 0L)), None),
-          s"changelog-mode dump wrong for buffer-only key: ${byUser.get(2L)}")
-      }
-    }
-  }
-
-  test("migration: the attribution-typed dump round-trips too (folded carries a String field)") {
-    // The dump/bootstrap machinery is generic in the fold-state type S;
-    // the CEP round trip above exercises S = (Long, Long, Long). This
-    // pins the OTHER shape — attribution's (touchTs, touchId, touchType)
-    // with a String column — through the same statestore read
-    // (struct(value.*)) and initial-state encoder path:
-    //  - u3's bootstrapped folded best-touch ("view") must credit its
-    //    still-buffered pre-migration purchase with no new u3 events;
-    //  - u4's pre-migration buffered click must fold before its
-    //    post-migration purchase.
-    val inOld = newDir("graft-bxmiga-in1")
-    val ckptOld = newDir("graft-bxmiga-ckpt1")
-    val inNew = newDir("graft-bxmiga-in2")
-    val ckptNew = newDir("graft-bxmiga-ckpt2")
-    withRocksDBProvider {
-      val q1 = jsonEventSource(inOld).withWatermark("ts", "10 seconds")
-        .groupByKey(_.userId)
-        .transformWithState(
-          new OldAttributionLayoutProcessor(Map(3L -> ((5000L, 50L, "view")))),
-          org.apache.spark.sql.streaming.TimeMode.EventTime(), OutputMode.Append())
-        .writeStream.outputMode(OutputMode.Append)
-        .foreachBatch((df: org.apache.spark.sql.Dataset[AttributedPurchaseTs], _: Long) =>
-          { df.count(); () })
-        .option("checkpointLocation", ckptOld).start()
-      putJson(inOld)(js(3L, 20000, 51, "purchase", 700L), js(4L, 15000, 60, "click"))
-      q1.processAllAvailable()
-      q1.stop()
-
-      val snap = StateMigration
-        .readOldBufferedExact[(Long, Long, String)](spark, ckptOld)
-      val byUser = snap.collect().map(s => s.userId -> s).toMap
-      assert(byUser(3L).folded == Some((5000L, 50L, "view"))
-          && byUser(3L).buffer == Seq((20000L, 51L, "purchase", 700L)),
-        s"u3 dump wrong: ${byUser.get(3L)}")
-      assert(byUser(4L).folded.isEmpty, s"u4 dump wrong: ${byUser.get(4L)}")
-
-      val q2 = StatefulOps
-        .lastTouchAttributionExactFrom(jsonEventSource(inNew).withWatermark("ts", "10 seconds"), snap)
-        .writeStream.outputMode(OutputMode.Append).format("memory")
-        .queryName("bx_migrated_attr")
-        .option("checkpointLocation", ckptNew).start()
-      putJson(inNew)(js(4L, 16000, 61, "purchase", 900L), js(9L, 25000, 90, "s"))
-      q2.processAllAvailable()
-      putJson(inNew)(js(9L, 300000, 91, "s"))
-      q2.processAllAvailable()
-      putJson(inNew)(js(9L, 400000, 92, "s"))
-      q2.processAllAvailable()
-      q2.stop()
-      val rows = spark.table("bx_migrated_attr").as[AttributedPurchaseTs]
-        .collect().filter(_.userId <= 4L).sortBy(_.userId).toSeq
-      assert(rows == Seq(
-        AttributedPurchaseTs(3L, 51L, 20000L, 700L, "view"),
-        AttributedPurchaseTs(4L, 61L, 16000L, 900L, "click")),
-        s"attribution migration broke: $rows")
-    }
   }
 
   test("multi-stage watermark advance folds incrementally and carries state across timer passes") {
@@ -1022,133 +685,5 @@ class BufferedExactStreamSpec extends SparkSpec {
       AttributedPurchaseTs(2L, 11L, 20000L, 900L, "click")),
       s"cross-restart redelivery leaked through (dedup state lost?) or " +
         s"buffered-exact state broke: $rows")
-  }
-}
-
-/** The attribution-typed twin of [[OldBufferLayoutProcessor]]: same old
-  * ValueState[Seq] buffer layout, folded as the attribution triple
-  * (touchTs, touchEventId, touchType) — the fold-state shape with a
-  * String column, for the generic-S migration round trip.
-  */
-final class OldAttributionLayoutProcessor(
-    installFolded: Map[Long, (Long, Long, String)] = Map.empty,
-    bufferless: Set[Long] = Set.empty)
-    extends org.apache.spark.sql.streaming.StatefulProcessor[
-      Long, StatefulOps.TimedUserEvent, StatefulOps.AttributedPurchaseTs] {
-  private type BufEvent = (Long, Long, String, Long)
-  @transient private var buf: org.apache.spark.sql.streaming.ValueState[Seq[BufEvent]] = _
-  @transient private var folded: org.apache.spark.sql.streaming.ValueState[(Long, Long, String)] = _
-
-  override def init(outputMode: OutputMode,
-      timeMode: org.apache.spark.sql.streaming.TimeMode): Unit = {
-    buf = getHandle.getValueState[Seq[BufEvent]](
-      "buffer",
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[BufEvent]](),
-      org.apache.spark.sql.streaming.TTLConfig.NONE)
-    folded = getHandle.getValueState[(Long, Long, String)]("folded",
-      org.apache.spark.sql.Encoders.tuple(org.apache.spark.sql.Encoders.scalaLong,
-        org.apache.spark.sql.Encoders.scalaLong, org.apache.spark.sql.Encoders.STRING),
-      org.apache.spark.sql.streaming.TTLConfig.NONE)
-  }
-
-  override def handleInputRows(
-      userId: Long,
-      rows: Iterator[StatefulOps.TimedUserEvent],
-      timerValues: org.apache.spark.sql.streaming.TimerValues): Iterator[StatefulOps.AttributedPurchaseTs] = {
-    installFolded.get(userId).foreach { f => if (!folded.exists()) folded.update(f) }
-    if (bufferless(userId)) { rows.foreach(_ => ()) }
-    else {
-      val cur = if (buf.exists()) buf.get() else Seq.empty
-      buf.update(cur ++ rows.map(r => (r.ts.getTime, r.eventId, r.eventType, r.cents)))
-    }
-    Iterator.empty
-  }
-}
-
-/** Mimics the PRE-r14-continuation buffered-exact state layout: the
-  * buffer as `ValueState[Seq[...]]` (the variable type the continuation
-  * changed to ListState — the layout break under test) plus the `folded`
-  * tuple the CEP processor kept then and keeps now. `installFolded`
-  * lets the migration test plant a fold result for chosen keys, standing
-  * in for state the old build had settled before its last commit;
-  * `bufferless` keys consume their rows WITHOUT buffering them — the
-  * drained-key shape (folded present, buffer variable never written) a
-  * settle pass leaves behind (r15 ADVICE: the full-outer join's
-  * empty-buffer coalesce must be exercised, not just documented).
-  */
-final class OldBufferLayoutProcessor(
-    installFolded: Map[Long, (Long, Long, Long)] = Map.empty,
-    bufferless: Set[Long] = Set.empty)
-    extends org.apache.spark.sql.streaming.StatefulProcessor[
-      Long, StatefulOps.TimedUserEvent, StatefulOps.PatternCount] {
-  private type BufEvent = (Long, Long, String, Long)
-  @transient private var buf: org.apache.spark.sql.streaming.ValueState[Seq[BufEvent]] = _
-  @transient private var folded: org.apache.spark.sql.streaming.ValueState[(Long, Long, Long)] = _
-
-  override def init(outputMode: OutputMode,
-      timeMode: org.apache.spark.sql.streaming.TimeMode): Unit = {
-    buf = getHandle.getValueState[Seq[BufEvent]](
-      "buffer",
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[BufEvent]](),
-      org.apache.spark.sql.streaming.TTLConfig.NONE)
-    folded = getHandle.getValueState[(Long, Long, Long)]("folded",
-      org.apache.spark.sql.Encoders.tuple(org.apache.spark.sql.Encoders.scalaLong,
-        org.apache.spark.sql.Encoders.scalaLong, org.apache.spark.sql.Encoders.scalaLong),
-      org.apache.spark.sql.streaming.TTLConfig.NONE)
-  }
-
-  override def handleInputRows(
-      userId: Long,
-      rows: Iterator[StatefulOps.TimedUserEvent],
-      timerValues: org.apache.spark.sql.streaming.TimerValues): Iterator[StatefulOps.PatternCount] = {
-    installFolded.get(userId).foreach { f => if (!folded.exists()) folded.update(f) }
-    if (bufferless(userId)) { rows.foreach(_ => ()) }
-    else {
-      val cur = if (buf.exists()) buf.get() else Seq.empty
-      buf.update(cur ++ rows.map(r => (r.ts.getTime, r.eventId, r.eventType, r.cents)))
-    }
-    Iterator.empty
-  }
-}
-
-/** The session-shaped member of the old-layout family (r15 verdict task
-  * 1): buffer as `ValueState[Seq[...]]`, folded as the open-fragment LIST
-  * `ValueState[Seq[(start, last, n, cents)]]` — the array-typed fold
-  * state [[StateMigration.readOldBufferedSession]] reads. Buffered rows
-  * are stamped "session", matching what `timedSessionsExact`'s pre-
-  * watermark re-shape stores.
-  */
-final class OldSessionLayoutProcessor(
-    installFolded: Map[Long, Seq[(Long, Long, Long, Long)]] = Map.empty,
-    bufferless: Set[Long] = Set.empty)
-    extends org.apache.spark.sql.streaming.StatefulProcessor[
-      Long, StatefulOps.TimedEvent, StatefulOps.SessionSummary] {
-  private type BufEvent = (Long, Long, String, Long)
-  private type Frag = (Long, Long, Long, Long)
-  @transient private var buf: org.apache.spark.sql.streaming.ValueState[Seq[BufEvent]] = _
-  @transient private var folded: org.apache.spark.sql.streaming.ValueState[Seq[Frag]] = _
-
-  override def init(outputMode: OutputMode,
-      timeMode: org.apache.spark.sql.streaming.TimeMode): Unit = {
-    buf = getHandle.getValueState[Seq[BufEvent]](
-      "buffer",
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[BufEvent]](),
-      org.apache.spark.sql.streaming.TTLConfig.NONE)
-    folded = getHandle.getValueState[Seq[Frag]]("folded",
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[Frag]](),
-      org.apache.spark.sql.streaming.TTLConfig.NONE)
-  }
-
-  override def handleInputRows(
-      userId: Long,
-      rows: Iterator[StatefulOps.TimedEvent],
-      timerValues: org.apache.spark.sql.streaming.TimerValues): Iterator[StatefulOps.SessionSummary] = {
-    installFolded.get(userId).foreach { f => if (!folded.exists()) folded.update(f) }
-    if (bufferless(userId)) { rows.foreach(_ => ()) }
-    else {
-      val cur = if (buf.exists()) buf.get() else Seq.empty
-      buf.update(cur ++ rows.map(r => (r.ts.getTime, r.eventId, "session", r.cents)))
-    }
-    Iterator.empty
   }
 }

@@ -103,16 +103,18 @@ class BufferedSessionSoakSpec extends SparkSpec {
       (0 until 8).foreach { t => in.addData(burst(t)); q.processAllAvailable() }
       q.stop()
 
-      val buf = StateMigration.readVar(spark, ckpt, "buffer")
+      def stateVar(name: String) =
+        spark.read.format("statestore").option("stateVarName", name).load(ckpt)
+      val buf = stateVar("buffer")
         .groupBy(col("key.value").as("uid"))
         .agg(count(lit(1)).as("n"), min(col("list_element._1")).as("minTs"))
         .as[(Long, Long, Long)].collect().map(r => r._1 -> ((r._2, r._3))).toMap
-      val frag = StateMigration.readVar(spark, ckpt, "folded")
+      val frag = stateVar("folded")
         .select(col("key.value").as("uid"),
           // fragment lasts are ascending, so the earliest close is head's
           (element_at(col("value.value"), 1).getField("_2") + lit(gapMs)).as("close"))
         .as[(Long, Long)].collect().toMap
-      val armed = StateMigration.readVar(spark, ckpt, "armedTs")
+      val armed = stateVar("armedTs")
         .select(col("key.value").as("uid"), col("value._1").as("expiry"),
           col("value._2").as("n"))
         .as[(Long, Long, Long)].collect().map(r => r._1 -> ((r._2, r._3))).toMap

@@ -126,8 +126,8 @@ class BufferedSessionStreamSpec extends SparkSpec {
     // gone from the store (read offline; flush user 999's state may live)
     withRocksDBProvider {
       Seq("buffer", "folded", "armedTs").foreach { v =>
-        val live = StateMigration.readVar(spark, ckpt, v)
-          .where("key.value = 4").count()
+        val live = spark.read.format("statestore").option("stateVarName", v)
+          .load(ckpt).where("key.value = 4").count()
         assert(live == 0L, s"state var '$v' still holds rows for the drained key")
       }
     }
@@ -258,175 +258,6 @@ class BufferedSessionStreamSpec extends SparkSpec {
       SessionSummary(1L, 10000L, 16500L, 3L, 3L),
       SessionSummary(2L, 24000L, 25000L, 2L, 2L)),
       s"restart broke buffered-exact session state: $rows")
-  }
-
-  test("migration: session dump + bootstrap; open-fragment close timers re-arm from initial state alone") {
-    // Row 22's migration surface (r15 verdict task 1), mirroring the
-    // trio's round trip: (1) an old ValueState-buffer checkpoint holds
-    // three key shapes; (2) StateMigration.readOldBufferedSession dumps it
-    // offline (the fold state is the open-fragment LIST — the array-typed
-    // shape the tuple reader cannot express); (3) timedSessionsExactFrom
-    // bootstraps a fresh checkpoint. The three shapes split the proof:
-    //  - u1 DRAINED-KEY + timer-re-arm headline: folded holds ONE open
-    //    fragment, the buffer variable was never written (settled and
-    //    cleared before the dump), and u1 gets NO events after migration —
-    //    its session must emit anyway, i.e. handleInitialState re-derived
-    //    the close timer from nextTimerFromState(initial state) alone;
-    //  - u2 buffer-only: a pre-migration buffered event and a
-    //    post-migration event within gap must fold into ONE session;
-    //  - u3 both: the pre-migration buffered event (33s) must merge into
-    //    the bootstrapped open fragment (30s..31s, gap 5s).
-    val inOld = newDir("graft-bsmig-in1")
-    val ckptOld = newDir("graft-bsmig-ckpt1")
-    val inNew = newDir("graft-bsmig-in2")
-    val ckptNew = newDir("graft-bsmig-ckpt2")
-    def put(dir: String)(rows: String*): Unit = {
-      val f = java.nio.file.Files.createTempFile(
-        java.nio.file.Paths.get(dir), "part", ".json")
-      java.nio.file.Files.writeString(f, rows.mkString("\n") + "\n")
-      ()
-    }
-    def js(uid: Long, ms: Long, id: Long) =
-      s"""{"tsMs":$ms,"userId":$uid,"eventId":$id,"cents":1}"""
-    def src(dir: String) = spark.readStream
-      .schema("tsMs bigint, userId bigint, eventId bigint, cents bigint")
-      .json(dir)
-      .selectExpr("timestamp_millis(tsMs) as ts", "userId", "eventId", "cents")
-      .as[TimedEvent]
-    withRocksDBProvider {
-      val q1 = src(inOld).withWatermark("ts", "10 seconds").groupByKey(_.userId)
-        .transformWithState(new OldSessionLayoutProcessor(
-            installFolded = Map(
-              1L -> Seq((10000L, 12000L, 2L, 2L)),
-              3L -> Seq((30000L, 31000L, 1L, 1L))),
-            bufferless = Set(1L)),
-          org.apache.spark.sql.streaming.TimeMode.EventTime(), OutputMode.Append())
-        .writeStream.outputMode(OutputMode.Append)
-        .foreachBatch((df: org.apache.spark.sql.Dataset[SessionSummary], _: Long) =>
-          { df.count(); () })
-        .option("checkpointLocation", ckptOld).start()
-      put(inOld)(js(1L, 12000, 1), // consumed, never buffered (installs folded)
-        js(2L, 24000, 10), js(3L, 33000, 20))
-      q1.processAllAvailable()
-      q1.stop()
-
-      // -- dump, direct + scripted (parquet round trip) --
-      val snap = StateMigration.readOldBufferedSession(spark, ckptOld)
-      val byUser = snap.collect().map(s => s.userId -> s).toMap
-      assert(byUser(1L) == StatefulOps.BufferedSnapshot(1L, Seq.empty,
-          Some(Seq((10000L, 12000L, 2L, 2L)))),
-        s"u1 (drained, open fragment only) dump wrong: ${byUser.get(1L)}")
-      assert(byUser(2L) == StatefulOps.BufferedSnapshot(2L,
-          Seq((24000L, 10L, "session", 1L)), None),
-        s"u2 (buffer only) dump wrong: ${byUser.get(2L)}")
-      assert(byUser(3L) == StatefulOps.BufferedSnapshot(3L,
-          Seq((33000L, 20L, "session", 1L)), Some(Seq((30000L, 31000L, 1L, 1L)))),
-        s"u3 (buffer + fragment) dump wrong: ${byUser.get(3L)}")
-      val dumpDir = newDir("graft-bsmig-dump")
-      assert(graft.tools.StateMigrationDump.run(spark, ckptOld, dumpDir, "session") == 3L)
-      val viaParquet = spark.read.parquet(dumpDir)
-        .as[StatefulOps.BufferedSnapshot[Seq[(Long, Long, Long, Long)]]]
-        .collect().map(s => s.userId -> s).toMap
-      assert(viaParquet == byUser,
-        s"scripted session dump diverged from the direct read: $viaParquet vs $byUser")
-
-      // -- bootstrap a fresh checkpoint; u1 gets NOTHING new --
-      val q2 = StatefulOps
-        .timedSessionsExactFrom(src(inNew).withWatermark("ts", "10 seconds"), gapMs = 5000L, initial = snap)
-        .writeStream.outputMode(OutputMode.Append).format("memory")
-        .queryName("bs_migrated")
-        .option("checkpointLocation", ckptNew).start()
-      put(inNew)(js(2L, 25000, 11), js(9L, 50000, 90))
-      q2.processAllAvailable()
-      put(inNew)(js(9L, 100000, 91)) // wm 40s: every session's close passed
-      q2.processAllAvailable()
-      put(inNew)(js(9L, 200000, 92)) // backstop advance for re-armed timers
-      q2.processAllAvailable()
-      q2.stop()
-      val rows = spark.table("bs_migrated").as[SessionSummary].collect()
-        .filter(_.userId <= 3L).sortBy(_.userId).toSeq
-      assert(rows == Seq(
-        SessionSummary(1L, 10000L, 12000L, 2L, 2L),
-        SessionSummary(2L, 24000L, 25000L, 2L, 2L),
-        SessionSummary(3L, 30000L, 33000L, 2L, 2L)),
-        s"session migration round trip broke: $rows")
-    }
-  }
-
-  test("migration insurance: the CURRENT session layout dumps and bootstraps too") {
-    // r16: the current-layout twin of the session round trip above — the
-    // SHIPPED operator builds the state (no synthesized old layout), the
-    // ListState buffer dumps via per-element re-aggregation, and the
-    // drained leg is the CLEARED ListState (u1's buffer emptied by the
-    // pre-stop fold, so only its open fragment survives):
-    //  - u1: two events fold into an open fragment before the stop, then
-    //    NO events after the bootstrap — the close timer must re-arm
-    //    from initial state alone (same headline as the old-layout test);
-    //  - u2: an event still buffered at the stop must fold with a
-    //    post-bootstrap event into ONE session.
-    val inCur = newDir("graft-bscur-in1")
-    val ckptCur = newDir("graft-bscur-ckpt1")
-    val inNew = newDir("graft-bscur-in2")
-    val ckptNew = newDir("graft-bscur-ckpt2")
-    def put(dir: String)(rows: String*): Unit = {
-      val f = java.nio.file.Files.createTempFile(
-        java.nio.file.Paths.get(dir), "part", ".json")
-      java.nio.file.Files.writeString(f, rows.mkString("\n") + "\n")
-      ()
-    }
-    def js(uid: Long, ms: Long, id: Long) =
-      s"""{"tsMs":$ms,"userId":$uid,"eventId":$id,"cents":1}"""
-    def src(dir: String) = spark.readStream
-      .schema("tsMs bigint, userId bigint, eventId bigint, cents bigint")
-      .json(dir)
-      .selectExpr("timestamp_millis(tsMs) as ts", "userId", "eventId", "cents")
-      .as[TimedEvent]
-    withRocksDBProvider {
-      val q1 = StatefulOps.timedSessionsExact(src(inCur).withWatermark("ts", "10 seconds"), gapMs = 5000L)
-        .writeStream.outputMode(OutputMode.Append)
-        .foreachBatch((df: org.apache.spark.sql.Dataset[SessionSummary], _: Long) =>
-          { df.count(); () })
-        .option("checkpointLocation", ckptCur).start()
-      put(inCur)(js(1L, 10000, 0), js(1L, 12000, 1), js(2L, 24000, 10),
-        js(9L, 24000, 90))
-      q1.processAllAvailable()
-      put(inCur)(js(9L, 23000, 91)) // timer pass at wm 14s folds u1's pair
-      q1.processAllAvailable()
-      q1.stop()
-
-      val snap = StateMigration.readCurrentBufferedSession(spark, ckptCur)
-      val byUser = snap.collect().map(s => s.userId -> s).toMap
-        .filter(_._1 != 9L)
-      assert(byUser(1L) == StatefulOps.BufferedSnapshot(1L, Seq.empty,
-          Some(Seq((10000L, 12000L, 2L, 2L)))),
-        s"u1 (fold-drained ListState, open fragment) dump wrong: ${byUser.get(1L)}")
-      assert(byUser(2L) == StatefulOps.BufferedSnapshot(2L,
-          Seq((24000L, 10L, "session", 1L)), None),
-        s"u2 (buffer only) dump wrong: ${byUser.get(2L)}")
-      val dumpDir = newDir("graft-bscur-dump")
-      assert(graft.tools.StateMigrationDump
-        .run(spark, ckptCur, dumpDir, "session", "current") == 3L) // incl. pusher
-
-      val q2 = StatefulOps
-        .timedSessionsExactFrom(src(inNew).withWatermark("ts", "10 seconds"), gapMs = 5000L,
-          initial = snap.filter(_.userId != 9L))
-        .writeStream.outputMode(OutputMode.Append).format("memory")
-        .queryName("bs_cur_migrated")
-        .option("checkpointLocation", ckptNew).start()
-      put(inNew)(js(2L, 25000, 11), js(9L, 50000, 90))
-      q2.processAllAvailable()
-      put(inNew)(js(9L, 100000, 91))
-      q2.processAllAvailable()
-      put(inNew)(js(9L, 200000, 92))
-      q2.processAllAvailable()
-      q2.stop()
-      val rows = spark.table("bs_cur_migrated").as[SessionSummary].collect()
-        .filter(_.userId <= 2L).sortBy(_.userId).toSeq
-      assert(rows == Seq(
-        SessionSummary(1L, 10000L, 12000L, 2L, 2L),
-        SessionSummary(2L, 24000L, 25000L, 2L, 2L)),
-        s"current-layout session migration round trip broke: $rows")
-    }
   }
 
   test("the deduped composition absorbs a replayed trigger (row 16's recipe on row 22)") {

@@ -134,6 +134,7 @@ class StreamingSpec extends SparkSpec {
       assert(err.getMessage.startsWith(s"$op: column 'ts' carries no event-time watermark"), err.getMessage)
     }
     named("tumblingCounts")(StreamOps.tumblingCounts(raw, "ts", "10 minutes", "k"))
+    named("sessionCounts")(StreamOps.sessionCounts(raw, "ts", "5 minutes", "k"))
     val trades = raw.withColumn("id", lit(1L)).withColumn("cents", lit(1L))
     named("ohlcBars")(StreamOps.ohlcBars(trades, "ts", "k", "id", "cents"))
     val watermarked = raw.withWatermark("ts", "1 minute")
