@@ -6,10 +6,15 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, Row}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{
   AttributeSeq, BindReferences, Expression, GenericInternalRow, JoinedRow, UnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.codegen.{
+  CodeAndComment, CodeFormatter, CodeGenerator, CodegenContext, ExpressionCanonicalizer,
+  GenerateUnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.streaming.DataStreamWriter
 import org.apache.spark.sql.types.{ArrayType, BinaryType, StructField, StructType}
+import scala.util.control.NonFatal
 
 /** Kafka producer-side preparation (SURVEY.md A9 + §7.4 hard-part 1).
   *
@@ -23,10 +28,13 @@ import org.apache.spark.sql.types.{ArrayType, BinaryType, StructField, StructTyp
   * jar, ship with this image).
   *
   * The streaming sink plans the SnortAlert record projection once per
-  * query, when [[sinkAlerts]] is called: each micro-batch then runs one RDD
-  * job over the decoded batch, with no per-trigger analysis, optimisation,
-  * physical planning or typed deserializer. The batch path
-  * (`emit(prepareRecords(...))`) plans per call and writes the same records.
+  * query, when [[sinkAlerts]] is called, and generates and compiles its
+  * projection source there, on the driver: each micro-batch then runs one
+  * RDD job over the decoded batch, with no per-trigger analysis,
+  * optimisation, physical planning or typed deserializer, and each task
+  * only instantiates the compiled projection, as whole-stage codegen's
+  * tasks do. The batch path (`emit(prepareRecords(...))`) plans per call
+  * and writes the same records.
   */
 object KafkaSink {
 
@@ -84,8 +92,11 @@ object KafkaSink {
     * job over the batch's rows, the job `RDD.foreachPartition` would run.
     * Its function is a plain class, not a closure, so Spark's closure
     * cleaner does not re-read a class file every batch. Spark session settings
-    * that analysis fixes in the plan (time zone, ANSI mode) are those in
-    * force when `sinkAlerts` is called.
+    * that analysis fixes in the plan (time zone, ANSI mode), and the one
+    * the projection's code generation reads
+    * (`spark.sql.subexpressionElimination.enabled`), are those in force when
+    * `sinkAlerts` is called; a projection that does not compile fails the
+    * call, naming its stage.
     */
   def sinkAlerts(
       sensorEvents: DataFrame,
@@ -101,13 +112,14 @@ object KafkaSink {
     }
   }
 
-  /** The SnortAlert record projection of one event row per metric, planned
-    * once: `stages` are the optimised plan's chain of projections, each
-    * bound to its child's output, the first to the event row joined with
-    * its metric `m`.
+  /** The SnortAlert record projection of one event row per metric,
+    * generated and compiled once: `stages` are the optimised plan's chain
+    * of projections, each as the source of its `UnsafeProjection` class
+    * and the objects that source references, the first reading the event
+    * row joined with its metric `m`.
     */
-  private final class AlertRecords(
-      stages: Seq[Seq[Expression]],
+  private[streaming] final class AlertRecords(
+      stages: Seq[(CodeAndComment, Array[Any])],
       metricsOrdinal: Int,
       metricFields: Int,
       topic: String,
@@ -115,11 +127,13 @@ object KafkaSink {
 
     /** Explode, project and send one partition's event rows, as
       * `emit(prepareRecords(withEnvelope(alerts(events))))` does: a null
-      * or empty metrics array yields no record, as `explode` does.
+      * or empty metrics array yields no record, as `explode` does. Each
+      * stage's class comes from the compile cache; its references are this
+      * task's own deserialised copy, as they hold mutable builders.
       */
     def apply(task: TaskContext, events: Iterator[InternalRow]): Unit = {
-      val projections = stages.map { exprs =>
-        val p = UnsafeProjection.create(exprs)
+      val projections = stages.map { case (code, references) =>
+        val p = CodeGenerator.compile(code)._1.generate(references).asInstanceOf[UnsafeProjection]
         p.initialize(task.partitionId())
         p
       }
@@ -156,12 +170,23 @@ object KafkaSink {
     }
   }
 
-  private object AlertRecords {
+  private[streaming] object AlertRecords {
 
     /** Plan [[recordColumns]] of `withEnvelope` of the alert projection over
       * a placeholder relation of the declared event columns plus `m`, the
       * metric element type; fail by name unless the optimised plan is a
-      * chain of projections over that placeholder.
+      * chain of projections over that placeholder, or if a stage's code
+      * does not compile.
+      *
+      * The chain is two projections, the envelope's 56 expressions under
+      * the record's 4: `CollapseProject` inlines a producer only where it
+      * is read once or is cheap (an attribute, literal, alias or field
+      * access, or a struct read by at most one non-field access), and the
+      * record columns read `priority_str`, the CASE WHEN of
+      * `Scalars.priorityLabel`, twice (in the Avro value and in the
+      * `priorityStr` header). One collapsed projection (planned with
+      * `spark.sql.optimizer.collapseProjectAlwaysInline`) was not
+      * measurably faster on the alert ETL.
       */
     def plan(events: DataFrame, topic: String, schemaId: Int, writerFactory: () => RecordWriter): AlertRecords = {
       val metricsOrdinal = events.schema.fieldIndex("metrics")
@@ -180,7 +205,54 @@ object KafkaSink {
           s"sinkAlerts: the SnortAlert record plan is not a chain of projections over the event row " +
             s"(found ${other.nodeName}):\n${optimized.treeString}")
       }
-      new AlertRecords(stages(optimized), metricsOrdinal, metricType.length, topic, writerFactory)
+      val subexpressionElimination = spark.conf.get(SQLConf.SUBEXPRESSION_ELIMINATION_ENABLED.key).toBoolean
+      val bound = stages(optimized)
+      val generated = bound.zipWithIndex.map { case (exprs, i) =>
+        try generate(exprs, subexpressionElimination)
+        catch {
+          case NonFatal(e) => throw new IllegalStateException(
+            s"sinkAlerts: SnortAlert record projection stage ${i + 1} of ${bound.size} " +
+              s"(${exprs.size} expressions) does not compile", e)
+        }
+      }
+      new AlertRecords(generated, metricsOrdinal, metricType.length, topic, writerFactory)
+    }
+
+    /** The source of `exprs`' `UnsafeProjection` class, the class
+      * `GenerateUnsafeProjection.generate` writes, compiled here so a
+      * task's compile is a cache hit, and the objects it references.
+      */
+    private def generate(exprs: Seq[Expression], subexpressionElimination: Boolean): (CodeAndComment, Array[Any]) = {
+      val ctx = new CodegenContext
+      val eval = GenerateUnsafeProjection.createCode(
+        ctx, exprs.map(ExpressionCanonicalizer.execute), subexpressionElimination)
+      val body =
+        s"""
+           |public java.lang.Object generate(Object[] references) {
+           |  return new SpecificUnsafeProjection(references);
+           |}
+           |class SpecificUnsafeProjection extends ${classOf[UnsafeProjection].getName} {
+           |  private Object[] references;
+           |  ${ctx.declareMutableStates()}
+           |  public SpecificUnsafeProjection(Object[] references) {
+           |    this.references = references;
+           |    ${ctx.initMutableStates()}
+           |  }
+           |  public void initialize(int partitionIndex) {
+           |    ${ctx.initPartition()}
+           |  }
+           |  public java.lang.Object apply(java.lang.Object row) {
+           |    return apply((InternalRow) row);
+           |  }
+           |  public UnsafeRow apply(InternalRow ${ctx.INPUT_ROW}) {
+           |    ${eval.code}
+           |    return ${eval.value};
+           |  }
+           |  ${ctx.declareAddedFunctions()}
+           |}""".stripMargin
+      val code = CodeFormatter.stripOverlappingComments(new CodeAndComment(body, ctx.getPlaceHolderToComments()))
+      CodeGenerator.compile(code)
+      (code, ctx.references.toArray)
     }
   }
 }

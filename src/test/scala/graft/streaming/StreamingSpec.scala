@@ -514,6 +514,101 @@ class StreamingSpec extends SparkSpec {
     assert(collected.size() == k + 1)
     assert(starts.get() == k, s"${starts.get()} SQL executions over $k micro-batches")
   }
+
+  test("sinkAlerts ships each stage's generated source and references, no expression tree") {
+    import org.apache.spark.sql.catalyst.expressions.Expression
+    import org.apache.spark.sql.catalyst.expressions.codegen.CodeAndComment
+    val in = MemoryStream[String](spark)
+    val send = KafkaSink.AlertRecords.plan(
+      graft.pipeline.SnortPipeline.declared(fromJson(in.toDF())), "t", 1, () => new CollectingWriter)
+    // every object the job function serialises into a task, as Spark's closure serializer writes it
+    val shipped = scala.collection.mutable.ArrayBuffer[Class[_]]()
+    val out = new java.io.ObjectOutputStream(new java.io.ByteArrayOutputStream) {
+      enableReplaceObject(true)
+      override def replaceObject(o: AnyRef): AnyRef = { shipped += o.getClass; o }
+    }
+    out.writeObject(send)
+    out.close()
+    val trees = shipped.filter(classOf[Expression].isAssignableFrom).distinct
+    assert(trees.isEmpty, s"the job function ships expression trees: ${trees.map(_.getSimpleName)}")
+    assert(shipped.contains(classOf[CodeAndComment]), "the job function ships no generated source")
+  }
+
+  /** `n` multi-metric SensorEvents as JSON, from index `from`: event `i`
+    * has hash "e<i>", sensor "s<i % 7>", priority 1 + i % 4, a
+    * classification on even `i`, and 1 + i % 5 metrics whose Snort
+    * timestamps are all distinct, at the epoch millis [[manyStamps]].
+    */
+  private def manyEvents(from: Int, n: Int): Seq[String] = (from until from + n).map { i =>
+    val metrics = manyStamps(i).zipWithIndex.map { case (ms, j) =>
+      val off = ms - manyBase
+      f"""{"snort_timestamp":"25/01/31-04:15:${off / 1000}%02d.${off % 1000 * 1000}%06d",""" +
+        s""""snort_dst_port":$j,"snort_src_address":"10.0.${i % 256}.$j"}"""
+    }
+    val cls = if (i % 2 == 0) s""","snort_classification":"c$i"""" else ""
+    s"""{"metrics":[${metrics.mkString(",")}],"event_hash_sha256":"e$i",""" +
+      s""""event_metrics_count":${metrics.size},"event_seconds":1738296906,"sensor_id":"s${i % 7}",""" +
+      """"sensor_version":"1","event_read_at":1738296906927463,"event_sent_at":1738296906900000,""" +
+      """"event_received_at":1738296906000000,"snort_interface":"eth0","snort_message":"m",""" +
+      s""""snort_priority":${1 + i % 4},"snort_protocol":"TCP","snort_rule_gid":1,"snort_rule_rev":1,""" +
+      s""""snort_rule_sid":1,"snort_rule":"r","snort_seconds":1738296906$cls}"""
+  }
+  /** 2025-01-31 04:15:00 UTC, in epoch millis. */
+  private val manyBase = 1738296900000L
+  private def manyStamps(i: Int): Seq[Long] = (0 to i % 5).map(j => manyBase + (i * 5 + j) * 10L)
+
+  /** The records `run` sends to [[CollectingWriter]], as comparable values. */
+  private def sentRecords(run: => Unit): Seq[(String, Seq[Byte], Seq[Byte], Long, Map[String, String])] = {
+    val q = new java.util.concurrent.ConcurrentLinkedQueue[KafkaSink.PreparedRecord]()
+    CollectingWriter.queue = q
+    run
+    q.asScala.toSeq.map(r => (r.topic, r.key.toSeq, r.value.toSeq, r.timestampMs, r.headers))
+  }
+
+  /** Records of `emit(prepareRecords(...))` over the JSON `events`. */
+  private def batchRecords(events: Seq[String]) = sentRecords(KafkaSink.emit(KafkaSink.prepareRecords(
+    graft.pipeline.SnortPipeline.withEnvelope(graft.pipeline.SnortPipeline.alerts(fromJson(events.toDF("value")))),
+    "alerts", 7), () => new CollectingWriter))
+
+  /** Records `sinkAlerts` sends over `batches` of JSON events on a
+    * 4-partition stream, the query made by `sink` from the stream's events.
+    */
+  private def streamRecords(batches: Seq[Seq[String]])(
+      sink: org.apache.spark.sql.DataFrame => org.apache.spark.sql.streaming.DataStreamWriter[Row]) =
+    sentRecords {
+      val in = MemoryStream[String](spark, 4)
+      val q = sink(fromJson(in.toDF())).start()
+      try batches.foreach { b => in.addData(b); q.processAllAvailable() }
+      finally q.stop()
+    }
+
+  test("sinkAlerts over 4 concurrent partitions: every record carries its own event's key, headers and time") {
+    val batches = Seq(manyEvents(0, 300), manyEvents(300, 300))
+    val sent = streamRecords(batches)(KafkaSink.sinkAlerts(_, "alerts", 7, () => new CollectingWriter))
+    val byEvent = sent.groupBy { case (_, key, _, _, _) => new String(key.toArray, "UTF-8").stripPrefix("e").toInt }
+    assert(byEvent.keySet == (0 until 600).toSet)
+    byEvent.foreach { case (i, records) =>
+      records.foreach { case (_, _, _, _, headers) =>
+        assert(headers("hash_sha256") == s"e$i" && headers("sensor_id") == s"s${i % 7}" &&
+          headers("classification") == (if (i % 2 == 0) s"c$i" else ""), s"event e$i sent headers $headers")
+      }
+      assert(records.map(_._4).sorted == manyStamps(i), s"event e$i record timestamps")
+    }
+    assert(sent.groupMapReduce(identity)(_ => 1)(_ + _) ==
+      batchRecords(batches.flatten).groupMapReduce(identity)(_ => 1)(_ + _))
+  }
+
+  test("sinkAlerts fixes subexpression elimination when called: off then, it sends the batch path's records") {
+    val key = "spark.sql.subexpressionElimination.enabled"
+    assert(spark.conf.get(key) == "true")
+    val batches = Seq(manyEvents(0, 100), manyEvents(100, 100))
+    val sent = streamRecords(batches) { events =>
+      withConf(key -> "false")(KafkaSink.sinkAlerts(events, "alerts", 7, () => new CollectingWriter))
+    }
+    assert(sent.size == batches.flatten.indices.map(_ % 5 + 1).sum)
+    assert(sent.groupMapReduce(identity)(_ => 1)(_ + _) ==
+      batchRecords(batches.flatten).groupMapReduce(identity)(_ => 1)(_ + _))
+  }
 }
 
 /** Writer that collects into a static queue (executors share the JVM in
