@@ -1,11 +1,12 @@
 #!/usr/bin/env python3
-"""Where a streaming query's stream-execution thread spends its CPU, from a JFR recording.
+"""Where a streaming query's threads spend their CPU, from a JFR recording.
 
 Reads the `jdk.ExecutionSample` events of a Java Flight Recorder file
 (through `jfr print --json --stack-depth 300 --events jdk.ExecutionSample`,
-or a file that command already wrote) and buckets the samples of every
-"stream execution thread" (the thread that plans and runs each
-micro-batch) by the innermost phase marker on the stack:
+or a file that command already wrote) and buckets the samples of the
+threads matching --thread by the innermost marker on the stack. A
+"stream execution thread" (the default: the driver thread that plans and
+runs each micro-batch) is bucketed by phase:
 
   analysis          Catalyst analysis (QueryExecution.analyzed, Analyzer)
   optimise/plan     optimizer rules, physical planning, prepareForExecution
@@ -15,11 +16,30 @@ micro-batch) by the innermost phase marker on the stack:
   job               job submission through the DAG scheduler
   other             everything else (offset/commit logs, the sink's own work)
 
+An "Executor task launch" thread (--thread '^Executor task launch') is
+bucketed by the layer of the alert ETL's per-record work:
+
+  timestamp format  the ISO-8601 metadata fields (IsoMicrosFormat, or
+                    Spark's TimestampFormatter.format under date_format)
+  timestamp parse   the Snort event time (SnortTimestampParse, or Spark's
+                    TimestampFormatter.parse under to_timestamp)
+  regex             java.util.regex and regexp_replace (with the generated
+                    RegExpReplace_N methods that convert its strings)
+  Avro              the Confluent-framed Avro value (AvroWire, AvroLayout)
+  decode            framed protobuf decode (ProtobufWire, SensorEventDecoder)
+  headers map       the headers map (ArrayBasedMapBuilder, CreateMap_N)
+  record conversion the projected row as a PreparedRecord (AlertRecords.record)
+  task deserialise  Java (de)serialisation of the task's function and
+                    references, and of its result
+  projection        the rest of the generated projection code
+  other             everything else (the writer, the scan, scheduling)
+
 Record a benchmark run with, for example:
 
   JDK_JAVA_OPTIONS=-XX:StartFlightRecording=filename=etl.jfr,settings=profile \\
     python3 alertbench/run.py --workload etl --seed 1 --seconds 6 --trace 0
   python3 scripts/jfr_breakdown.py etl.jfr
+  python3 scripts/jfr_breakdown.py etl.jfr --thread '^Executor task launch'
 
 Usage: python3 scripts/jfr_breakdown.py RECORDING.(jfr|json) [--thread REGEX]
 """
@@ -53,16 +73,39 @@ RULES = [
         r"|^org\.apache\.spark\.SparkContext\.(runJob|submitJob)")),
 ]
 
+EXECUTOR_THREAD = re.compile(r"^Executor task launch")
+EXECUTOR_BUCKETS = ["timestamp format", "timestamp parse", "regex", "Avro", "decode", "headers map",
+                    "record conversion", "task deserialise", "projection", "other"]
+EXECUTOR_RULES = [
+    ("timestamp format", re.compile(
+        r"^graft\.functions\.IsoMicrosFormat"
+        r"|^org\.apache\.spark\.sql\.catalyst\.util\.\w*TimestampFormatter\w*\.format")),
+    ("timestamp parse", re.compile(
+        r"^graft\.functions\.SnortTimestampParse"
+        r"|^org\.apache\.spark\.sql\.catalyst\.util\.\w*TimestampFormatter\w*\.parse")),
+    ("regex", re.compile(
+        r"^java\.util\.regex\.|^org\.apache\.spark\.sql\.catalyst\.expressions\.RegExpReplace"
+        r"|^org\.apache\.spark\.sql\.catalyst\.expressions\.GeneratedClass\$\w+\.RegExpReplace_")),
+    ("Avro", re.compile(r"^graft\.streaming\.(AvroWire|AvroLayout|AvroCodec)")),
+    ("decode", re.compile(r"^graft\.streaming\.(ProtobufWire|SensorEventDecoder|ConfluentFraming)")),
+    ("headers map", re.compile(
+        r"^org\.apache\.spark\.sql\.catalyst\.util\.ArrayBasedMapBuilder"
+        r"|^org\.apache\.spark\.sql\.catalyst\.expressions\.GeneratedClass\$\w+\.CreateMap_")),
+    ("record conversion", re.compile(r"^graft\.streaming\.KafkaSink\$AlertRecords\.record")),
+    ("task deserialise", re.compile(r"^org\.apache\.spark\.serializer\.|^java\.io\.ObjectInputStream")),
+    ("projection", re.compile(r"^org\.apache\.spark\.sql\.catalyst\.expressions\.GeneratedClass")),
+]
+
 
 def frame_name(frame):
     m = frame["method"]
     return m["type"]["name"].replace("/", ".") + "." + m["name"]
 
 
-def bucket(frames):
+def bucket(frames, rules):
     for f in frames:
         name = frame_name(f)
-        for b, rule in RULES:
+        for b, rule in rules:
             if rule.search(name):
                 return b
     return "other"
@@ -96,7 +139,8 @@ def main():
             ["jfr", "print", "--json", "--stack-depth", "300", "--events", "jdk.ExecutionSample",
              args.recording], check=True, stdout=subprocess.PIPE, text=True).stdout
     thread = re.compile(args.thread)
-    counts = dict.fromkeys(BUCKETS, 0)
+    kinds = {"driver": (BUCKETS, RULES), "executor": (EXECUTOR_BUCKETS, EXECUTOR_RULES)}
+    counts = {k: dict.fromkeys(buckets, 0) for k, (buckets, _) in kinds.items()}
     total = 0
     for ev in events(text):
         v = ev["values"]
@@ -104,12 +148,19 @@ def main():
         if ev.get("type") != "jdk.ExecutionSample" or not thread.search(name):
             continue
         total += 1
-        counts[bucket((v.get("stackTrace") or {}).get("frames") or [])] += 1
+        kind = "executor" if EXECUTOR_THREAD.search(name) else "driver"
+        counts[kind][bucket((v.get("stackTrace") or {}).get("frames") or [], kinds[kind][1])] += 1
     if total == 0:
         sys.exit(f"no samples on a thread matching {args.thread!r}")
     print(f"{total} samples on threads matching {args.thread!r}")
-    for b in BUCKETS:
-        print(f"  {b:<15} {counts[b]:>6}  {100.0 * counts[b] / total:5.1f}%")
+    for kind, (buckets, _) in kinds.items():
+        n = sum(counts[kind].values())
+        if n == 0:
+            continue
+        if n != total:
+            print(f" {kind} threads: {n} samples")
+        for b in buckets:
+            print(f"  {b:<17} {counts[kind][b]:>6}  {100.0 * counts[kind][b] / n:5.1f}%")
 
 
 if __name__ == "__main__":

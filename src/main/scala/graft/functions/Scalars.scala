@@ -28,15 +28,14 @@ object Scalars {
     *   1738296906000000 → "2025-01-31T04:15:06Z"
     * Reference: internal/processor/processor.go:16-18.
     *
-    * `date_format(..., "SSS")` prints the first three fraction digits of the
-    * microsecond-precision timestamp (truncation, matching Go), then one
-    * regexp trims trailing zeros. Both are codegen'd built-ins.
+    * One codegen'd arithmetic kernel, [[IsoMicrosTrimExpression]], UTC
+    * whatever the session time zone. It prints what
+    * `regexp_replace(date_format(timestamp_micros(us),
+    * "yyyy-MM-dd'T'HH:mm:ss.SSS'Z'"), "\\.?0+Z$", "Z")` prints in a UTC
+    * session, which the specs keep as its oracle.
     */
   def isoMicrosTrimmed(epochMicros: Column): Column =
-    regexp_replace(
-      date_format(timestamp_micros(epochMicros), "yyyy-MM-dd'T'HH:mm:ss.SSS'Z'"),
-      "\\.?0+Z$",
-      "Z")
+    IsoMicrosTrimExpression.column(epochMicros)
 
   /** Snort timestamp format, Go layout "06/01/02-15:04:05.999999"
     * (internal/app/app.go:195). */
@@ -44,13 +43,14 @@ object Scalars {
 
   /** Event-time parse with fallback: parse the Snort-format timestamp string;
     * if unparseable, fall back to the unix-seconds column.
-    * Reference: internal/app/app.go:195-198. `try_to_timestamp` yields null on
-    * parse failure (even under ANSI), which is exactly the Go fallback branch.
+    * Reference: internal/app/app.go:195-198. The parse is one codegen'd
+    * kernel, [[SnortTimestampExpression]], UTC as Go's `time.Parse` with no
+    * zone is; it yields null where the reference's parse fails, which is
+    * the Go fallback branch. `try_to_timestamp(ts, SnortTimestampFormat)`
+    * in a UTC session is its oracle in the specs.
     */
   def eventTimeWithFallback(snortTimestamp: Column, fallbackSeconds: Column): Column =
-    coalesce(
-      try_to_timestamp(snortTimestamp, lit(SnortTimestampFormat)),
-      timestamp_seconds(fallbackSeconds))
+    coalesce(SnortTimestampExpression.column(snortTimestamp), timestamp_seconds(fallbackSeconds))
 
   /** Floor an epoch-seconds value to an n-second bucket:
     * roundTime(t, n) = (t / n) * n (integer division).

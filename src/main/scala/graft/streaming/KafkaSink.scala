@@ -5,7 +5,7 @@ import org.apache.spark.TaskContext
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, Row}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{
-  AttributeSeq, BindReferences, Expression, GenericInternalRow, JoinedRow, UnsafeProjection}
+  Attribute, AttributeSeq, BindReferences, Expression, GenericInternalRow, JoinedRow, UnsafeProjection}
 import org.apache.spark.sql.catalyst.expressions.codegen.{
   CodeAndComment, CodeFormatter, CodeGenerator, CodegenContext, ExpressionCanonicalizer,
   GenerateUnsafeProjection}
@@ -92,11 +92,13 @@ object KafkaSink {
     * job over the batch's rows, the job `RDD.foreachPartition` would run.
     * Its function is a plain class, not a closure, so Spark's closure
     * cleaner does not re-read a class file every batch. Spark session settings
-    * that analysis fixes in the plan (time zone, ANSI mode), and the one
-    * the projection's code generation reads
+    * that analysis fixes in the plan (ANSI mode), and the one the
+    * projection's code generation reads
     * (`spark.sql.subexpressionElimination.enabled`), are those in force when
     * `sinkAlerts` is called; a projection that does not compile fails the
-    * call, naming its stage.
+    * call, naming its stage. The session time zone shapes no record: the
+    * ISO-8601 metadata fields and the event time are UTC, as the
+    * reference's are.
     */
   def sinkAlerts(
       sensorEvents: DataFrame,
@@ -172,11 +174,9 @@ object KafkaSink {
 
   private[streaming] object AlertRecords {
 
-    /** Plan [[recordColumns]] of `withEnvelope` of the alert projection over
-      * a placeholder relation of the declared event columns plus `m`, the
-      * metric element type; fail by name unless the optimised plan is a
-      * chain of projections over that placeholder, or if a stage's code
-      * does not compile.
+    /** Plan the record projection ([[recordPlan]]); fail by name unless
+      * the optimised plan is a chain of projections over its placeholder
+      * relation, or if a stage's code does not compile.
       *
       * The chain is two projections, the envelope's 56 expressions under
       * the record's 4: `CollapseProject` inlines a producer only where it
@@ -190,14 +190,9 @@ object KafkaSink {
       */
     def plan(events: DataFrame, topic: String, schemaId: Int, writerFactory: () => RecordWriter): AlertRecords = {
       val metricsOrdinal = events.schema.fieldIndex("metrics")
-      val metrics = events.schema(metricsOrdinal).dataType.asInstanceOf[ArrayType]
-      val metricType = metrics.elementType.asInstanceOf[StructType]
-      val spark = events.sparkSession
-      val rows = spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
-        StructType(events.schema.fields :+ StructField("m", metricType, metrics.containsNull)))
-      val input = rows.queryExecution.analyzed.output
-      val envelope = SnortPipeline.withEnvelope(rows.select(SnortPipeline.alertColumns: _*))
-      val optimized = envelope.select(recordColumns(envelope, schemaId): _*).queryExecution.optimizedPlan
+      val metricType = events.schema(metricsOrdinal).dataType.asInstanceOf[ArrayType].elementType
+        .asInstanceOf[StructType]
+      val (input, optimized) = recordPlan(events, schemaId)
       def stages(p: LogicalPlan): List[Seq[Expression]] = p match {
         case Project(list, child) => stages(child) :+ BindReferences.bindReferences(list, AttributeSeq(child.output))
         case leaf if leaf.children.isEmpty && leaf.output == input => Nil
@@ -205,7 +200,7 @@ object KafkaSink {
           s"sinkAlerts: the SnortAlert record plan is not a chain of projections over the event row " +
             s"(found ${other.nodeName}):\n${optimized.treeString}")
       }
-      val subexpressionElimination = spark.conf.get(SQLConf.SUBEXPRESSION_ELIMINATION_ENABLED.key).toBoolean
+      val subexpressionElimination = events.sparkSession.conf.get(SQLConf.SUBEXPRESSION_ELIMINATION_ENABLED.key).toBoolean
       val bound = stages(optimized)
       val generated = bound.zipWithIndex.map { case (exprs, i) =>
         try generate(exprs, subexpressionElimination)
@@ -216,6 +211,21 @@ object KafkaSink {
         }
       }
       new AlertRecords(generated, metricsOrdinal, metricType.length, topic, writerFactory)
+    }
+
+    /** The optimised plan of [[recordColumns]] of `withEnvelope` of the
+      * alert projection over a placeholder relation of the declared event
+      * columns plus `m`, the metric element type, and that relation's
+      * output.
+      */
+    private[streaming] def recordPlan(events: DataFrame, schemaId: Int): (Seq[Attribute], LogicalPlan) = {
+      val metrics = events.schema("metrics").dataType.asInstanceOf[ArrayType]
+      val spark = events.sparkSession
+      val rows = spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
+        StructType(events.schema.fields :+ StructField("m", metrics.elementType, metrics.containsNull)))
+      val envelope = SnortPipeline.withEnvelope(rows.select(SnortPipeline.alertColumns: _*))
+      (rows.queryExecution.analyzed.output,
+        envelope.select(recordColumns(envelope, schemaId): _*).queryExecution.optimizedPlan)
     }
 
     /** The source of `exprs`' `UnsafeProjection` class, the class

@@ -598,6 +598,35 @@ class StreamingSpec extends SparkSpec {
       batchRecords(batches.flatten).groupMapReduce(identity)(_ => 1)(_ + _))
   }
 
+  test("the session time zone shapes no record: under America/New_York both paths send what UTC sends") {
+    val events = manyEvents(0, 60)
+    val ny = "spark.sql.session.timeZone" -> "America/New_York"
+    val utc = batchRecords(events)
+    val sentAt = "2025-01-31T04:15:06.9Z".getBytes("UTF-8").toSeq // event_sent_at 1738296906900000
+    assert(utc.forall(_._3.containsSlice(sentAt)))
+    assert(utc.map(_._4).sorted == (0 until 60).flatMap(manyStamps).sorted)
+    val multiset = utc.groupMapReduce(identity)(_ => 1)(_ + _)
+    assert(withConf(ny)(batchRecords(events)).groupMapReduce(identity)(_ => 1)(_ + _) == multiset)
+    val stream = streamRecords(Seq(events.take(30), events.drop(30))) { e =>
+      withConf(ny)(KafkaSink.sinkAlerts(e, "alerts", 7, () => new CollectingWriter))
+    }
+    assert(stream.groupMapReduce(identity)(_ => 1)(_ + _) == multiset)
+  }
+
+  test("the SnortAlert record plan formats and parses timestamps with the kernels alone") {
+    import org.apache.spark.sql.catalyst.expressions.{DateFormatClass, GetTimestamp, ParseToTimestamp, RegExpReplace}
+    import graft.functions.{IsoMicrosTrimExpression, SnortTimestampExpression}
+    val in = MemoryStream[String](spark)
+    val (_, plan) = KafkaSink.AlertRecords.recordPlan(graft.pipeline.SnortPipeline.declared(fromJson(in.toDF())), 7)
+    val exprs = plan.collect { case node => node.expressions }.flatten.flatMap(_.collect { case e => e })
+    val composed = exprs.collect {
+      case e @ (_: DateFormatClass | _: RegExpReplace | _: GetTimestamp | _: ParseToTimestamp) => e.nodeName
+    }
+    assert(composed.isEmpty, s"the record plan still runs ${composed.distinct}:\n${plan.treeString}")
+    assert(exprs.count(_.isInstanceOf[IsoMicrosTrimExpression]) == 3)
+    assert(exprs.exists(_.isInstanceOf[SnortTimestampExpression]))
+  }
+
   test("sinkAlerts fixes subexpression elimination when called: off then, it sends the batch path's records") {
     val key = "spark.sql.subexpressionElimination.enabled"
     assert(spark.conf.get(key) == "true")
