@@ -27,7 +27,7 @@ Three checks, strongest applicable wins:
 Contextual `:N` citations (backtick refs without a file) resolve
 against the most recently named .scala file — the PATH it resolved to,
 not just the basename — unless a source file is named bare (without
-`.scala`, as in "BufferedSessionStreamSpec `:153`") between the previous
+`.scala`, as in "TransformWithStateSpec `:259`") between the previous
 citation and this one: the nearest such name becomes the file. A
 basename shared by two source files is an ERROR unless the citation
 carries a disambiguating path suffix (`streaming/Foo.scala:3`); a bare
@@ -36,8 +36,8 @@ name cannot carry one, so a shared one is an ERROR.
 Usage: python3 scripts/parity_sweep.py [--quiet] [--selftest]
   --selftest: (1) the real tree must pass; (2) a synthetic fixture
   reproducing the r17 near-miss — a different test's opening line
-  occupying a cited line number in BufferedSessionStreamSpec — must
-  FAIL; (3) a cited entry point replaced by another def must FAIL;
+  occupying a description-checked cited line number in StreamingSpec —
+  must FAIL; (3) a cited entry point replaced by another def must FAIL;
   (4) a contextual citation after a bare spec name must be checked
   against that spec, not the last `.scala` file named; (5) a bare spec
   citation shifted onto a test-body line must FAIL. Exercised by the
@@ -185,7 +185,7 @@ def sweep(text, paths, read_lines, quiet=True):
             plausible = anchor_shaped(fname, content)
             # a name/desc found next to a comma-list applies to the FIRST
             # cited line only (the list's tail are related anchors, e.g.
-            # "(`patternMatchCountsExact`; processor `:979`)")
+            # "(`patternMatchCounts`; processor `:306`)")
             title = TEST_TITLE.search(content)
             if name and i == 0:
                 ok = name in content
@@ -235,15 +235,15 @@ def run_selftest():
         return 1
     # (2) the r17 near-miss, reproduced: a DIFFERENT test's opening line
     # occupying a cited line number must now FAIL. Take the first
-    # description-checked citation of BufferedSessionStreamSpec (the file
-    # where the near-miss happened live) and overwrite its cited line
-    # with a foreign test header in an in-memory copy of the file.
+    # citation of StreamingSpec, which carries a description (row 1's
+    # "late-drop + append finality"), and overwrite its cited line with a
+    # foreign test header in an in-memory copy of the file.
     paths = build_paths(ROOT)
     text = (ROOT / "PARITY.md").read_text()
-    target = paths["BufferedSessionStreamSpec.scala"][0]
-    m = re.search(r"BufferedSessionStreamSpec\.scala:(\d+)", text)
+    target = paths["StreamingSpec.scala"][0]
+    m = re.search(r"(?<![\w/])StreamingSpec\.scala:(\d+)", text)
     if not m:
-        print("[selftest] FAIL: no BufferedSessionStreamSpec citation found")
+        print("[selftest] FAIL: no StreamingSpec citation found")
         return 1
     ln = int(m.group(1))
     doctored = target.read_text().splitlines()
@@ -255,7 +255,7 @@ def run_selftest():
 
     _, _, failures = sweep(text, paths, read_lines, quiet=True)
     hit = [f for f in failures
-           if f.startswith(f"BufferedSessionStreamSpec.scala:{ln} ")]
+           if f.startswith(f"StreamingSpec.scala:{ln} ")]
     if not hit:
         print(f"[selftest] FAIL: a foreign test header at {target.name}:{ln} "
               f"passed the sweep (failures: {failures})")
@@ -299,11 +299,11 @@ def run_selftest():
         ln = next(i + 1 for i, l in enumerate(lines) if TEST_TITLE.search(l))
         return lines, ln, TEST_TITLE.search(lines[ln - 1]).group(1)
 
-    _, eln, etitle = first_test(paths["BufferedExactStreamSpec.scala"][0])
-    bare = paths["BufferedSessionStreamSpec.scala"][0]
+    _, eln, etitle = first_test(paths["CusumStreamSpec.scala"][0])
+    bare = paths["PatternMatchStreamSpec.scala"][0]
     lines, bln, title = first_test(bare)
-    fixture = (f"`BufferedExactStreamSpec.scala:{eln}` ({etitle}); "
-               f"BufferedSessionStreamSpec `:{bln}` ({title})")
+    fixture = (f"`CusumStreamSpec.scala:{eln}` ({etitle}); "
+               f"PatternMatchStreamSpec `:{bln}` ({title})")
     bdoc = list(lines)
     bdoc[bln - 1] = '  test("synthetic probe: a foreign test landed on this line") {'
 
@@ -323,11 +323,11 @@ def run_selftest():
     # (5) a spec citation with neither a name nor a description, shifted
     # onto a code line inside a test body by a one-line deletion above it,
     # must fail the anchor-shape check
-    spec = paths["BufferedExactStreamSpec.scala"][0]
+    spec = paths["PatternMatchStreamSpec.scala"][0]
     slines = spec.read_text().splitlines()
     sln = next(i + 1 for i, l in enumerate(slines)
                if TEST_TITLE.search(l) and slines[i + 1].strip().startswith("val "))
-    fixture5 = f"see `BufferedExactStreamSpec.scala:{sln}`."
+    fixture5 = f"see `PatternMatchStreamSpec.scala:{sln}`."
     shifted = slines[1:]
 
     def read_lines5(p):

@@ -47,15 +47,17 @@ object Graft {
       // snapshot per trigger by default; changelog checkpointing uploads
       // O(trigger delta) and moves snapshots to background maintenance —
       // at 100 TB-class state that is the streaming checkpoint cost model.
-      // A/B over the buffered-exact trio + sessionization (AbBench
-      // `*-cl-*` legs, 600k events/20k keys): checkpoint state bytes
-      // −21..−37%, commit latency −20..−35%, wall never worse; restart
-      // exactness re-pinned under the mode (BufferedSessionStreamSpec's
-      // changelog restart case). No-op unless a query opts into the
-      // RocksDB provider, and Spark supports toggling it across restarts
-      // of an existing checkpoint, so checkpoints stay portable to
-      // sessions built elsewhere — with one floor (r16 ADVICE): once a
-      // checkpoint's recent commits are changelog-only deltas, reading it
+      // A/B over the watermark-buffered transformWithState operators
+      // since retired (AbBench `*-cl-*` legs, 600k events/20k keys):
+      // checkpoint state bytes −21..−37%, commit latency −20..−35%, wall
+      // never worse. Restart exactness under the mode, and from a
+      // snapshot-mode checkpoint into it, is pinned on timedSessions
+      // (TransformWithStateSpec's restart cases). No-op unless a query
+      // opts into the RocksDB provider, and Spark supports toggling it
+      // across restarts of an existing checkpoint, so checkpoints stay
+      // portable to sessions built elsewhere — with one floor (r16
+      // ADVICE): once a checkpoint's recent commits are changelog-only
+      // deltas, reading it
       // requires a runtime with RocksDB changelog replay (Spark >= 3.4.0,
       // where changelogCheckpointing shipped); an older runtime cannot
       // open it. PARITY.md records the decision and the floor.

@@ -24,14 +24,16 @@ object KafkaSource {
   /** readStream plan: topic → framed bytes → decoded SensorEvent columns. Offsets/consumer-group semantics: checkpointing
     * supplies the reference's manual-commit at-least-once contract
     * (SURVEY.md A10) — `startingOffsets=earliest` mirrors
-    * `auto.offset.reset=earliest`.
+    * `auto.offset.reset=earliest`. `malformed` counts the poison records
+    * the decode drops; register it once per query
+    * (`ProtobufWire.malformedCounter`) and read it on the driver.
     */
   def sensorEvents(
       spark: SparkSession,
       bootstrapServers: String,
       topic: String,
-      maxOffsetsPerTrigger: Option[Long] = None,
-      malformed: Option[org.apache.spark.util.LongAccumulator] = None): DataFrame = {
+      malformed: org.apache.spark.util.LongAccumulator,
+      maxOffsetsPerTrigger: Option[Long] = None): DataFrame = {
     val reader = spark.readStream
       .format("kafka")
       .option("kafka.bootstrap.servers", bootstrapServers)
@@ -44,14 +46,10 @@ object KafkaSource {
     // message-indexes block) happens inside the decode kernel — the indexes
     // block is variable-length, so a static substring would corrupt every
     // record whose producer wrote more than the single-0x00 shorthand.
-    // Bad frames / poison messages are counted, not fatal (reference
-    // failed-event accounting, app.go:85-97). Pass your own accumulator to
-    // observe the count programmatically — creating one per call would pile
-    // up duplicate same-named accumulators on the driver and leave callers
-    // without the handle.
-    ProtobufWire.decodeFramed(
-      framed.select(col("value")), "value",
-      malformed.orElse(Some(ProtobufWire.malformedCounter(spark))))
+    // Bad frames / poison messages are counted on the caller's
+    // `malformed` accumulator, not fatal (reference failed-event
+    // accounting, app.go:85-97).
+    ProtobufWire.decodeFramed(framed.select(col("value")), "value", Some(malformed))
   }
 }
 

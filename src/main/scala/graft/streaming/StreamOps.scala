@@ -228,10 +228,8 @@ object StreamOps {
     * the already-emitted attribution (append mode emits once); when every
     * event of a user lands in arrival order — or in one trigger — the
     * output equals the batch query row for row (AttributionStreamSpec pins
-    * both, plus the trigger-split invariance of in-order delivery).
-    * [[StatefulOps.lastTouchAttributionExact]] is the opt-in
-    * watermark-buffered sibling that closes the late-touch residual by
-    * folding in event-time order (PARITY.md row 21).
+    * both, plus the trigger-split invariance of in-order delivery;
+    * PARITY.md row 9).
     *
     * Scale shape: one keyed shuffle (the state-store partitioning), one
     * fixed-size state record per live user, per-trigger sort bounded by the

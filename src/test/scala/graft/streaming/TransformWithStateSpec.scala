@@ -474,4 +474,108 @@ class TransformWithStateSpec extends SparkSpec {
     // user 7 appears once (trigger 1) — not re-emitted by trigger 2
     assert(out.count(_.userId == 7L) == 1 && out.count(_.userId == 8L) == 1)
   }
+
+  test("timedSessions restart: an open fragment and an armed timer survive a checkpoint restart") {
+    sessionRestart("graft-tws-restart")
+  }
+
+  test("timedSessions restart exactness holds under RocksDB changelog checkpointing") {
+    // Graft.session turns changelog checkpointing on: the restart must
+    // rebuild the same fragments and timers from changelog replay as
+    // from full snapshots. Both runs in changelog mode.
+    sessionRestart("graft-tws-restart-cl",
+      confRun1 = Map(ChangelogKey -> "true"),
+      confRun2 = Map(ChangelogKey -> "true"))
+  }
+
+  test("a snapshot-mode timedSessions checkpoint restarts exactly under changelog checkpointing") {
+    // the path a checkpoint written without the Graft.session default
+    // takes: run 1 with changelog checkpointing off, run 2 with it on
+    sessionRestart("graft-tws-restart-tog",
+      confRun1 = Map(ChangelogKey -> "false"),
+      confRun2 = Map(ChangelogKey -> "true"))
+  }
+
+  private val ChangelogKey =
+    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
+
+  /** One stop/restart of `timedSessions` (gap 5s, delay 10s) on a file
+    * source with a parquet sink; `confRun1`/`confRun2` are the session
+    * confs of the run before and after the restart. Every pre-stop ts is
+    * at most 24s, so the watermark at the stop is 14s:
+    *  - u1's events at 10s and 12s form a fragment whose close (17s) is
+    *    past that watermark, so it is open at the stop. A straggler at
+    *    16.5s after the restart (admitted: > 14s) is within gap of it and
+    *    must extend it, so the `fragments` state came back.
+    *  - u2's one event at 24s arms a timer at 29s and gets no event after
+    *    the restart, so only the recovered timer can close it. It must
+    *    emit exactly once, after the restart.
+    *  - u9 advances the watermark; its first session (1s) closes before
+    *    the stop, which shows the pre-stop sink is readable and held no
+    *    u1 or u2 row.
+    */
+  private def sessionRestart(dirPrefix: String,
+      confRun1: Map[String, String] = Map.empty,
+      confRun2: Map[String, String] = Map.empty): Unit = {
+    import StatefulOps.{SessionSummary, TimedEvent}
+    val in = newDir(s"$dirPrefix-in")
+    val ckpt = newDir(s"$dirPrefix-ckpt")
+    val out = newDir(s"$dirPrefix-out")
+    def put(rows: String*): Unit = {
+      val f = java.nio.file.Files.createTempFile(
+        java.nio.file.Paths.get(in), "part", ".json")
+      java.nio.file.Files.writeString(f, rows.mkString("\n") + "\n")
+      ()
+    }
+    def js(uid: Long, ms: Long, id: Long) =
+      s"""{"tsMs":$ms,"userId":$uid,"eventId":$id,"cents":1}"""
+    def src = spark.readStream
+      .schema("tsMs bigint, userId bigint, eventId bigint, cents bigint")
+      .json(in)
+      .selectExpr("timestamp_millis(tsMs) as ts", "userId", "eventId", "cents")
+      .as[TimedEvent]
+    def startQuery() = withRocksDBProvider {
+      StatefulOps.timedSessions(src.withWatermark("ts", "10 seconds"), gapMs = 5000L)
+        .writeStream.outputMode(OutputMode.Append).format("parquet")
+        .option("path", out).option("checkpointLocation", ckpt)
+        .start()
+    }
+    def emitted() = spark.read.parquet(out).as[SessionSummary].collect().toSeq
+    // a streaming query reads these confs when it starts
+    withConf(confRun1.toSeq: _*) {
+      val q1 = startQuery()
+      put(js(1L, 10000, 0), js(1L, 12000, 1), js(2L, 24000, 10),
+        js(9L, 1000, 90), js(9L, 24000, 91))
+      q1.processAllAvailable()
+      put(js(9L, 23000, 92)) // a batch in which u9's 6s timer fires
+      q1.processAllAvailable()
+      q1.stop()
+    }
+    val before = emitted()
+    assert(before == Seq(SessionSummary(9L, 1000L, 1000L, 1L, 1L)),
+      s"before the restart only u9's first session may have closed: $before")
+    withConf(confRun2.toSeq: _*) {
+      val q2 = startQuery()
+      put(js(1L, 16500, 2), js(9L, 40000, 93))
+      q2.processAllAvailable()
+      put(js(9L, 60000, 94)) // wm 50s: both sessions are past their close
+      q2.processAllAvailable()
+      put(js(9L, 70000, 95)) // backstop advance for any re-armed timer
+      q2.processAllAvailable()
+      q2.stop()
+    }
+    val rows = emitted().filter(_.userId <= 2L).sortBy(_.userId)
+    assert(rows == Seq(
+      SessionSummary(1L, 10000L, 16500L, 3L, 3L),
+      SessionSummary(2L, 24000L, 24000L, 1L, 1L)),
+      s"restart lost timedSessions fragments or timers: $rows")
+    // the restarted run committed in the mode it was given
+    val changelogs = {
+      val files = java.nio.file.Files.walk(java.nio.file.Paths.get(ckpt))
+      try files.filter(_.toString.endsWith(".changelog")).count()
+      finally files.close()
+    }
+    assert((changelogs > 0) == confRun2.get(ChangelogKey).contains("true"),
+      s"$changelogs changelog files under the checkpoint for $confRun2")
+  }
 }
